@@ -21,7 +21,6 @@ from las_vpe_platform_spark.operators.dedup import (  # noqa: F401
     exact_dedup,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
-    prefix_filter_join,
     prefix_filter_pairs,
 )
 from las_vpe_platform_spark.operators.staging import (  # noqa: F401

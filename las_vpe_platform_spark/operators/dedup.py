@@ -438,25 +438,20 @@ def ngram_jaccard_pairs(
     text_col: str,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
     materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing >= 1 shingle.
 
     explode distinct shingles -> self-join on shingle -> count shared
-    -> |A ∪ B| = |A| + |B| - shared -> filter >= threshold.
+    -> |A ∪ B| = |A| + |B| - shared -> filter >= threshold on the
+    exact ratio.
 
     The pair space is generated only from co-occurring shingles, so
     cost is sum over shingles of (docs-per-shingle choose 2) — the
     inverted-index bound, not n². Hot shingles (stopword runs) are the
-    skew risk: ``max_doc_freq`` drops shingles appearing in more than
-    that many documents from the JOIN side only (the standard posting-
-    list cutoff). Denominators still count every shingle, so jaccard
-    never over-counts — a pruned pair can only lose `shared` mass,
-    i.e. pruning is recall-lossy, never precision-lossy. At 10^11 docs
-    a cutoff around 10^4 bounds the hottest posting list's pair mass
-    at C(10^4, 2) ≈ 5×10^7 instead of C(df, 2) on an unbounded df.
-    Default None = exact (the oracle-checked configuration).
+    skew risk; at a threshold t > 0, :func:`prefix_filter_pairs` is the
+    lossless fix (rarest-first prefixes move the hot shingles out of
+    the join). Returns (id_a, id_b, size_a, size_b, shared, jaccard).
     """
     # the posting list is referenced by the size counts AND both sides
     # of the self-join — materialize once so the shingle explode+md5
@@ -465,36 +460,15 @@ def ngram_jaccard_pairs(
     exploded = materialize(
         exploded_shingles(df, id_col, text_col, shingle_k), "ngram_postings"
     )
-    sizes = exploded.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("n_shingles"))
-    joinable = exploded
-    if max_doc_freq is not None:
-        hot = (
-            exploded.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("shingle")
-        )
-        # broadcast anti-join: the hot set is tiny by construction
-        joinable = exploded.join(F.broadcast(hot), on="shingle", how="left_anti")
+    sizes = exploded.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
-        joinable.alias("l").hint("shuffle_hash")
-        .join(joinable.alias("r").hint("shuffle_hash"), on="shingle")
+        exploded.alias("l").hint("shuffle_hash")
+        .join(exploded.alias("r").hint("shuffle_hash"), on="shingle")
         .filter(F.col("l.doc_id_") < F.col("r.doc_id_"))
         .groupBy(F.col("l.doc_id_").alias("id_a"), F.col("r.doc_id_").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    with_sizes = (
-        pairs.join(sizes.withColumnRenamed("doc_id_", "id_a").withColumnRenamed("n_shingles", "size_a"), on="id_a")
-        .join(sizes.withColumnRenamed("doc_id_", "id_b").withColumnRenamed("n_shingles", "size_b"), on="id_b")
-    )
-    from las_vpe_platform_spark.compat import pround
-
-    jaccard = F.col("shared").cast("double") / (
-        F.col("size_a") + F.col("size_b") - F.col("shared")
-    ).cast("double")
-    return with_sizes.withColumn("jaccard", pround(jaccard, 6)).filter(
-        F.col("jaccard") >= threshold
-    )
+    return _jaccard_tail(pairs, sizes, sizes, threshold)
 
 
 def embedding_neardup_pairs(
@@ -799,18 +773,68 @@ def eval_overlap_flags(
 
 
 def _ceil_slack(x):
-    """EPSILON-SLACKED ceil shared by BOTH prefix-filter joins
-    (self-join and R x S): t arrives as a float, and a double ceil can
-    land ONE ABOVE the exact rational bound (e.g. t=0.2, |a|+|b|=18:
-    ceil(18*0.2/1.2) = 4 in float64, exactly 3) — which would shrink a
-    prefix / tighten a prune and silently drop a qualifying pair.
-    ceil(x - 1e-9) can only err DOWNWARD, which only ever ADMITS more
-    candidates; the verify stage restores exactness, so completeness
-    survives any float rounding. Any change here affects q106 AND
-    q107 — both are brute-force-tested at float-hostile thresholds
-    (tests/test_dedup_ops.py, tests/test_properties.py).
+    """EPSILON-SLACKED ceil for every prefix-filter bound: t arrives as
+    a float, and a double ceil can land ONE ABOVE the exact rational
+    bound (e.g. t=0.2, |a|+|b|=18: ceil(18*0.2/1.2) = 4 in float64,
+    exactly 3) — which would shrink a prefix / tighten a prune and
+    silently drop a qualifying pair. ceil(x - 1e-9) can only err
+    DOWNWARD, which only ever ADMITS more candidates; the verify stage
+    restores exactness, so completeness survives any float rounding.
+    Any change here affects q106, q107 and q128 — brute-force-tested at
+    float-hostile thresholds (tests/test_dedup_ops.py,
+    tests/test_properties.py).
     """
     return F.ceil(x - F.lit(1e-9))
+
+
+def _jaccard_tail(
+    shared: DataFrame, sizes_a: DataFrame, sizes_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, shared) + per-doc set sizes -> the exact Jaccard
+    ratio, filtered >= threshold: the shared tail of every set-Jaccard
+    join. Returns (id_a, id_b, size_a, size_b, shared, jaccard)."""
+    return (
+        shared.join(sizes_a.selectExpr("doc_id_ AS id_a", "sz AS size_a"), on="id_a")
+        .join(sizes_b.selectExpr("doc_id_ AS id_b", "sz AS size_b"), on="id_b")
+        .withColumn(
+            "jaccard",
+            F.col("shared").cast("double")
+            / (F.col("size_a") + F.col("size_b") - F.col("shared")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "size_a", "size_b", "shared", "jaccard")
+    )
+
+
+def _candidate_verify(
+    prefix_a: DataFrame,
+    prefix_b: DataFrame,
+    prune,
+    postings_a: DataFrame,
+    postings_b: DataFrame,
+    *verify,
+) -> DataFrame:
+    """The candidate and verify stage shared by the exact prefix-filter
+    joins: prefix-to-prefix equi-join on shingle (sides aliased ``l``
+    and ``r`` for ``prune``) -> distinct (id_a, id_b) -> join the FULL
+    postings of both sides on (doc, shingle) -> the caller's ``verify``
+    aggregates per pair. Candidate mass is bounded by the prefixes,
+    verify work by candidates x shared shingles — no corpus x corpus
+    product anywhere. Each postings frame carries doc_id_, shingle and
+    whatever per-posting columns its verify aggregates read."""
+    cand = (
+        prefix_a.alias("l")
+        .join(prefix_b.alias("r"), on="shingle")
+        .filter(prune)
+        .select(F.col("l.doc_id_").alias("id_a"), F.col("r.doc_id_").alias("id_b"))
+        .distinct()
+    )
+    return (
+        cand.join(postings_a.withColumnRenamed("doc_id_", "id_a"), on="id_a")
+        .join(postings_b.withColumnRenamed("doc_id_", "id_b"), on=["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(*verify)
+    )
 
 
 def prefix_filter_pairs(
@@ -819,14 +843,17 @@ def prefix_filter_pairs(
     text_col: str,
     threshold: float,
     shingle_k: int = 2,
+    right: DataFrame | None = None,
     materialize: Materializer = persist_disk,
     exploded: DataFrame | None = None,
 ) -> DataFrame:
-    """EXACT Jaccard-threshold self-join via prefix filtering
-    (Chaudhuri et al. SSJoin / Bayardo et al. All-Pairs) — the LOSSLESS
-    counterpart of :func:`ngram_jaccard_pairs`'s ``max_doc_freq`` cap:
-    instead of dropping hot shingles (recall-lossy), index only each
-    document's PREFIX under a rarest-first global order.
+    """EXACT Jaccard-threshold join via prefix filtering (Chaudhuri et
+    al. SSJoin / Bayardo et al. All-Pairs): the self-join of ``df``, or
+    with ``right`` the R x S join of ``df`` against ``right`` (record
+    linkage: fuzzy decontamination, cross-corpus-version overlap). The
+    LOSSLESS answer to hot-shingle skew: instead of dropping hot
+    shingles, index only each document's PREFIX under a rarest-first
+    global order.
 
     Completeness theorem: J(a,b) >= t implies |a∩b| >= ceil(t·|a|)
     (from i/(|a|+|b|−i) >= t and |b| >= i), so with elements sorted by
@@ -835,146 +862,45 @@ def prefix_filter_pairs(
     prefix-to-prefix therefore misses NO qualifying pair, while the
     posting lists shrink by factor ~(1−t) AND the rarest-first order
     moves exactly the hot shingles out of the indexed prefix — the
-    skew disappears instead of being capped.
+    skew disappears instead of being capped. Both sides' prefixes are
+    taken under ONE order counted over both posting sets (per-side
+    orders would break the guarantee: the pair's first common element
+    must be the same element on both sides).
 
     Candidates then verify against the FULL shingle sets (work bounded
-    by candidate count, not corpus²). Returns (id_a, id_b, size_a,
-    size_b, shared, jaccard) for pairs with jaccard >= threshold.
+    by candidate count, not corpus²), so the result is exact at any
+    float threshold. ``exploded`` is a caller-staged posting set for
+    ``df`` (shared across operators — see q128). Returns (id_a, id_b,
+    size_a, size_b, shared, jaccard) for pairs with jaccard >=
+    threshold; a self-join keeps id_a < id_b, an R x S join has id_a
+    from ``df`` and id_b from ``right``.
     """
-    ex = (
-        exploded  # caller-staged (shared across operators — see q128)
-        if exploded is not None
-        else materialize(
-            exploded_shingles(df, id_col, text_col, shingle_k),
-            "ppjoin_postings",
+
+    def side(frame: DataFrame, ex: DataFrame | None, tag: str):
+        if ex is None:
+            ex = materialize(
+                exploded_shingles(frame, id_col, text_col, shingle_k),
+                f"ppjoin_postings{tag}",
+            )
+        # sizes is referenced by the prefix build and the verify tail
+        # (twice for a self-join) — the multi-reference rule (SCALE.md)
+        sizes = materialize(
+            ex.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")),
+            f"ppjoin_sizes{tag}",
         )
-    )
-    # sizes is referenced three times (prefix filter + both verify-side
-    # joins) and prefix twice (both sides of the self-join) — the
-    # multi-reference materialization rule (SCALE.md) applies
-    sizes = materialize(
-        ex.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")), "ppjoin_sizes"
-    )
-    freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("_gf"))
+        return ex, sizes
+
+    ex_a, sizes_a = side(df, exploded, "")
+    if right is None:
+        ex_b, sizes_b = ex_a, sizes_a
+        shingles = ex_a.select("shingle")
+    else:
+        ex_b, sizes_b = side(right, None, "_r")
+        shingles = ex_a.select("shingle").unionAll(ex_b.select("shingle"))
+    freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_gf"))
     w = W.partitionBy("doc_id_").orderBy(F.asc("_gf"), F.asc("shingle"))
 
-    prefix = (
-        ex.join(freq, on="shingle")
-        .join(sizes, on="doc_id_")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            F.col("_rn")
-            <= F.col("sz") - _ceil_slack(F.lit(threshold) * F.col("sz")) + 1
-        )
-        .select("doc_id_", "shingle", "_rn", "sz")
-    )
-    prefix = materialize(prefix, "ppjoin_prefix")
-    # candidate join with PPJoin's two completeness-preserving prunes
-    # (both reject only pairs that PROVABLY cannot reach t, and both
-    # hold at the pair's FIRST common element, which the prefix join
-    # is guaranteed to see):
-    #  - length filter: J >= t forces t·|a| <= |b| <= |a|/t
-    #  - positional filter: overlap o satisfies o <= 1 + min(|a|-i,
-    #    |b|-j) at the first common element (the o-1 other common
-    #    elements all sit after it on both sides), and o >= alpha =
-    #    ceil(t/(1+t)·(|a|+|b|)); occurrences violating the bound
-    #    cannot be a qualifying pair's first common element.
-    # Without them a templated corpus generates quadratic candidates
-    # (measured 7.9M -> the qualifying ~256 at sf0.1).
-    l, r = prefix.alias("l"), prefix.alias("r")
-    alpha = _ceil_slack(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("l.sz") + F.col("r.sz")).cast("double")
-    )
-    ubound = 1 + F.least(
-        F.col("l.sz") - F.col("l._rn"), F.col("r.sz") - F.col("r._rn")
-    )
-    cand = (
-        l.join(r, on="shingle")
-        .filter(F.col("l.doc_id_") < F.col("r.doc_id_"))
-        .filter(
-            (F.col("r.sz") >= _ceil_slack(F.lit(threshold) * F.col("l.sz")))
-            & (F.col("l.sz") >= _ceil_slack(F.lit(threshold) * F.col("r.sz")))
-        )
-        .filter(ubound >= alpha)
-        .select(F.col("l.doc_id_").alias("id_a"), F.col("r.doc_id_").alias("id_b"))
-        .distinct()
-    )
-    # verify candidates against FULL sets
-    shared = (
-        cand.join(ex.selectExpr("doc_id_ AS id_a", "shingle"), on="id_a")
-        .join(ex.selectExpr("doc_id_ AS id_b", "shingle"), on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        shared.join(sizes.selectExpr("doc_id_ AS id_a", "sz AS size_a"), on="id_a")
-        .join(sizes.selectExpr("doc_id_ AS id_b", "sz AS size_b"), on="id_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-def prefix_filter_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    text_col: str,
-    threshold: float,
-    shingle_k: int = 2,
-    materialize: Materializer = persist_disk,
-) -> DataFrame:
-    """EXACT Jaccard-threshold join BETWEEN TWO TABLES (R x S) via
-    prefix filtering — :func:`prefix_filter_pairs` generalized from
-    the self-join to record linkage: fuzzy decontamination (corpus
-    docs near-duplicating any eval doc), cross-corpus-version overlap,
-    query-against-catalog matching.
-
-    Same completeness theorem as the self-join — J(r,s) >= t forces a
-    common element within the first |x| - ceil(t*|x|) + 1 positions of
-    EACH side under one shared global order — so the prefixes of both
-    sides are taken under a SINGLE rarest-first order computed from
-    the union of both posting sets (per-side orders would break the
-    guarantee: the pair's first common element must be the same
-    element on both sides). Length and positional prunes carry over
-    verbatim; candidates verify against the full shingle sets, so the
-    result is exact at any float threshold (epsilon-slacked ceils only
-    ever ADMIT more candidates).
-
-    At scale the right side is typically the small one (an eval set);
-    the asymmetric cost profile is the point — the left/corpus side
-    shuffles only its prefix tokens (factor ~(1-t) of its postings),
-    never the full text. Returns (left_id, right_id, size_l, size_r,
-    shared, jaccard) for pairs with jaccard >= threshold.
-    """
-    exl = materialize(
-        exploded_shingles(left, left_id, text_col, shingle_k), "ppj2_left"
-    )
-    exr = materialize(
-        exploded_shingles(right, right_id, text_col, shingle_k), "ppj2_right"
-    )
-    sizes_l = materialize(
-        exl.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")), "ppj2_sizes_l"
-    )
-    sizes_r = materialize(
-        exr.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")), "ppj2_sizes_r"
-    )
-    # ONE global order for both sides: frequency over the union
-    freq = materialize(
-        exl.select("shingle")
-        .unionAll(exr.select("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_gf")),
-        "ppj2_freq",
-    )
-
-
-    def build_prefix(ex: DataFrame, sizes: DataFrame, hint: str) -> DataFrame:
-        w = W.partitionBy("doc_id_").orderBy(F.asc("_gf"), F.asc("shingle"))
+    def prefix(ex: DataFrame, sizes: DataFrame, tag: str) -> DataFrame:
         return materialize(
             ex.join(freq, on="shingle")
             .join(sizes, on="doc_id_")
@@ -984,11 +910,22 @@ def prefix_filter_join(
                 <= F.col("sz") - _ceil_slack(F.lit(threshold) * F.col("sz")) + 1
             )
             .select("doc_id_", "shingle", "_rn", "sz"),
-            hint,
+            f"ppjoin_prefix{tag}",
         )
 
-    pl = build_prefix(exl, sizes_l, "ppj2_prefix_l").alias("l")
-    pr = build_prefix(exr, sizes_r, "ppj2_prefix_r").alias("r")
+    prefix_a = prefix(ex_a, sizes_a, "")
+    prefix_b = prefix_a if right is None else prefix(ex_b, sizes_b, "_r")
+    # PPJoin's two completeness-preserving prunes (both reject only
+    # pairs that PROVABLY cannot reach t, and both hold at the pair's
+    # FIRST common element, which the prefix join is guaranteed to see):
+    #  - length filter: J >= t forces t·|a| <= |b| <= |a|/t
+    #  - positional filter: overlap o satisfies o <= 1 + min(|a|-i,
+    #    |b|-j) at the first common element (the o-1 other common
+    #    elements all sit after it on both sides), and o >= alpha =
+    #    ceil(t/(1+t)·(|a|+|b|)); occurrences violating the bound
+    #    cannot be a qualifying pair's first common element.
+    # Without them a templated corpus generates quadratic candidates
+    # (measured 7.9M -> the qualifying ~256 at sf0.1).
     alpha = _ceil_slack(
         F.lit(threshold / (1.0 + threshold))
         * (F.col("l.sz") + F.col("r.sz")).cast("double")
@@ -996,42 +933,17 @@ def prefix_filter_join(
     ubound = 1 + F.least(
         F.col("l.sz") - F.col("l._rn"), F.col("r.sz") - F.col("r._rn")
     )
-    cand = (
-        pl.join(pr, on="shingle")
-        .filter(
-            (F.col("r.sz") >= _ceil_slack(F.lit(threshold) * F.col("l.sz")))
-            & (F.col("l.sz") >= _ceil_slack(F.lit(threshold) * F.col("r.sz")))
-        )
-        .filter(ubound >= alpha)
-        .select(
-            F.col("l.doc_id_").alias("_lid"), F.col("r.doc_id_").alias("_rid")
-        )
-        .distinct()
+    prune = (
+        (F.col("r.sz") >= _ceil_slack(F.lit(threshold) * F.col("l.sz")))
+        & (F.col("l.sz") >= _ceil_slack(F.lit(threshold) * F.col("r.sz")))
+        & (ubound >= alpha)
     )
-    shared = (
-        cand.join(exl.selectExpr("doc_id_ AS _lid", "shingle"), on="_lid")
-        .join(exr.selectExpr("doc_id_ AS _rid", "shingle"), on=["_rid", "shingle"])
-        .groupBy("_lid", "_rid")
-        .agg(F.count(F.lit(1)).alias("shared"))
+    if right is None:
+        prune = (F.col("l.doc_id_") < F.col("r.doc_id_")) & prune
+    shared = _candidate_verify(
+        prefix_a, prefix_b, prune, ex_a, ex_b, F.count(F.lit(1)).alias("shared")
     )
-    return (
-        shared.join(sizes_l.selectExpr("doc_id_ AS _lid", "sz AS size_l"), on="_lid")
-        .join(sizes_r.selectExpr("doc_id_ AS _rid", "sz AS size_r"), on="_rid")
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double")
-            / (F.col("size_l") + F.col("size_r") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("_lid").alias(left_id + "_l"),
-            F.col("_rid").alias(right_id + "_r"),
-            "size_l",
-            "size_r",
-            "shared",
-            "jaccard",
-        )
-    )
+    return _jaccard_tail(shared, sizes_a, sizes_b, threshold)
 
 
 def containment_pairs(
@@ -1039,7 +951,6 @@ def containment_pairs(
     id_col: str,
     text_col: str,
     materialize: Materializer = persist_disk,
-    one_token_inners: bool = True,
 ) -> DataFrame:
     """EXACT token-sequence containment join: every (inner, outer)
     pair where inner's whitespace-token sequence appears contiguously
@@ -1060,13 +971,6 @@ def containment_pairs(
     documents anchor on their token against a unigram index instead;
     the verify stage is a space-delimited substring check on
     whitespace-normalized text, bounded by candidates, never corpus².
-
-    The unigram index costs ONE extra token-split pass over the
-    corpus and exists solely to serve one-token inner documents; at
-    100 TB a caller that filters sub-bigram docs upstream (most
-    curation pipelines drop them long before dedup) passes
-    ``one_token_inners=False`` to skip that pass entirely —
-    completeness for all >= 2-token inners is unaffected.
 
     Returns (inner_id, outer_id, n_tok_inner, n_tok_outer,
     exact_equal) — both orientations appear for exactly-equal texts,
@@ -1096,26 +1000,20 @@ def containment_pairs(
     ).select("_iid", "_oid")
     # one-token docs have no bigram: anchor them on the token itself
     # against a unigram index (the index is corpus-sized but the probe
-    # side is only the one-token docs — typically a sliver)
-    cand = cand2
-    if one_token_inners:
-        # the unigram index reads the STAGED normalized text (split on
-        # the single space normalization guarantees) instead of paying
-        # a second raw-text scan + regex split
-        uni = (
-            norm.select(
-                "doc_id_", F.explode(F.split("_t", " ")).alias("shingle")
-            )
-            .dropDuplicates(["doc_id_", "shingle"])
-        )
-        one_tok = (
-            norm.filter(~F.col("_t").contains(" "))
-            .select(F.col("doc_id_").alias("_iid"), F.col("_t").alias("shingle"))
-        )
-        cand1 = one_tok.join(
-            uni.selectExpr("doc_id_ AS _oid", "shingle"), on="shingle"
-        ).select("_iid", "_oid")
-        cand = cand2.unionByName(cand1)
+    # side is only the one-token docs — typically a sliver). The index
+    # reads the STAGED normalized text (split on the single space
+    # normalization guarantees) instead of paying a second raw-text
+    # scan + regex split
+    uni = norm.select(
+        "doc_id_", F.explode(F.split("_t", " ")).alias("shingle")
+    ).dropDuplicates(["doc_id_", "shingle"])
+    one_tok = norm.filter(~F.col("_t").contains(" ")).select(
+        F.col("doc_id_").alias("_iid"), F.col("_t").alias("shingle")
+    )
+    cand1 = one_tok.join(
+        uni.selectExpr("doc_id_ AS _oid", "shingle"), on="shingle"
+    ).select("_iid", "_oid")
+    cand = cand2.unionByName(cand1)
     inner_n = norm.select(
         F.col("doc_id_").alias("_iid"),
         (F.size(F.split(F.col("_t"), " "))).alias("n_tok_inner"),
@@ -1158,8 +1056,7 @@ def edit_distance_pairs(
     The record-linkage primitive the token-set joins (PPJoin q106/q107)
     cannot express — typo-level similarity. Blocking is the length
     band |la - lb| <= threshold, a TRUE lower bound on edit distance
-    (completeness-preserving, unlike the recall-lossy doc-freq cap in
-    ngram_jaccard_pairs): realized as the d18/d21 banded bucket
+    (completeness-preserving): realized as the d18/d21 banded bucket
     equi-join — the canonical side explodes to the 3 adjacent
     width-(threshold+1) length buckets, the other side keeps its one
     bucket, so a qualifying pair lands in exactly one joined bucket
@@ -1276,24 +1173,15 @@ def weighted_cosine_pairs(
         .filter(F.col("_sb") >= F.lit(thr - 1e-9))
         .select("doc_id_", "shingle")
     )
-    cand = (
-        prefix.selectExpr("doc_id_ AS id_a", "shingle")
-        .join(prefix.selectExpr("doc_id_ AS id_b", "shingle"), on="shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
-    pa = base.selectExpr("doc_id_ AS id_a", "shingle", "w AS _wa", "na2 AS _na2")
-    pb = base.selectExpr("doc_id_ AS id_b", "shingle", "w AS _wb", "na2 AS _nb2")
-    dots = (
-        cand.join(pa, on="id_a")
-        .join(pb, on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum(F.col("_wa") * F.col("_wb")).alias("dot"),
-            F.min("_na2").alias("na2"),
-            F.min("_nb2").alias("nb2"),
-        )
+    dots = _candidate_verify(
+        prefix,
+        prefix,
+        F.col("l.doc_id_") < F.col("r.doc_id_"),
+        base.selectExpr("doc_id_", "shingle", "w AS _wa", "na2 AS _na2"),
+        base.selectExpr("doc_id_", "shingle", "w AS _wb", "na2 AS _nb2"),
+        F.sum(F.col("_wa") * F.col("_wb")).alias("dot"),
+        F.min("_na2").alias("na2"),
+        F.min("_nb2").alias("nb2"),
     )
     # BIGINT-overflow guard (review r6): the docstring's magnitude
     # bounds (~2e2 shingles/doc) were stated but unenforced — very long

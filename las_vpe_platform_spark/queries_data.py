@@ -316,7 +316,8 @@ def q26_ngram_jaccard_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, id_col="doc_id", text_col="text", shingle_k=JACCARD_K, threshold=0.0
     )
     return (
-        pairs.orderBy(F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))
+        pairs.withColumn("jaccard", pround("jaccard", 6))
+        .orderBy(F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))
         .limit(20)
         .select("id_a", "id_b", "shared", "size_a", "size_b", "jaccard")
     )
@@ -4140,10 +4141,11 @@ FROM per_type CROSS JOIN totals
 
 
 # --- q106: exact similarity join via prefix filtering -------------------------
-# The LOSSLESS answer to hot-shingle skew (q26's max_doc_freq cap is
-# recall-lossy): index only each doc's rarest-first PREFIX — the
-# completeness theorem (see operators/dedup.prefix_filter_pairs)
-# guarantees no qualifying pair is missed, and the oracle PROVES it by
+# The LOSSLESS answer to hot-shingle skew (q26's full inverted-index
+# join pays every hot posting list): index only each doc's
+# rarest-first PREFIX — the completeness theorem (see
+# operators/dedup.prefix_filter_pairs) guarantees no qualifying pair
+# is missed, and the oracle PROVES it by
 # computing the same threshold join exhaustively with the full
 # inverted index. 3-word shingles: the synthetic corpus has only ~900
 # distinct 2-shingles (tiny vocabulary), so k=2 posting lists carry
@@ -4203,29 +4205,29 @@ FROM j WHERE jaccard >= {PREFIX_JACCARD_T}
 # real leakage is often paraphrased-but-near-identical, which exact
 # n-grams miss. q107 is the lossless fuzzy version: an exact
 # Jaccard-threshold JOIN between corpus and eval via two-table prefix
-# filtering (operators/dedup.prefix_filter_join) — both sides' prefixes
-# under ONE rarest-first order computed from the union of posting
-# sets, length + positional prunes, candidates verified on full
-# shingle sets. The oracle proves exactness by running the threshold
-# join exhaustively on the full inverted index. Same k/t as q106 (the
+# filtering (operators/dedup.prefix_filter_pairs with ``right``) —
+# both sides' prefixes under ONE rarest-first order computed from the
+# union of posting sets, length + positional prunes, candidates
+# verified on full shingle sets. The oracle proves exactness by
+# running the threshold join exhaustively on the full inverted index. Same k/t as q106 (the
 # corpus vocabulary rationale there applies unchanged); the eval side
 # is the deterministic doc_id % 10 == 0 slice (q60's split).
 
 def q107_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import prefix_filter_join
+    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
 
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     ev = docs.filter(F.col("doc_id") % 10 == 0)
-    pairs = prefix_filter_join(
-        corpus, ev, left_id="doc_id", right_id="doc_id", text_col="text",
+    pairs = prefix_filter_pairs(
+        corpus, id_col="doc_id", text_col="text", right=ev,
         threshold=PREFIX_JACCARD_T, shingle_k=PREFIX_SHINGLE_K,
     )
     return pairs.select(
-        F.col("doc_id_l").alias("corpus_id"),
-        F.col("doc_id_r").alias("eval_id"),
-        F.col("size_l").cast("bigint").alias("size_corpus"),
-        F.col("size_r").cast("bigint").alias("size_eval"),
+        F.col("id_a").alias("corpus_id"),
+        F.col("id_b").alias("eval_id"),
+        F.col("size_a").cast("bigint").alias("size_corpus"),
+        F.col("size_b").cast("bigint").alias("size_eval"),
         F.col("shared").cast("bigint").alias("shared"),
         pround("jaccard", 6).alias("jaccard"),
     )
@@ -8017,7 +8019,7 @@ SELECT id_a, id_b, matches,
        floor(j6 * 10000.0 + 0.5) / 10000.0 AS exact_jaccard,
        floor(abs(matches / {float(h)} - j6) * 10000.0 + 0.5) / 10000.0 AS abs_err
 FROM (
-  -- j6 mirrors ngram_jaccard_pairs' 6-digit pround quantization: the
+  -- j6 mirrors the Spark side's 6-digit pround quantization: the
   -- abs-err's 4-digit rounding must see the SAME grid-snapped value
   SELECT e.id_a, e.id_b, e.matches,
          floor((coalesce(s.shared, 0)::DOUBLE

@@ -1,51 +1,14 @@
 """Dedup operator unit tests beyond the oracle-parity suite: the
-doc-frequency posting-list cutoff (skew mitigation) and winnowing's
-match guarantee."""
+exact set-similarity joins against brute force, winnowing's match
+guarantee, and the staging and overflow contracts of the join
+kernels."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from las_vpe_platform_spark.operators.dedup import (
-    ngram_jaccard_pairs,
-    winnow_fingerprints,
-)
-
-
-def _pairs(df):
-    return {
-        (r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()
-    }
-
-
-def test_jaccard_doc_freq_pruning_is_recall_lossy_only(spark):
-    # "common run x" appears in every doc (the hot shingle); each pair
-    # of docs 1/2 also shares a rare run
-    docs = spark.createDataFrame(
-        [
-            (1, "common run x alpha beta gamma rare one two"),
-            (2, "common run x alpha beta gamma rare one three"),
-            (3, "common run x totally different text here now"),
-        ],
-        "doc_id int, text string",
-    )
-    exact = _pairs(
-        ngram_jaccard_pairs(docs, "doc_id", "text", shingle_k=3, threshold=0.0)
-    )
-    pruned = _pairs(
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", shingle_k=3, threshold=0.0, max_doc_freq=2
-        )
-    )
-    # pruning can only drop pairs or lower jaccard — never add/raise
-    assert set(pruned) <= set(exact)
-    for pair, j in pruned.items():
-        assert j <= exact[pair]
-    # docs 1,2 still pair through their rare shared shingles
-    assert (1, 2) in pruned
-    # doc 3 shared ONLY the hot shingle with the others -> pruned away
-    assert (1, 3) not in pruned and (2, 3) not in pruned
-    assert (1, 3) in exact
+from las_vpe_platform_spark.operators.dedup import winnow_fingerprints
 
 
 def test_winnow_shares_fingerprint_on_long_match(spark):
@@ -106,8 +69,6 @@ def test_simhash_pairing_complete_vs_brute_force(spark):
     """The Manku block join finds EXACTLY the pairs brute force finds
     for hamming <= n_blocks - 1 (pigeonhole completeness), and refuses
     thresholds it cannot guarantee."""
-    import pytest
-
     from las_vpe_platform_spark.operators.dedup import (
         simhash_fingerprints,
         simhash_neardup_pairs,
@@ -179,10 +140,15 @@ def test_prefix_filter_complete_at_float_hostile_thresholds(spark):
     """The epsilon-slacked ceils must keep prefix filtering COMPLETE at
     thresholds where double ceil exceeds the exact rational bound
     (t=0.2, |a|+|b|=18 makes float alpha=4 vs exact 3 — review r3).
-    Brute-force exact Jaccard is the witness."""
+    The inverted-index join must filter on the EXACT ratio too: docs 5
+    and 6 sit at J = 1/3 exactly, which a 6-digit rounding before the
+    t = 1/3 filter drops. Brute-force exact Jaccard is the witness."""
     from itertools import combinations
 
-    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
+    from las_vpe_platform_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        prefix_filter_pairs,
+    )
 
     # 9-token docs sharing exactly 4 consecutive tokens -> with k=2
     # shingles: 8 shingles each, overlap 3, J = 3/13 ~ 0.23
@@ -191,15 +157,11 @@ def test_prefix_filter_complete_at_float_hostile_thresholds(spark):
         (2, "z y x w f g h i q"),   # shares f g, g h, h i
         (3, "m n o p q r s t u"),
         (4, "m n o p q r s t v"),   # near-clone of 3
+        (5, "k1 k2 k3 k4 k5"),
+        (6, "k0 k3 k4 k5 k6"),      # shares k3 k4, k4 k5: J = 2/6
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for t in (0.2, 0.22, 1.0 / 3.0, 0.5):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in prefix_filter_pairs(
-                df, "doc_id", "text", threshold=t, shingle_k=2
-            ).collect()
-        }
         # brute force
         def sh(s):
             toks = s.split()
@@ -210,7 +172,12 @@ def test_prefix_filter_complete_at_float_hostile_thresholds(spark):
             j = len(a & b) / len(a | b)
             if j >= t:
                 want.add((min(ia, ib), max(ia, ib)))
-        assert got == want, (t, got, want)
+        for out in (
+            prefix_filter_pairs(df, "doc_id", "text", threshold=t, shingle_k=2),
+            ngram_jaccard_pairs(df, "doc_id", "text", shingle_k=2, threshold=t),
+        ):
+            got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+            assert got == want, (t, got, want)
 
 
 def test_prefix_filter_join_matches_brute_force(spark):
@@ -218,7 +185,7 @@ def test_prefix_filter_join_matches_brute_force(spark):
     the R x S generalization must find exactly the brute-force pair
     set under the SHARED global order (per-side orders would break the
     first-common-element guarantee)."""
-    from las_vpe_platform_spark.operators.dedup import prefix_filter_join
+    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
 
     corpus = [
         (1, "a b c d e f g h i"),
@@ -239,10 +206,9 @@ def test_prefix_filter_join_matches_brute_force(spark):
 
     for t in (0.2, 0.22, 1.0 / 3.0, 0.5):
         got = {
-            (r["doc_id_l"], r["doc_id_r"])
-            for r in prefix_filter_join(
-                cdf, edf, "doc_id", "doc_id", "text",
-                threshold=t, shingle_k=2,
+            (r["id_a"], r["id_b"])
+            for r in prefix_filter_pairs(
+                cdf, "doc_id", "text", threshold=t, shingle_k=2, right=edf
             ).collect()
         }
         want = set()
@@ -289,28 +255,6 @@ def test_containment_pairs_matches_brute_force(spark):
     assert (2, 1, 0) in want and (3, 2, 1) in want and (2, 3, 1) in want
     assert (4, 1, 0) in want and (2, 5, 0) not in want
     assert got == want
-
-
-def test_containment_pairs_skip_one_token_inners(spark):
-    """one_token_inners=False drops exactly the 1-token inner rows and
-    nothing else — the knob that skips the unigram index pass when
-    sub-bigram docs were filtered upstream."""
-    from las_vpe_platform_spark.operators.dedup import containment_pairs
-
-    rows = [(1, "a b c d e"), (2, "b c d"), (4, "e"), (7, "c d e")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(df, "doc_id", "text").collect()
-    }
-    fast = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(
-            df, "doc_id", "text", one_token_inners=False
-        ).collect()
-    }
-    assert (4, 1) in full and (4, 7) in full
-    assert fast == {p for p in full if p[0] != 4}
 
 
 def test_weighted_cosine_pairs_matches_brute_force(spark):
@@ -366,3 +310,65 @@ def test_weighted_cosine_pairs_matches_brute_force(spark):
                 ):
                     want.add((a, b))
         assert got == want, (t_num, t_den, got, want)
+
+
+def test_staging_writer_drives_heavy_operator_end_to_end(spark, sf_dir, tmp_path):
+    """VERDICT r5 'Next round' #6: the cluster-grade parquet staging
+    materializer must hold its contract through a real multi-reference
+    operator, not just a roundtrip — run the exact PPJoin (q106's
+    operator, 3 staged subtrees: postings, sizes, prefix) through
+    staging_writer and demand bit-identical pairs vs persist_disk."""
+    import os
+
+    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
+    from las_vpe_platform_spark.operators.staging import (
+        persist_disk,
+        staging_writer,
+        unpersist_all,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    kw = dict(id_col="doc_id", text_col="text", threshold=0.6, shingle_k=2)
+
+    def rows(df):
+        return sorted(
+            (r["id_a"], r["id_b"], r["size_a"], r["size_b"], r["shared"])
+            for r in df.collect()
+        )
+
+    try:
+        baseline = rows(prefix_filter_pairs(docs, materialize=persist_disk, **kw))
+    finally:
+        unpersist_all()
+    staged_dir = str(tmp_path / "stage")
+    got = rows(
+        prefix_filter_pairs(docs, materialize=staging_writer(staged_dir), **kw)
+    )
+    assert got == baseline and len(got) > 0
+    # the staged subtrees really landed as parquet directories
+    staged = os.listdir(staged_dir)
+    assert any(d.startswith("ppjoin_postings_") for d in staged), staged
+    assert any(d.startswith("ppjoin_sizes_") for d in staged), staged
+
+
+def test_weighted_cosine_overflow_guard_raises(spark):
+    """Out-of-contract shingle mass (dot beyond the int64-safe bound)
+    must fail LOUDLY instead of ANSI-aborting or silently wrapping
+    (review r6). Two identical very long all-rare documents push dot
+    past isqrt((2^63-1)/t_den^2)."""
+    from las_vpe_platform_spark.operators.dedup import weighted_cosine_pairs
+    from las_vpe_platform_spark.operators.staging import unpersist_all
+
+    # shared shingles have df=2 => w = 500; need dot = n_sh * 500^2
+    # past dmax = isqrt((2^63-1)/25) ~ 6.07e8 => n_sh > 2430
+    text = " ".join(f"t{i}" for i in range(2502))
+    df = spark.createDataFrame(
+        [(1, text), (2, text)], "doc_id long, text string"
+    )
+    try:
+        with pytest.raises(Exception, match="would overflow int64"):
+            weighted_cosine_pairs(df, "doc_id", "text", 3, 5).collect()
+    finally:
+        unpersist_all()

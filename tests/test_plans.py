@@ -6,6 +6,7 @@ Guards against silent plan regressions when operators are refactored.
 
 from __future__ import annotations
 
+import pytest
 from conftest import outside_cached_plans
 
 from las_vpe_platform_spark.queries_relational import (
@@ -274,16 +275,26 @@ def test_q96_group_sample_partial_topk(spark, sf_dir):
 
 
 
-def test_q106_ppjoin_staged_postings_no_cartesian(spark, sf_dir):
-    # PPJoin's exactness must never come from a cartesian verify: the
-    # candidate join is an equi-join on the prefix shingle, and every
-    # reference to postings/sizes/prefix reads the STAGED frame — the
-    # shingle explode (Generate) runs only inside the staged builds,
-    # zero times in the consuming lineage (the r4 lesson: the slowest
-    # bench query must carry a plan audit trail)
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "q26_ngram_jaccard_top_pairs",
+        "q106_prefix_filter_join",
+        "q107_fuzzy_decontaminate",
+        "q133_weighted_allpairs_join",
+    ],
+)
+def test_set_join_staged_postings_no_cartesian(spark, sf_dir, entry):
+    # the exact set-similarity joins' one plan pin: exactness must
+    # never come from a cartesian verify — the candidate join is an
+    # equi-join on the (prefix) shingle, and every reference to
+    # postings/sizes/prefix reads the STAGED frame — the shingle
+    # explode (Generate) runs only inside the staged builds, zero
+    # times in the consuming lineage (the r4 lesson: the slowest bench
+    # query must carry a plan audit trail)
     from las_vpe_platform_spark.queries import CATALOG
 
-    plan = _plan(CATALOG["q106_prefix_filter_join"][0](spark, sf_dir))
+    plan = _plan(CATALOG[entry][0](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     outside = outside_cached_plans(plan)

@@ -258,11 +258,14 @@ def jaccard_corpus(draw):
 @given(case=jaccard_corpus())
 @slow
 def test_prefix_filter_join_property(spark, case):
-    """R x S PPJoin completeness/precision on random corpora from a
-    tiny vocabulary (maximally hot shingles — the prefix filter's
-    worst case) at thresholds including exact rationals: the result
-    must equal brute-force exact Jaccard, pair for pair."""
-    from las_vpe_platform_spark.operators.dedup import prefix_filter_join
+    """PPJoin completeness/precision on random corpora from a tiny
+    vocabulary (maximally hot shingles — the prefix filter's worst
+    case) at thresholds including exact rationals: the R x S join and
+    the self-join of the left corpus must each equal brute-force exact
+    Jaccard, pair for pair."""
+    from itertools import combinations
+
+    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
 
     left, right, t = case
     ldf = spark.createDataFrame(left, "doc_id long, text string")
@@ -272,22 +275,32 @@ def test_prefix_filter_join_property(spark, case):
         toks = s.split()
         return {" ".join(toks[i:i + 2]) for i in range(len(toks) - 1)}
 
-    got = {
-        (r["doc_id_l"], r["doc_id_r"]): r["jaccard"]
-        for r in prefix_filter_join(
-            ldf, rdf, "doc_id", "doc_id", "text", threshold=t, shingle_k=2
-        ).collect()
-    }
-    want = {}
-    for li, lt in left:
-        for ri, rt in right:
-            a, b = sh(lt), sh(rt)
+    def brute(pairs):
+        want = {}
+        for (ai, at), (bi, bt) in pairs:
+            a, b = sh(at), sh(bt)
             j = len(a & b) / len(a | b)
             if j >= t:
-                want[(li, ri)] = j
-    assert got.keys() == want.keys(), (t, got, want)
-    for k in got:
-        assert abs(got[k] - want[k]) < 1e-9
+                want[(ai, bi)] = j
+        return want
+
+    def check(out, want):
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        assert got.keys() == want.keys(), (t, got, want)
+        for k in got:
+            assert abs(got[k] - want[k]) < 1e-9
+
+    check(
+        prefix_filter_pairs(
+            ldf, "doc_id", "text", threshold=t, shingle_k=2, right=rdf
+        ),
+        brute((lt, rt) for lt in left for rt in right),
+    )
+    # left ids are ascending, so combinations yields id_a < id_b
+    check(
+        prefix_filter_pairs(ldf, "doc_id", "text", threshold=t, shingle_k=2),
+        brute(combinations(left, 2)),
+    )
 
 
 @st.composite

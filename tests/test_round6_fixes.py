@@ -95,47 +95,6 @@ def test_maintain_aggregate_zero_group_still_drops_under_error_mode(spark):
     assert got == {"a": (3, 13.0)}
 
 
-def test_staging_writer_drives_heavy_operator_end_to_end(spark, sf_dir, tmp_path):
-    """VERDICT r5 'Next round' #6: the cluster-grade parquet staging
-    materializer must hold its contract through a real multi-reference
-    operator, not just a roundtrip — run the exact PPJoin (q106's
-    operator, 3 staged subtrees: postings, sizes, prefix) through
-    staging_writer and demand bit-identical pairs vs persist_disk."""
-    import os
-
-    from las_vpe_platform_spark.operators.dedup import prefix_filter_pairs
-    from las_vpe_platform_spark.operators.staging import (
-        persist_disk,
-        staging_writer,
-        unpersist_all,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    kw = dict(id_col="doc_id", text_col="text", threshold=0.6, shingle_k=2)
-
-    def rows(df):
-        return sorted(
-            (r["id_a"], r["id_b"], r["size_a"], r["size_b"], r["shared"])
-            for r in df.collect()
-        )
-
-    try:
-        baseline = rows(prefix_filter_pairs(docs, materialize=persist_disk, **kw))
-    finally:
-        unpersist_all()
-    staged_dir = str(tmp_path / "stage")
-    got = rows(
-        prefix_filter_pairs(docs, materialize=staging_writer(staged_dir), **kw)
-    )
-    assert got == baseline and len(got) > 0
-    # the staged subtrees really landed as parquet directories
-    staged = os.listdir(staged_dir)
-    assert any(d.startswith("ppjoin_postings_") for d in staged), staged
-    assert any(d.startswith("ppjoin_sizes_") for d in staged), staged
-
-
 def test_s17_emission_rule_is_version_pinned(spark):
     """s17's and s20's oracles mirror Spark's OBSERVED outer-join
     eviction timing, not a spec (VERDICT r5 'What's wrong' #3; s20's
@@ -213,27 +172,6 @@ def test_q136_triplet_invariants(spark, sf_dir):
         assert len({a, p, n}) == 3, (a, p, n)
         assert (a, p) in sym, (a, p)
         assert (a, n) not in sym, (a, n)
-
-
-def test_weighted_cosine_overflow_guard_raises(spark):
-    """Out-of-contract shingle mass (dot beyond the int64-safe bound)
-    must fail LOUDLY instead of ANSI-aborting or silently wrapping
-    (review r6). Two identical very long all-rare documents push dot
-    past isqrt((2^63-1)/t_den^2)."""
-    from las_vpe_platform_spark.operators.dedup import weighted_cosine_pairs
-    from las_vpe_platform_spark.operators.staging import unpersist_all
-
-    # shared shingles have df=2 => w = 500; need dot = n_sh * 500^2
-    # past dmax = isqrt((2^63-1)/25) ~ 6.07e8 => n_sh > 2430
-    text = " ".join(f"t{i}" for i in range(2502))
-    df = spark.createDataFrame(
-        [(1, text), (2, text)], "doc_id long, text string"
-    )
-    try:
-        with pytest.raises(Exception, match="would overflow int64"):
-            weighted_cosine_pairs(df, "doc_id", "text", 3, 5).collect()
-    finally:
-        unpersist_all()
 
 
 def test_outer_stream_join_empty_side_withholds_unmatched(spark):

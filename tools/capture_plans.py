@@ -89,7 +89,7 @@ HEADLINERS = [
     ("m07_patch_neardup",
      "perceptual dedup: signature + content hash in the scan stage, then two cascaded aggregates — the verify stage is a (bucket, hash) groupBy, never a pair join"),
     ("q106_prefix_filter_join",
-     "EXACT PPJoin: postings/sizes/prefix are STAGED once (lazy persist); the candidate join is an equi-join on prefix shingles with length + positional prunes (7.9M -> 256 candidates measured at sf0.1); verify cost is bounded by candidates, zero cartesian anywhere (guarded by test_q106_ppjoin_staged_postings_no_cartesian)"),
+     "EXACT PPJoin: postings/sizes/prefix are STAGED once (lazy persist); the candidate join is an equi-join on prefix shingles with length + positional prunes (7.9M -> 256 candidates measured at sf0.1); verify cost is bounded by candidates, zero cartesian anywhere (guarded by test_set_join_staged_postings_no_cartesian)"),
     ("q55_dedup_clusters",
      "connected components over LSH pairs: min-label + path halving with "
      "per-round lazy localCheckpoint (the iterative-loop carve-out); the plan "
