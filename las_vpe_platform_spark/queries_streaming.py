@@ -1777,24 +1777,31 @@ S23_SQL = _s23_sql()
 # the gallery (PedestrianReIDUsingAttrApp.java:136-243). d14 gates the
 # DAG's batch semantics; s24 is the same DAG as ONE continuous
 # Structured Streaming query: file-landed video slices -> fake-tracker
-# mapInPandas UDTF -> two branches (per-tracklet row / exploded-sample
-# fake recognizer + windowed A1 wide-avg) -> stream-stream FULL OUTER
-# window join (the watermark re-expression of the leftover-window
-# flush, SparkStreamingApp.java:176-192) -> stateless broadcast-gallery
-# BLAS top-k -> append sink. Spark 4.x multi-stateful support makes
-# the two windowed aggregations + full-outer join legal in one query.
+# mapInPandas UDTF -> one outer box explode whose recognizer-answered
+# boxes fan out to the 125 fake-CNN names -> ONE windowed aggregate per
+# (hour window, tracklet) computing the tracklet row and its A1 average
+# together, its watermark eviction the re-expression of the
+# leftover-window flush (SparkStreamingApp.java:176-192) -> stateless
+# broadcast-gallery BLAS top-k -> append sink.
+# Both sides of the reference's join come from the same tracklet and so
+# share one (window, tracklet_key) key: one aggregate computes that full
+# outer join with the tracker run once per trigger, and commits one set
+# of state stores (4 at 4 partitions) where two aggregates and a
+# stream-stream join committed 24 (the join keeps 4 stores per
+# partition). s20 keeps the catalog's stream-stream FULL OUTER join.
 #
 # Emission rule (derived empirically batch-by-batch, riding the
 # S17_PINNED_SPARK_MINOR version pin): a tracklet emits iff its hour
 # window's end <= the final watermark = max observed start_ts minus
-# the {S24_WM_MINUTES}-minute delay; matched rows carry attributes +
-# k gallery ranks, tracklets the recognizer never answered for (the
-# ~10% drop -> the A side never produces their key) emit ONE row with
-# NULL n_samples/rank — the reference's "proceeds alone" tracklet.
+# the {S24_WM_MINUTES}-minute delay; tracklets with an answered sample
+# carry attributes + k gallery ranks, tracklets the recognizer never
+# answered for (the ~10% drop: no sample reaches the aggregate's
+# count) emit ONE row with NULL n_samples/rank — the reference's
+# "proceeds alone" tracklet.
 #
 # Scale shape: tracker/recognizer are stateless Arrow UDTFs (per-video
-# unit-of-work repartition); both aggregations and the join keep state
-# bounded by the watermark horizon x keys-per-hour; the gallery is the
+# unit-of-work repartition); the one aggregation keeps state bounded by
+# the watermark horizon x keys-per-hour; the gallery is the
 # broadcast-dim side (persons, not corpus); ranking is per-row BLAS
 # with no shuffle. The wide-avg runs in the exploded one-md5-expression
 # form (providers.fake_recognizer_sql_avg rationale) with the 125-attr
@@ -1844,11 +1851,11 @@ def s24_stream_track_attr_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ranked = s24_build_stream(spark, f"{src}/*")
     name = f"s24_out_{uuid.uuid4().hex[:8]}"
-    # 4 state partitions, not 8: this query has THREE stateful operators
-    # (two windowed aggs + the full-outer join), so per-trigger state
-    # commits are 3x every other streaming entry's; ~1.2k keys/trigger
-    # leave 4-way parallelism ample on the harness (a cluster deployment
-    # sizes this to key cardinality as usual)
+    # 4 state partitions, not 8: every store commit writes 4 files (the
+    # delta, its checksum sidecar and a .crc for each), a fixed cost
+    # per partition per trigger; ~1.2k keys/trigger leave 4-way
+    # parallelism ample on the harness (a cluster deployment sizes this
+    # to key cardinality as usual)
     with _stream_partitions(spark, 4):
         return run_to_completion(ranked, name, output_mode="append")
 
@@ -1869,11 +1876,11 @@ def s24_build_stream(spark: SparkSession, src_glob: str) -> DataFrame:
     )
     stream = (
         spark.readStream.schema(schema)
-        # all 4 slices in ONE data trigger (VERDICT r10 #4): with THREE
-        # stateful operators the per-trigger state-commit cost is the
-        # entry's dominant fixed cost (measured sf0.1 warm: 2 triggers
-        # ~12 s -> 1 trigger ~9 s); output is batching-invariant BY
-        # CONSTRUCTION — slices land in event-time order so no row is
+        # all 4 slices in ONE data trigger (VERDICT r10 #4): the
+        # per-trigger state-commit cost is the entry's dominant fixed
+        # cost (measured sf0.1 warm: 2 triggers ~12 s -> 1 trigger
+        # ~9 s); output is batching-invariant BY CONSTRUCTION —
+        # slices land in event-time order so no row is
         # ever late-dropped, and append emission is governed solely by
         # the FINAL watermark (the s23/s26 argument; oracle-proven).
         # The multi-trigger incremental path stays pytest-covered via
@@ -1890,67 +1897,43 @@ def s24_build_stream(spark: SparkSession, src_glob: str) -> DataFrame:
         "start_ts", f"{S24_WM_MINUTES} minutes"
     )
 
-    # branch T: one row per tracklet, keyed by its hour window
-    tw = tracked.groupBy(
-        F.window("start_ts", "1 hour").alias("w"), "tracklet_key"
-    ).agg(F.max(F.size("location_sequence")).cast("bigint").alias("n_boxes"))
-
-    # branch A: explode retained samples -> recognizer drop filter ->
-    # exploded fake-CNN (one md5 over 125x rows) -> windowed A1 average
-    samples = (
-        tracked.select(
-            "tracklet_key",
-            "start_ts",
-            F.posexplode("location_sequence").alias("sample_idx", "box"),
-        )
-        .filter(F.col("box.patch_data").isNotNull())
-        .select("tracklet_key", "start_ts", "sample_idx")
+    # ONE outer explode feeds the tracklet row AND its samples: an empty
+    # box sequence still yields a row, and a box the recognizer never
+    # answers for (NULL patch, dropped tracklet) yields one NULL _attr
+    # instead of the 125 exploded names of the fake-CNN md5
+    boxes = tracked.select(
+        "tracklet_key", "start_ts", F.size("location_sequence").alias("n_boxes"),
+        F.posexplode_outer("location_sequence").alias("sample_idx", "box"),
     )
-    samples = samples.filter(recognizer_drop_filter(samples))
+    answered = F.col("box.patch_data").isNotNull() & recognizer_drop_filter(boxes)
     names_sql = ", ".join(f"'{n}'" for n in ATTRIBUTE_NAMES)
-    per_name = samples.selectExpr(
-        "tracklet_key",
-        "start_ts",
-        "sample_idx",
-        f"explode(array({names_sql})) AS _attr",
-    ).selectExpr(
-        "tracklet_key",
-        "start_ts",
-        "_attr",
+    per_name = boxes.select(
+        "tracklet_key", "start_ts", "n_boxes", "sample_idx",
+        F.explode_outer(F.when(answered, F.expr(f"array({names_sql})"))).alias("_attr"),
+    ).withColumn("_h", F.expr(
         f"CAST(conv(substring(md5(concat_ws(':', '{SEED}', tracklet_key, "
-        f"CAST(sample_idx AS STRING), _attr)), 1, 8), 16, 10) AS BIGINT) AS _h",
-    )
-    aw = (
-        per_name.groupBy(
-            F.window("start_ts", "1 hour").alias("w"),
-            F.col("tracklet_key").alias("a_key"),
-        )
-        .agg(
-            (F.count(F.lit(1)) / len(ATTRIBUTE_NAMES)).cast("bigint").alias("n_samples"),
-            F.sum("_h").alias("attr_sig"),
-            F.avg(
-                F.when(
-                    F.col("_attr") == ATTRIBUTE_NAMES[0],
-                    F.col("_h") / F.lit(float(2**32)) - 0.5,
-                )
-            ).alias("_attr0"),
-        )
-    )
+        f"CAST(sample_idx AS STRING), _attr)), 1, 8), 16, 10) AS BIGINT)"
+    ))
 
-    joined = tw.join(
-        aw,
-        (tw["w"] == aw["w"]) & (tw["tracklet_key"] == aw["a_key"]),
-        "fullOuter",
-    ).select(
-        F.coalesce("tracklet_key", "a_key").alias("tracklet_key"),
-        "n_boxes",
-        "n_samples",
-        "attr_sig",
-        pround(F.col("_attr0"), 4).alias("attr0"),
+    # the ONE stateful operator: a tracklet with no answered sample
+    # aggregates to NULL n_samples/attr_sig/attr0 and proceeds alone;
+    # attr_sig sums answered rows only, since concat_ws skips a NULL
+    # _attr and so hashes an unanswered box too
+    n_names = F.count("_attr")
+    attr0 = F.when(
+        F.col("_attr") == ATTRIBUTE_NAMES[0], F.col("_h") / F.lit(float(2**32)) - 0.5
     )
+    tracklets = per_name.groupBy(F.window("start_ts", "1 hour"), "tracklet_key").agg(
+        F.max("n_boxes").cast("bigint").alias("n_boxes"),
+        F.when(n_names > 0, (n_names / len(ATTRIBUTE_NAMES)).cast("bigint")).alias(
+            "n_samples"
+        ),
+        F.sum(F.when(F.col("_attr").isNotNull(), F.col("_h"))).alias("attr_sig"),
+        pround(F.avg(attr0), 4).alias("attr0"),
+    ).drop("window")
 
     features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    assembled = joined.join(F.broadcast(features), "tracklet_key", "left").withColumn(
+    assembled = tracklets.join(F.broadcast(features), "tracklet_key", "left").withColumn(
         # unmatched tracklets rank nothing: NULL vector -> NULL-rank row
         "feature",
         F.when(F.col("n_samples").isNotNull(), F.col("feature")),

@@ -85,9 +85,10 @@ def inline_rows(spark: SparkSession, rows, ddl) -> DataFrame:
     ``ddl`` is a DDL string or a StructType. Values must be plain
     Python scalars (str/int/float/bool/None). The array-level cast
     (not per-field) reproduces createDataFrame's all-nullable schema
-    bit-for-bit. Intended for SMALL literal tables (the expression
-    tree is driver-built per row); callers with >~1k rows should land
-    parquet instead.
+    bit-for-bit. A row whose length differs from the schema's field
+    count raises ``ValueError``. Intended for SMALL literal tables (the
+    expression tree is driver-built per row); callers with >~1k rows
+    should land parquet instead.
     """
     schema = T.StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     one = spark.sql("SELECT 1")
@@ -95,6 +96,12 @@ def inline_rows(spark: SparkSession, rows, ddl) -> DataFrame:
         return one.select(
             F.inline(F.array().cast(T.ArrayType(schema)))
         )
+    for i, r in enumerate(rows):
+        if len(r) != len(schema.fields):
+            raise ValueError(
+                f"inline_rows: row {i} has {len(r)} values, "
+                f"schema has {len(schema.fields)} fields"
+            )
     structs = [
         F.struct(
             *[F.lit(v).alias(f.name) for v, f in zip(r, schema.fields)]

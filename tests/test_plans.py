@@ -771,23 +771,24 @@ def test_global_ranks_matches_row_number_and_string_keys(spark):
     assert got2 == want2
 
 
-def test_s24_stream_plan_has_three_stateful_operators(spark, sf_dir):
+def test_s24_stream_plan_has_one_stateful_aggregate(spark, sf_dir):
     # the flagship's analyzed plan must contain EXACTLY the designed
-    # state: two windowed aggregations + one stream-stream join, with
-    # the ranking mapInPandas stateless above them — a silent plan
-    # change (e.g. an extra dedup or a lost watermark) would alter
-    # state size and emission semantics
+    # state: one watermark and one windowed aggregation over one tracker
+    # pass, no stream-stream join (the one join is the stream-static
+    # broadcast feature lookup), with the ranking mapInPandas stateless
+    # above it — a silent plan change (a second branch, an extra dedup,
+    # a lost watermark) would multiply per-trigger state commits or
+    # alter emission semantics
     import tempfile
 
     from las_vpe_platform_spark.queries_streaming import s24_build_stream
 
     df = s24_build_stream(spark, tempfile.mkdtemp(prefix="s24_plan_"))
     plan = df._jdf.queryExecution().analyzed().toString()
-    assert plan.count("EventTimeWatermark") == 2, "both branches watermarked"
-    assert "Join FullOuter" in plan
-    assert "MapInPandas" in plan
-    agg_count = plan.count("Aggregate [window")
-    assert agg_count >= 2, f"expected 2 windowed aggregations, saw {agg_count}"
+    assert plan.count("EventTimeWatermark") == 1, plan
+    assert plan.count("Aggregate [window") == 1, plan
+    assert plan.count("Join ") == 1 and "Join LeftOuter" in plan, plan
+    assert plan.count("MapInPandas") == 2, "one tracker pass + the ranking"
 
 
 def test_s25_monitor_never_collects_gallery(spark, sf_dir):

@@ -83,3 +83,17 @@ def test_multi_format_ingest_round_trip(spark, sf_dir, tmp_path):
     base = {tuple(r) for r in ev.collect()}
     assert {tuple(r) for r in from_csv.collect()} == base
     assert {tuple(r) for r in from_json.collect()} == base
+
+
+def test_inline_rows_rejects_wrong_arity(spark):
+    """A literal row with too few or too many values fails loudly,
+    naming the row, instead of being truncated to the shorter side."""
+    import pytest
+
+    from las_vpe_platform_spark.sources.tables import inline_rows
+
+    ddl = "k string, v long"
+    with pytest.raises(ValueError, match="row 1 has 1 values"):
+        inline_rows(spark, [("a", 1), ("b",)], ddl)
+    with pytest.raises(ValueError, match="row 0 has 3 values"):
+        inline_rows(spark, [("a", 1, "extra")], ddl)

@@ -381,10 +381,12 @@ STREAMING_HEADLINERS = [
      "_full_outer_join_stream_plan"),
     ("s24_stream_track_attr_reid (unstarted streaming plan — the live flagship)",
      "the reference's track->attrrecog->reid DAG as ONE query: tracker "
-     "mapInPandas UDTF -> two windowed aggregations (per-tracklet row / "
-     "exploded 125-attr wide-avg) -> stream-stream FULL OUTER window join -> "
+     "mapInPandas UDTF (one pass) -> one outer box explode, recognizer-"
+     "answered boxes fanned out to the 125 fake-CNN names -> ONE windowed "
+     "aggregation per (hour, tracklet) computing the tracklet row and its "
+     "wide-avg (the tracklet/attribute full outer join on a shared key) -> "
      "stream-static gallery join -> stateless broadcast-gallery BLAS top-k; "
-     "three stateful operators, state bounded by watermark horizon x "
+     "one stateful operator, state bounded by watermark horizon x "
      "keys-per-hour",
      "_s24_stream_plan"),
     ("s25_stream_ann_recall (per-batch probe plan, r9 distributed rewrite)",

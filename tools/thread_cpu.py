@@ -16,8 +16,9 @@ Usage:
 
 --contend K forks K pure-python busy-loop processes for the duration
 (approximates the driver environment's 10-15% contention on a 32-core
-box with K~4-6). Their CPU is excluded from the attribution (they are
-children of this process but carry comm "python*-spin").
+box with K~4-6). Their CPU is excluded from the attribution by pid:
+they are forked children of this process, and every snapshot skips
+the pids recorded at fork time.
 """
 
 from __future__ import annotations
