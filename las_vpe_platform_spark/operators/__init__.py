@@ -24,10 +24,7 @@ from las_vpe_platform_spark.operators.dedup import (  # noqa: F401
     prefix_filter_pairs,
 )
 from las_vpe_platform_spark.operators.staging import (  # noqa: F401
-    Materializer,
-    passthrough,
     persist_disk,
-    staging_writer,
     unpersist_all,
 )
 from las_vpe_platform_spark.operators.joins import (  # noqa: F401

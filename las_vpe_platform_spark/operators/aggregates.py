@@ -14,7 +14,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 
 
 def wide_avg(df: DataFrame, group_cols: list[str], value_cols: Iterable[str]) -> DataFrame:
@@ -243,7 +243,6 @@ def cms_heavy_hitters(
     w: int = 128,
     k: int = 10,
     seed: str = "cms",
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Count-min sketch heavy hitters (Cormode & Muthukrishnan 2005):
     estimate per-key frequencies through a d x w counter matrix and
@@ -271,7 +270,7 @@ def cms_heavy_hitters(
     # materialization each broadcast filter re-runs the corpus-sized
     # build (d extra passes); the sketch is d*w rows, so staging it is
     # free (the streaming path materializes via its sink instead)
-    sketch = materialize(cms_sketch(hashed, d=d), "cms_sketch")
+    sketch = persist_disk(cms_sketch(hashed, d=d))
     return cms_estimate_topk(hashed, sketch, key_cols, d=d, k=k)
 
 

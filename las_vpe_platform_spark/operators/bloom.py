@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from las_vpe_platform_spark.functions.text import shingle_hash60
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 
 BITS_PER_BLOCK = 63  # shift range 0..62 keeps 1<<r positive in signed 64
 
@@ -65,7 +65,6 @@ def bloom_probe(
     m: int = 8192,
     k: int = 4,
     flag_col: str = "bloom_pass",
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Add ``flag_col``: true iff all k of the key's bits are set.
 
@@ -79,7 +78,7 @@ def bloom_probe(
     # otherwise re-execute the whole build subtree (dimension scan +
     # bit aggregate) — k times. The table is ceil(m/63) rows, so the
     # staging is pennies and the build runs exactly once.
-    blocks = materialize(blocks, "bloom_blocks")
+    blocks = persist_disk(blocks)
     out = fact
     hits = []
     for j in range(k):

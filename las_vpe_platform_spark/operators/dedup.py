@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 
 from pyspark.sql import Window as W
 
@@ -81,9 +81,10 @@ def shingle_stream(
     (doc, shingle) postings (PPJoin prefixes, containment, n-gram
     Jaccard, decontamination) must keep using
     :func:`exploded_shingles`: measured head-to-head
-    (tools/profile_shingle_variants.py), zip+dropDuplicates ties the
-    window form locally but shuffles k-gram strings instead of single
-    tokens — strictly more bytes for no fewer exchanges.
+    (tools/profile_shingle_variants.py, deleted after commit 1b1f44f),
+    zip+dropDuplicates ties the window form locally but shuffles k-gram
+    strings instead of single tokens — strictly more bytes for no fewer
+    exchanges.
 
     Token sequence is identical to :func:`exploded_shingles`'s
     (split on whitespace, empty tokens removed, order preserved), so
@@ -438,7 +439,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing >= 1 shingle.
 
@@ -457,9 +457,7 @@ def ngram_jaccard_pairs(
     # of the self-join — materialize once so the shingle explode+md5
     # runs a single time instead of up to four (persist-vs-recompute:
     # the explode is the expensive term for text)
-    exploded = materialize(
-        exploded_shingles(df, id_col, text_col, shingle_k), "ngram_postings"
-    )
+    exploded = persist_disk(exploded_shingles(df, id_col, text_col, shingle_k))
     sizes = exploded.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
         exploded.alias("l").hint("shuffle_hash")
@@ -844,7 +842,6 @@ def prefix_filter_pairs(
     threshold: float,
     shingle_k: int = 2,
     right: DataFrame | None = None,
-    materialize: Materializer = persist_disk,
     exploded: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT Jaccard-threshold join via prefix filtering (Chaudhuri et
@@ -876,32 +873,26 @@ def prefix_filter_pairs(
     from ``df`` and id_b from ``right``.
     """
 
-    def side(frame: DataFrame, ex: DataFrame | None, tag: str):
+    def side(frame: DataFrame, ex: DataFrame | None):
         if ex is None:
-            ex = materialize(
-                exploded_shingles(frame, id_col, text_col, shingle_k),
-                f"ppjoin_postings{tag}",
-            )
+            ex = persist_disk(exploded_shingles(frame, id_col, text_col, shingle_k))
         # sizes is referenced by the prefix build and the verify tail
         # (twice for a self-join) — the multi-reference rule (SCALE.md)
-        sizes = materialize(
-            ex.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")),
-            f"ppjoin_sizes{tag}",
-        )
+        sizes = persist_disk(ex.groupBy("doc_id_").agg(F.count(F.lit(1)).alias("sz")))
         return ex, sizes
 
-    ex_a, sizes_a = side(df, exploded, "")
+    ex_a, sizes_a = side(df, exploded)
     if right is None:
         ex_b, sizes_b = ex_a, sizes_a
         shingles = ex_a.select("shingle")
     else:
-        ex_b, sizes_b = side(right, None, "_r")
+        ex_b, sizes_b = side(right, None)
         shingles = ex_a.select("shingle").unionAll(ex_b.select("shingle"))
     freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_gf"))
     w = W.partitionBy("doc_id_").orderBy(F.asc("_gf"), F.asc("shingle"))
 
-    def prefix(ex: DataFrame, sizes: DataFrame, tag: str) -> DataFrame:
-        return materialize(
+    def prefix(ex: DataFrame, sizes: DataFrame) -> DataFrame:
+        return persist_disk(
             ex.join(freq, on="shingle")
             .join(sizes, on="doc_id_")
             .withColumn("_rn", F.row_number().over(w))
@@ -909,12 +900,11 @@ def prefix_filter_pairs(
                 F.col("_rn")
                 <= F.col("sz") - _ceil_slack(F.lit(threshold) * F.col("sz")) + 1
             )
-            .select("doc_id_", "shingle", "_rn", "sz"),
-            f"ppjoin_prefix{tag}",
+            .select("doc_id_", "shingle", "_rn", "sz")
         )
 
-    prefix_a = prefix(ex_a, sizes_a, "")
-    prefix_b = prefix_a if right is None else prefix(ex_b, sizes_b, "_r")
+    prefix_a = prefix(ex_a, sizes_a)
+    prefix_b = prefix_a if right is None else prefix(ex_b, sizes_b)
     # PPJoin's two completeness-preserving prunes (both reject only
     # pairs that PROVABLY cannot reach t, and both hold at the pair's
     # FIRST common element, which the prefix join is guaranteed to see):
@@ -950,7 +940,6 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """EXACT token-sequence containment join: every (inner, outer)
     pair where inner's whitespace-token sequence appears contiguously
@@ -976,18 +965,15 @@ def containment_pairs(
     exact_equal) — both orientations appear for exactly-equal texts,
     matching the symmetric truth.
     """
-    norm = materialize(
+    norm = persist_disk(
         df.select(
             F.col(id_col).alias("doc_id_"),
             F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ").alias("_t"),
-        ).filter(F.col("_t") != ""),
-        "containment_norm",
+        ).filter(F.col("_t") != "")
     )
     # bigram postings over ALL docs (potential outers); inner anchors
     # are one row per doc — its rarest bigram under (global df, value)
-    bi = materialize(
-        exploded_shingles(df, id_col, text_col, 2), "containment_bigrams"
-    )
+    bi = persist_disk(exploded_shingles(df, id_col, text_col, 2))
     bifreq = bi.withColumn("_df", F.count(F.lit(1)).over(W.partitionBy("shingle")))
     anchor_w = W.partitionBy("doc_id_").orderBy(F.asc("_df"), F.asc("shingle"))
     anchors2 = (
@@ -1100,8 +1086,6 @@ def weighted_cosine_pairs(
     t_num: int,
     t_den: int,
     shingle_k: int = 2,
-    materialize: Materializer = persist_disk,
-    exploded: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT weighted-cosine self-join via the All-Pairs prefix bound
     (Bayardo/Ma/Srikant, WWW'07) — the WEIGHTED member of the exact
@@ -1140,13 +1124,7 @@ def weighted_cosine_pairs(
     them exactly where df is hot); verify cost is candidates x shared
     shingles. No corpus x corpus product anywhere.
     """
-    ex = (
-        exploded
-        if exploded is not None
-        else materialize(
-            exploded_shingles(df, id_col, text_col, shingle_k), "wcos_postings"
-        )
-    )
+    ex = persist_disk(exploded_shingles(df, id_col, text_col, shingle_k))
     base = (
         ex.withColumn("_df", F.count(F.lit(1)).over(W.partitionBy("shingle")))
         .withColumn("w", F.expr("1000 div _df").cast("bigint"))
@@ -1161,7 +1139,7 @@ def weighted_cosine_pairs(
     )
     # base is referenced three times (prefix + both verify sides) —
     # the multi-reference materialization rule (SCALE.md)
-    base = materialize(base, "wcos_base")
+    base = persist_disk(base)
     thr = t_num / t_den
     ws = (
         W.partitionBy("doc_id_")

@@ -261,8 +261,8 @@ def _blocked_candidates(
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     spark = p.sparkSession
-    p = persist_disk(p, "blocked_probes")
-    g = persist_disk(g, "blocked_gallery")
+    p = persist_disk(p)
+    g = persist_disk(g)
     n_probes = p.count()
     n_gallery = g.count()
     if n_gallery == 0:

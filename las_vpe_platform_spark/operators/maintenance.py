@@ -209,21 +209,20 @@ def compact_upsert_table(
 
 
 def table_stats(spark: SparkSession, table_dir: str) -> DataFrame:
-    """File-level stats for deciding when to compact."""
-    rows = []
-    for root, _dirs, files in os.walk(table_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                rows.append((p, os.path.getsize(p)))
+    """File-level stats for deciding when to compact: one row of
+    (n_files, total_bytes, avg_bytes) over the parquet files under
+    ``table_dir``; total/avg are NULL when there are none."""
+    sizes = [
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(table_dir)
+        for f in files
+        if f.endswith(".parquet")
+    ]
     from las_vpe_platform_spark.sources.tables import inline_rows
 
+    row = (len(sizes), sum(sizes), sum(sizes) / len(sizes)) if sizes else (0, None, None)
     # zero-task LocalRelation, not a per-core Python RDD (r13, guide §4)
-    return inline_rows(spark, rows, "path string, bytes long").agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum("bytes").alias("total_bytes"),
-        F.avg("bytes").alias("avg_bytes"),
-    )
+    return inline_rows(spark, [row], "n_files long, total_bytes long, avg_bytes double")
 
 
 def zorder_layout(

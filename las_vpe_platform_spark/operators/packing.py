@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from las_vpe_platform_spark.functions.text import shingle_hash60
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 
 
 def dedup_spans(
@@ -92,7 +92,6 @@ def global_ranks(
     order_cols: list[str],
     rank_col: str = "rk",
     start: int = 0,
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Global ``row_number() OVER (ORDER BY order_cols) - 1 + start``
     as a DISTRIBUTED two-phase scan — :func:`pack_sequences`' prefix
@@ -113,7 +112,7 @@ def global_ranks(
     (one tiny row each) window-summed driver-sized and broadcast back
     as offsets.
 
-    The positioned frame is PINNED via ``materialize`` before the
+    The positioned frame is PINNED via ``persist_disk`` before the
     counts/offsets branch and the output branch fan out from it
     (ADVICE r8): without pinning, the two branches agree only because
     ReuseExchange dedupes the identical range exchange — a planner
@@ -154,7 +153,7 @@ def global_ranks(
             n += len(pdf)
             yield pdf
 
-    local = materialize(parted.mapInPandas(_local_pos, out_schema), "global_ranks_local")
+    local = persist_disk(parted.mapInPandas(_local_pos, out_schema))
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     offs = counts.select(
         "_pid",
@@ -178,7 +177,6 @@ def pack_sequences(
     n_tokens_col: str,
     order_seed: str = "pack",
     order_col: str | None = None,
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """Assign every document its exclusive prefix-sum of tokens in a
     deterministic global shuffle order (md5 of the id) — the
@@ -246,7 +244,7 @@ def pack_sequences(
     # pinned for the same two reasons as global_ranks: branch-boundary
     # consistency must not depend on ReuseExchange, and the sort +
     # Arrow prefix pass should run once across the totals/output fan-out
-    local = materialize(parted.mapInPandas(_local_prefix, out_schema), "pack_local")
+    local = persist_disk(parted.mapInPandas(_local_prefix, out_schema))
     totals = local.groupBy("_pid").agg(F.sum("n").alias("_tot"))
     offs = totals.select(
         "_pid",

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 
 
 def sample_array_even(arr: Column | str, n: int) -> Column:
@@ -146,7 +146,6 @@ def hashed_ngram_importance(
     buckets: int = 512,
     alpha: float = 1.0,
     seed: str = "dsir",
-    materialize: Materializer = persist_disk,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every pool
@@ -190,17 +189,15 @@ def hashed_ngram_importance(
     # each count table is <= buckets rows but referenced twice (its
     # total + the weight join) — materialize so the corpus-sized
     # bigram explodes run once per side, not per reference
-    t_counts = materialize(
+    t_counts = persist_disk(
         bigram_buckets(target).groupBy("bucket").agg(
             F.count(F.lit(1)).alias("t_b")
-        ),
-        "dsir_target_counts",
+        )
     )
-    p_counts = materialize(
+    p_counts = persist_disk(
         bigram_buckets(pool).groupBy("bucket").agg(
             F.count(F.lit(1)).alias("p_b")
-        ),
-        "dsir_pool_counts",
+        )
     )
     t_tot = t_counts.agg(F.sum("t_b").alias("t_tot"))
     p_tot = p_counts.agg(F.sum("p_b").alias("p_tot"))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from las_vpe_platform_spark.functions.vector import dot_product, l2_norm
-from las_vpe_platform_spark.operators.staging import Materializer, persist_disk
+from las_vpe_platform_spark.operators.staging import persist_disk
 from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
 
 # exact search is the same operator as the ReID ranking join
@@ -168,7 +168,6 @@ def ivf_topk(
     k: int = 5,
     num_centroids_mod: int = 50,
     nprobe: int = 2,
-    materialize: Materializer = persist_disk,
     probe_broadcast: bool = True,
 ) -> DataFrame:
     """Approximate per-probe top-k via IVF bucketing.
@@ -188,7 +187,7 @@ def ivf_topk(
     centroids = gallery.filter(
         (F.col(gallery_key) % num_centroids_mod) == 0
     ).select(F.col(gallery_key).alias("centroid_id"), F.col(vector_col))
-    crow = materialize(_centroid_fold(centroids, vector_col), "ivf_crow")
+    crow = persist_disk(_centroid_fold(centroids, vector_col))
 
     gal_assigned = _nearest_centroids(
         gallery.select(F.col(gallery_key), F.col(vector_col)),
@@ -557,7 +556,6 @@ def ivf2_topk(
     fine_mod: int = 20,
     coarse_mod: int = 80,
     nprobe: int = 2,
-    materialize: Materializer = persist_disk,
     probe_broadcast: bool = True,
 ) -> DataFrame:
     """Two-level IVF ANN (coarse quantizer over the fine centroids) —
@@ -585,30 +583,25 @@ def ivf2_topk(
     # several downstream joins (coarse by both descents + the fine
     # index; f2c broadcast twice) — materialize the centroid-sized
     # frames once (measured: 10 gallery scans -> 1 per level)
-    fine = materialize(
+    fine = persist_disk(
         gallery.filter((F.col(gallery_key) % fine_mod) == 0).select(
             F.col(gallery_key).alias("fid"), F.col(vector_col)
-        ),
-        "ivf2_fine",
+        )
     )
-    coarse = materialize(
+    coarse = persist_disk(
         gallery.filter((F.col(gallery_key) % coarse_mod) == 0).select(
             F.col(gallery_key).alias("centroid_id"), F.col(vector_col)
-        ),
-        "ivf2_coarse",
+        )
     )
     # the ONE-ROW coarse fold, shared by the level-1 index and both
     # descents (staged: three references, one aggregate)
-    coarse_crow = materialize(
-        _centroid_fold(coarse, vector_col), "ivf2_coarse_crow"
-    )
+    coarse_crow = persist_disk(_centroid_fold(coarse, vector_col))
     # level-1 index: fine centroid -> its nearest coarse cell
-    f2c = materialize(
+    f2c = persist_disk(
         _nearest_centroids(
             fine, None, id_col="fid", vector_col=vector_col, keep=1,
             crow=coarse_crow,
-        ).select("fid", "centroid_id"),
-        "ivf2_f2c",
+        ).select("fid", "centroid_id")
     )
     # per-coarse-cell fine slices, folded to ONE broadcast map row:
     # centroid_id -> sorted array of (fid, fvec, fnorm) structs. Same
@@ -875,7 +868,6 @@ def pq_topk(
     m: int = 8,
     n_codes: int = 16,
     k: int = 5,
-    materialize: Materializer = persist_disk,
     probe_broadcast: bool = True,
 ) -> DataFrame:
     """Product-quantization ANN (FAISS IVF-PQ's storage half): the
@@ -926,7 +918,7 @@ def pq_topk(
     # the one-row codebook is referenced by BOTH the gallery encode and
     # the probe ADC subtree — stage it (SCALE.md multi-reference rule)
     # or each side pays its own full-gallery TakeOrderedAndProject scan
-    cb = materialize(cb)
+    cb = persist_disk(cb)
 
     def dist2(vec, cvec, s):
         # squared L2 over subspace s (shared with ivfpq_topk)
@@ -1085,7 +1077,6 @@ def ivfpq_topk(
     k: int = 5,
     num_centroids_mod: int = 50,
     nprobe: int = 2,
-    materialize: Materializer = persist_disk,
     probe_broadcast: bool = True,
 ) -> DataFrame:
     """The full FAISS-architecture ANN: IVF coarse cells (q29's
@@ -1123,11 +1114,10 @@ def ivfpq_topk(
     """
     sub_d = dim // m
     # coarse quantizer — same multi-reference staging as ivf_topk
-    centroids = materialize(
+    centroids = persist_disk(
         gallery.filter((F.col(gallery_key) % num_centroids_mod) == 0).select(
             F.col(gallery_key).alias("centroid_id"), F.col(vector_col)
-        ),
-        "ivfpq_centroids",
+        )
     )
     cvecs = F.broadcast(
         centroids.select(
@@ -1138,11 +1128,11 @@ def ivfpq_topk(
 
     # the ONE-ROW centroid fold, shared by the gallery assignment and
     # the probe bucketing (staged: one aggregate, not one per call)
-    crow = materialize(_centroid_fold(centroids, vector_col), "ivfpq_crow")
+    crow = persist_disk(_centroid_fold(centroids, vector_col))
 
     # gallery -> nearest cell -> residual; referenced by BOTH the
     # codebook derivation and the encode pass, so stage it once
-    gal_resid = materialize(
+    gal_resid = persist_disk(
         _nearest_centroids(
             gallery.select(F.col(gallery_key), F.col(vector_col)),
             None,
@@ -1160,11 +1150,10 @@ def ivfpq_topk(
                 "_cvec",
                 lambda a, b: a - b,
             ).alias("_rvec"),
-        ),
-        "ivfpq_residuals",
+        )
     )
 
-    cb = materialize(
+    cb = persist_disk(
         gal_resid.orderBy("gallery_key")
         .limit(n_codes)
         .agg(
@@ -1172,8 +1161,7 @@ def ivfpq_topk(
                 F.collect_list(F.struct(F.col("gallery_key"), F.col("_rvec")))
             ).alias("_cb")
         )
-        .select(F.transform("_cb", lambda c: c["_rvec"]).alias("_cb")),
-        "ivfpq_codebook",
+        .select(F.transform("_cb", lambda c: c["_rvec"]).alias("_cb"))
     )
 
     g_codes = (

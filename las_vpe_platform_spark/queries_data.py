@@ -201,8 +201,9 @@ MINHASH_HASHES = 16
 MINHASH_BANDS = 4
 
 
-def q24_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+def _lsh_pairs(docs: DataFrame, exploded: DataFrame | None = None) -> DataFrame:
+    """The catalog's MinHash+LSH candidate pairs (id_a < id_b) over
+    ``documents``; ``exploded`` is a caller-staged shingle explode."""
     return minhash_lsh_candidates(
         docs,
         id_col="doc_id",
@@ -210,7 +211,13 @@ def q24_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_k=MINHASH_K,
         num_hashes=MINHASH_HASHES,
         bands=MINHASH_BANDS,
+        exploded=exploded,
     )
+
+
+def q24_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents")
+    return _lsh_pairs(docs)
 
 
 def _lsh_banded_cte_sql(shingle_k: int) -> str:
@@ -870,16 +877,10 @@ GROUP BY term ORDER BY freq DESC, term LIMIT 50
 
 
 def q55_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
+    from las_vpe_platform_spark.operators.dedup import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     comp = connected_components(pairs, src="id_a", dst="id_b", edges_canonical=True)
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -1057,14 +1058,10 @@ FROM winnowed
 
 
 def q57_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
     from las_vpe_platform_spark.operators.graph import pagerank_fixed_point
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     # LSH pairs are distinct with id_a < id_b, so the two union
     # branches are disjoint — no defensive distinct (a full shuffle
     # of the doubled edge list) needed
@@ -3111,16 +3108,10 @@ Q92_SQL = _q92_sql()
 
 
 def q93_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
+    from las_vpe_platform_spark.operators.dedup import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     comp = connected_components(pairs, src="id_a", dst="id_b", edges_canonical=True)
     sized = comp.join(
         docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
@@ -3177,18 +3168,13 @@ Q93_SQL = _q93_sql()
 
 
 def q94_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
-
     docs = _t(spark, sf_dir, "documents")
     # materialize the candidate pairs ONCE (connected_components'
     # rule): the tiny (a, b) list is referenced three times below —
     # degree counts, the oriented join, and the closing-edge probe —
     # and Catalyst would otherwise re-run the whole signature+LSH
     # subtree per reference (measured: 28 document scans -> 1)
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    ).select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).transform(_stage)
+    pairs = _stage(_lsh_pairs(docs).select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
 
     ends = pairs.select(F.explode(F.array("a", "b")).alias("node"))
     deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
@@ -4777,8 +4763,7 @@ def q119_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = persist_disk(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= MMR_N)
-        .select("probe_key", "gallery_key", "_gvec", "_gnorm", "rel"),
-        "mmr_candidates",
+        .select("probe_key", "gallery_key", "_gvec", "_gnorm", "rel")
     )
 
     def pairsim(vec_a, norm_a, vec_b, norm_b):
@@ -4929,14 +4914,10 @@ LPA_ROUNDS = 3
 
 
 def q120_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
     from las_vpe_platform_spark.operators.graph import label_propagation
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     labels = label_propagation(pairs, src="id_a", dst="id_b", rounds=LPA_ROUNDS)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -5339,8 +5320,7 @@ def q125_lagged_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("h").agg(
             F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("a"),
             F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("b"),
-        ),
-        "xcorr_counts",
+        )
     )
     bounds = counts.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
     spine = bounds.select(
@@ -5356,7 +5336,7 @@ def q125_lagged_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from las_vpe_platform_spark.operators.staging import persist_disk
 
-    dense = persist_disk(dense, "xcorr_dense")  # referenced per lag x 2
+    dense = persist_disk(dense)  # referenced per lag x 2
     lags = spark.range(XCORR_MAX_LAG + 1).select(F.col("id").alias("lag"))
     pairs = (
         dense.crossJoin(F.broadcast(lags))
@@ -5498,18 +5478,11 @@ NEG_K = 3
 
 
 def q127_negative_edge_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
     from las_vpe_platform_spark.operators.packing import global_ranks
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = persist_disk(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "neg_edges",
-    )
+    pairs = persist_disk(_lsh_pairs(docs).select("id_a", "id_b"))
     nodes = (  # both endpoints in one scan of the staged pairs (r12)
         pairs.select(F.explode(F.array("id_a", "id_b")).alias("node"))
         .distinct()
@@ -5520,7 +5493,7 @@ def q127_negative_edge_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist is load-bearing on TOP of the operator's internal pin
     # (measured r9: dropping it cost +1.4 s — three consumers re-run
     # the offs join and the partner join loses its known-size input)
-    ranked = persist_disk(global_ranks(nodes, ["node"]), "neg_ranks")
+    ranked = persist_disk(global_ranks(nodes, ["node"]))
     n_nodes = ranked.groupBy().agg(F.max("rk").alias("_max"))
     cand = (
         ranked.select("node")
@@ -5612,21 +5585,16 @@ LSH_RECALL_T = 0.5     # exact-side threshold
 
 def q128_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.dedup import (
-        minhash_lsh_candidates,
+        exploded_shingles,
         prefix_filter_pairs,
     )
-
-    from las_vpe_platform_spark.operators.dedup import exploded_shingles
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     docs = _t(spark, sf_dir, "documents")
     # BOTH sides consume the same (doc, shingle) explode — one staged
     # corpus text pass instead of two (multi-reference rule applied
     # ACROSS operators)
-    shingles = persist_disk(
-        exploded_shingles(docs, "doc_id", "text", LSH_RECALL_K),
-        "lsh_recall_shingles",
-    )
+    shingles = persist_disk(exploded_shingles(docs, "doc_id", "text", LSH_RECALL_K))
     exact = prefix_filter_pairs(
         docs, id_col="doc_id", text_col="text",
         threshold=LSH_RECALL_T, shingle_k=LSH_RECALL_K, exploded=shingles,
@@ -5719,9 +5687,7 @@ def q129_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the NEW batch's band entries — small, staged (probed twice:
     # against the stored index and against itself)
-    new_banded = persist_disk(
-        banded_signatures(docs.filter(is_new), **kw), "inc_lsh_new"
-    )
+    new_banded = persist_disk(banded_signatures(docs.filter(is_new), **kw))
     # the stored index: at scale a materialized (doc, band) table read
     # from storage (q67's stored-fingerprint pattern); derived in-plan
     # here so the oracle replays the split
@@ -6066,10 +6032,8 @@ def q151_cms_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     items = docs.select(F.explode(tokens("text")).alias("tok"))
-    hashed = _stage(
-        cms_bucketed(items, ["tok"], d=CMS_D, w=CMS_W), "q151_hashed"
-    )
-    sketch = _stage(cms_sketch(hashed, d=CMS_D), "q151_sketch")
+    hashed = _stage(cms_bucketed(items, ["tok"], d=CMS_D, w=CMS_W))
+    sketch = _stage(cms_sketch(hashed, d=CMS_D))
     exact = (
         hashed.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact"))
@@ -6293,17 +6257,11 @@ CSPLIT_TRAIN_FRAC = 0.8
 
 
 def q148_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
+    from las_vpe_platform_spark.operators.dedup import connected_components
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     comp = connected_components(pairs, src="id_a", dst="id_b", edges_canonical=True)
     u = (
         F.conv(
@@ -6327,8 +6285,7 @@ def q148_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "split",
             F.when(u < CSPLIT_TRAIN_FRAC, F.lit("train")).otherwise(F.lit("eval")),
-        ),
-        "q148_assigned",
+        )
     )
     leaks = (
         assigned.groupBy("entity")
@@ -6462,16 +6419,10 @@ Q147_SQL = _q147_sql()
 
 
 def q145_dedup_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
+    from las_vpe_platform_spark.operators.dedup import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     comp = connected_components(pairs, src="id_a", dst="id_b", edges_canonical=True)
     toks = docs.select(
         F.col("doc_id").alias("node"),
@@ -6703,23 +6654,13 @@ EVIDENCE_K = 3
 
 
 def q142_pair_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import (
-        exploded_shingles,
-        minhash_lsh_candidates,
-    )
+    from las_vpe_platform_spark.operators.dedup import exploded_shingles
 
     docs = _t(spark, sf_dir, "documents")
     # ONE staged shingle explode feeds BOTH the LSH pair generation
     # and the evidence postings (the q128 shared-subtree pattern)
-    ex = _stage(
-        exploded_shingles(docs, id_col="doc_id", text_col="text", k=MINHASH_K),
-        "q142_shingles",
-    )
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        exploded=ex,
-    ).select("id_a", "id_b")
+    ex = _stage(exploded_shingles(docs, id_col="doc_id", text_col="text", k=MINHASH_K))
+    pairs = _lsh_pairs(docs, exploded=ex).select("id_a", "id_b")
     # doc-frequency as a grouped aggregate over the STAGED postings,
     # attached to the pair-restricted evidence rows — NOT a window over
     # the full posting stream (r12: the window shuffled + sorted every
@@ -6804,10 +6745,7 @@ KEYNESS_TOPK = 5
 def q139_source_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens("text")).alias("tok"))
-    st = _stage(
-        tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("a")),
-        "q139_counts",
-    )
+    st = _stage(tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("a")))
     src_tot = st.groupBy("source").agg(F.sum("a").alias("ns"))
     term_tot = st.groupBy("tok").agg(F.sum("a").alias("t"))
     grand = st.agg(F.sum("a").alias("nn"))
@@ -6936,8 +6874,7 @@ def q140_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_sequences(ones, "doc_id", "_one", order_col="_gkey").select(
             F.col("_ord").alias("g_val"),
             (F.col("prefix") + F.lit(1)).alias("g_rank"),
-        ),
-        "q140_global_ranks",
+        )
     )
     n_tot = glob.agg(F.max("g_rank").alias("nn"))
     idx = (
@@ -7164,8 +7101,7 @@ def q137_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["s"],
             rank_col="nid",
             start=1,
-        ),
-        "q137_names",
+        )
     )
     pairs = edit_distance_pairs(names, string_col="s", threshold=LEV_T)
     ids = names.select("s", "nid")
@@ -7233,18 +7169,11 @@ TRIPLET_TRIES = 4
 
 
 def q136_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
     from las_vpe_platform_spark.operators.packing import global_ranks
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = persist_disk(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "trip_edges",
-    )
+    pairs = persist_disk(_lsh_pairs(docs).select("id_a", "id_b"))
     sym = pairs.unionByName(
         pairs.selectExpr("id_b AS id_a", "id_a AS id_b")
     )
@@ -7258,7 +7187,7 @@ def q136_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed node ranks — same two-phase scan as q127 (never an
     # unpartitioned row_number window over the node table); outer
     # persist kept deliberately on top of the internal pin (see q127)
-    ranked = persist_disk(global_ranks(nodes, ["node"]), "trip_ranks")
+    ranked = persist_disk(global_ranks(nodes, ["node"]))
     n_nodes = ranked.groupBy().agg(F.max("rk").alias("_max"))
     tries = (
         pos.crossJoin(F.broadcast(n_nodes))
@@ -7380,10 +7309,7 @@ def q135_sketch_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = ev.selectExpr("us div 86400000000 AS day", "user_id")
     b = hll_bucketed(days, "user_id", m=HLL_ROLLUP_M, keep_cols=["day"])
     # the stored partials table — referenced by BOTH output grains
-    daily = _stage(
-        b.groupBy("day", "_bucket").agg(F.max("_rho").alias("_r")),
-        "q135_daily_sketches",
-    )
+    daily = _stage(b.groupBy("day", "_bucket").agg(F.max("_rho").alias("_r")))
     day_est = hll_finish(daily, ["day"], m=HLL_ROLLUP_M).selectExpr(
         "'day' AS level", "day AS period", "hll_sum", "n_zero", "hll_est"
     )
@@ -7460,10 +7386,7 @@ def q134_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.graph import kcore_peel
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     return kcore_peel(pairs, src="id_a", dst="id_b", k=KCORE_K, rounds=KCORE_ROUNDS)
 
 
@@ -7567,7 +7490,7 @@ def q152_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # staged: the rank frame feeds BOTH the total count and the bucket
     # projection — the multi-reference materialization rule (SCALE.md)
-    ranked = _stage(global_ranks(docs, ["v", "doc_id"]), "q152_ranks")
+    ranked = _stage(global_ranks(docs, ["v", "doc_id"]))
     n = ranked.groupBy().agg(F.count(F.lit(1)).alias("_n"))
     return (
         ranked.crossJoin(F.broadcast(n))
@@ -7613,13 +7536,7 @@ FROM r GROUP BY 1
 
 def q153_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    pairs = _stage(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "assort_pairs",
-    )
+    pairs = _stage(_lsh_pairs(docs).select("id_a", "id_b"))
     from las_vpe_platform_spark.operators.graph import symmetrize_edges
 
     sym = symmetrize_edges(pairs, a="id_a", b="id_b")  # one scan (r12)
@@ -7690,13 +7607,7 @@ Q153_SQL = _q153_sql()
 
 def q154_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    pairs = _stage(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "supp_pairs",
-    )
+    pairs = _stage(_lsh_pairs(docs).select("id_a", "id_b"))
     from las_vpe_platform_spark.operators.graph import adjacency_support
 
     # adjacency_support emits one row per edge (0 when triangle-free),
@@ -7850,8 +7761,7 @@ def q156_layout_optimize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.min("n_chars").cast("bigint").alias("lo"),
             F.max("n_chars").cast("bigint").alias("hi"),
-        ),
-        "q156_file_summaries",
+        )
     )
     a, b = summaries.alias("a"), summaries.alias("b")
     overlaps = (
@@ -7914,22 +7824,12 @@ FROM s LEFT JOIN o ON o.file_id = s.file_id
 def q157_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.dedup import (
         exploded_shingles,
-        minhash_lsh_candidates,
         minhash_signatures,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    exploded = _stage(
-        exploded_shingles(docs, "doc_id", "text", MINHASH_K), "mh_err_postings"
-    )
-    cands = _stage(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-            exploded=exploded,
-        ).select("id_a", "id_b"),
-        "mh_err_cands",
-    )
+    exploded = _stage(exploded_shingles(docs, "doc_id", "text", MINHASH_K))
+    cands = _stage(_lsh_pairs(docs, exploded=exploded).select("id_a", "id_b"))
     sigs = minhash_signatures(
         docs, "doc_id", "text", MINHASH_K, MINHASH_HASHES, exploded=exploded
     )
@@ -8053,10 +7953,7 @@ def q158_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.graph import ktruss_peel
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     return ktruss_peel(
         pairs, src="id_a", dst="id_b", k=KTRUSS_K, rounds=KTRUSS_ROUNDS
     )
@@ -8103,13 +8000,9 @@ def q159_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("w") > 0)
     )
-    ranked = _stage(
-        global_ranks(docs, ["source", "v", "doc_id"]), "q159_ranks"
-    )
+    ranked = _stage(global_ranks(docs, ["source", "v", "doc_id"]))
     wpre = pack_sequences(ranked, "doc_id", "w", order_col="rk")
-    joined = _stage(
-        ranked.join(wpre.select("doc_id", "prefix"), "doc_id"), "q159_prefix"
-    )
+    joined = _stage(ranked.join(wpre.select("doc_id", "prefix"), "doc_id"))
     src = joined.groupBy("source").agg(
         F.sum("w").alias("_tot"), F.min("prefix").alias("_off")
     )
@@ -8161,13 +8054,7 @@ FROM c GROUP BY source
 
 def q160_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    pairs = _stage(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "q160_pairs",
-    )
+    pairs = _stage(_lsh_pairs(docs).select("id_a", "id_b"))
     from las_vpe_platform_spark.operators.graph import adjacency_support
 
     from las_vpe_platform_spark.operators.graph import symmetrize_edges
@@ -8388,10 +8275,7 @@ GROUP BY b.source
 
 def q165_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    ).select("id_a", "id_b")
+    pairs = _lsh_pairs(docs).select("id_a", "id_b")
     sm = docs.select("doc_id", "source")
     tagged = (
         pairs.join(sm.selectExpr("doc_id AS id_a", "source AS _sa"), "id_a")
@@ -8455,8 +8339,7 @@ def q162_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
             id_col="vec_id",
             vector_col="embedding",
-        ),
-        "q162_assigned",
+        )
     )
     occ = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -8467,12 +8350,9 @@ def q162_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         occ.withColumn("_orank", F.row_number().over(wocc))
         .crossJoin(F.broadcast(st))
         .filter(F.col("_orank") * Q162_SPLIT_DIV <= F.col("_nc") + Q162_SPLIT_DIV - 1)
-        .select("centroid_id", "n_members"),
-        "q162_split",
+        .select("centroid_id", "n_members")
     )
-    mem = _stage(
-        assigned.join(split.select("centroid_id"), "centroid_id"), "q162_members"
-    )
+    mem = _stage(assigned.join(split.select("centroid_id"), "centroid_id"))
     simc = mem.join(F.broadcast(cen), "centroid_id").withColumn(
         "_sim", cosine_similarity("embedding", "_cvec")
     )
@@ -8658,13 +8538,7 @@ FROM pref, tot GROUP BY 1
 
 def q167_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    pairs = _stage(
-        minhash_lsh_candidates(
-            docs, id_col="doc_id", text_col="text",
-            shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-        ).select("id_a", "id_b"),
-        "q167_pairs",
-    )
+    pairs = _stage(_lsh_pairs(docs).select("id_a", "id_b"))
     from las_vpe_platform_spark.operators.graph import symmetrize_edges
 
     sym = symmetrize_edges(pairs, a="id_a", b="id_b")  # one scan (r12)
@@ -8758,8 +8632,7 @@ def q168_novelty_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"least({NOVELTY_SLICES - 1},"
             f" (doc_id_ * {NOVELTY_SLICES}) div (_mx + 1)) AS slice",
             "shingle",
-        ),
-        "q168_shingles",
+        )
     )
     first = sh.groupBy("shingle").agg(F.min("slice").alias("_first"))
     per_slice = sh.groupBy("slice").agg(
@@ -8851,9 +8724,7 @@ def q169_term_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.functions.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _stage(
-        docs.select("doc_id", F.explode(tokens("text")).alias("term")), "q169_tok"
-    )
+    tok = _stage(docs.select("doc_id", F.explode(tokens("text")).alias("term")))
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("v")
     )
@@ -9108,8 +8979,7 @@ def q171_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
             id_col="vec_id",
             vector_col="embedding",
-        ),
-        "q171_assigned",
+        )
     )
     occ = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -9119,8 +8989,7 @@ def q171_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = _stage(
         occ.withColumn("_orank", F.row_number().over(wocc)).crossJoin(
             F.broadcast(st)
-        ),
-        "q171_ranked",
+        )
     )
     is_victim = (
         F.col("_orank") * Q171_MERGE_DIV <= F.col("_nc") + Q171_MERGE_DIV - 1
@@ -9238,8 +9107,7 @@ def q172_source_token_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             F.row_number().over(w).alias("_i"),
             F.sum("n_tokens").over(w).cast("bigint").alias("_prefix"),
-        ),
-        "q172_ranked",
+        )
     )
     tot = ranked.groupBy().agg(
         F.max("_i").alias("_s"), F.max("_prefix").alias("_total")
@@ -9440,8 +9308,7 @@ def q174_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
             id_col="vec_id",
             vector_col="embedding",
-        ),
-        "q174_assigned",
+        )
     )
     sims = assigned.join(F.broadcast(cen), "centroid_id").select(
         "centroid_id",
@@ -9557,8 +9424,7 @@ def q175_transition_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = _stage(
         transition_pairs(ev)
         .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab")),
-        "q175_counts",
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
     )
     return lift_from_counts(counts)
 
@@ -9992,22 +9858,17 @@ EDGE_COMPACT_BINS = 12
 
 
 def q180_edge_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import minhash_lsh_candidates
     from las_vpe_platform_spark.operators.packing import pack_sequences
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=MINHASH_K, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
-    )
+    pairs = _lsh_pairs(docs)
     parts = _stage(
         pairs.selectExpr(f"id_a % {EDGE_PARTS} AS part_id")
         .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_edges"),
             (F.count(F.lit(1)) * EDGE_ROW_BYTES).cast("bigint").alias("est_bytes"),
-        ),
-        "q180_parts",
+        )
     )
     tot = parts.groupBy().agg(
         ((F.sum("est_bytes") + EDGE_COMPACT_BINS - 1) / EDGE_COMPACT_BINS)

@@ -1296,8 +1296,7 @@ def d26_camera_feature_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims.groupBy("camera_id", "dim").agg(
             F.sum("v").alias("s"),
             F.count(F.lit(1)).alias("n"),
-        ),
-        "d26_camera_sums",
+        )
     )
     gsums = csums.groupBy("dim").agg(F.sum("s").alias("g"))
     joined = csums.join(gsums, "dim")
@@ -1998,9 +1997,7 @@ def m10_loudness_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wins is referenced by the clip totals AND the flag join — stage
     # it so the per-window hex-energy fold (the expensive stage) runs
     # once, not twice (the multi-reference materialization rule)
-    wins = persist_disk(
-        m08_audio_energy_windows(spark, sf_dir), "m10_windows"
-    )
+    wins = persist_disk(m08_audio_energy_windows(spark, sf_dir))
     tot = wins.groupBy("clip_id").agg(
         F.sum("energy").alias("tot_energy"),
         F.sum("n_in_window").alias("tot_n"),
@@ -2163,7 +2160,7 @@ def _stitch_candidates(spark: SparkSession) -> DataFrame:
     )
     # referenced by the band calibration AND the candidate filter —
     # stage once (review r5: the edge-tracklet join computed twice)
-    links = persist_disk(links, "d23_links")
+    links = persist_disk(links)
     bands = links.filter(F.col("sim") >= D23_SIM_HI).groupBy(
         "cam_from", "cam_to"
     ).agg(
@@ -2364,8 +2361,7 @@ def d24_journey_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = persist_disk(
         _stitch_candidates(spark).select(
             "cam_from", "cam_to", "key_from", "key_to", "transit_s", "similarity"
-        ),
-        "d24_stitch_candidates",
+        )
     )
     leg1 = cand.selectExpr(
         "cam_from AS cam_a", "cam_to AS cam_b",
@@ -2633,7 +2629,7 @@ FROM seg GROUP BY 1, 2
 def m16_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.staging import persist_disk
 
-    wins = persist_disk(m08_audio_energy_windows(spark, sf_dir), "m16_windows")
+    wins = persist_disk(m08_audio_energy_windows(spark, sf_dir))
     tot = wins.groupBy("clip_id").agg(
         F.sum("energy").alias("_te"),
         F.sum("n_in_window").alias("_tn"),
@@ -2710,7 +2706,7 @@ def m17_patch_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from las_vpe_platform_spark.operators.staging import persist_disk
 
-    hashed = persist_disk(patch_ahash(_fx(spark, "tracklets")), "m17_hashed")
+    hashed = persist_disk(patch_ahash(_fx(spark, "tracklets")))
     return ahash_candidate_pairs(hashed, M17_HAMMING_T)
 
 
@@ -2763,7 +2759,7 @@ def m18_patch_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from las_vpe_platform_spark.operators.staging import persist_disk
 
-    hashed = persist_disk(patch_ahash(_fx(spark, "tracklets")), "m18_hashed")
+    hashed = persist_disk(patch_ahash(_fx(spark, "tracklets")))
     pairs = ahash_candidate_pairs(hashed, M17_HAMMING_T).select("id_a", "id_b")
     comp = connected_components(pairs, src="id_a", dst="id_b", edges_canonical=True)
     # min-label CC already labels each component with its minimum node id,

@@ -1315,8 +1315,7 @@ def s18_stream_scd2_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tier",
             "valid_from_us",
             "valid_to_us",
-        ),
-        "s18_scd2_dim",
+        )
     )
 
     src = _landed_events8(spark, sf_dir, event_types=("click", "purchase"))
@@ -1405,8 +1404,7 @@ def s19_stream_lsh_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
               num_hashes=16, bands=4)
     stored_banded = persist_disk(
         banded_signatures(docs.filter(F.col("doc_id") % 3 == 0), **kw)
-        .selectExpr("doc_id_ AS id_stored", "band"),
-        "s19_stored_index",
+        .selectExpr("doc_id_ AS id_stored", "band")
     )
     out_dir = _scratch_dir("s19_pairs_")
 
@@ -1702,8 +1700,7 @@ def s23_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = persist_disk(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "text"
-        ),
-        "s23_landing",
+        )
     )
     src = _scratch_dir("s23_docs_")
     # land as SEQUENTIALLY-written, ZERO-PADDED doc_id-range slices
@@ -2735,16 +2732,12 @@ def s33_stream_patch_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = _scratch_dir("s33_tracklets_")
         tr.repartition(8).write.mode("overwrite").parquet(src)
         _LANDED[key] = src
-    stored_hashed = persist_disk(
-        patch_ahash(tr.filter(F.col("serial_number") % 3 == 0)),
-        "s33_stored_hashed",
-    )
+    stored_hashed = persist_disk(patch_ahash(tr.filter(F.col("serial_number") % 3 == 0)))
     stored_posts = persist_disk(
         stored_hashed.select(
             F.col("id").alias("id_stored"),
             F.posexplode("band_hash").alias("band_idx", "band_val"),
-        ),
-        "s33_stored_index",
+        )
     )
     out_dir = _scratch_dir("s33_alerts_")
     ham = (

@@ -85,6 +85,9 @@ def test_compact_parquet_table(spark, tmp_path):
     after = table_stats(spark, target).collect()[0]
     assert n_after == after["n_files"] < 32
     assert spark.read.parquet(target).count() == _fx(spark, "tracklets").count()
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert tuple(table_stats(spark, str(empty)).collect()[0]) == (0, None, None)
 
 
 def test_compaction_crash_recovery(spark, tmp_path):

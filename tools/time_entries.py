@@ -9,7 +9,8 @@ Usage:
                                [--cpus N] name [name ...]
 
 Prints one JSON line per entry: {"name", "walls": [...], "min",
-"steal": [...], "cpu_ow": [...]}. Plan capture happens once per entry
+"steal": [...], "cpu_ow": [...], "frames": [...]}, where "frames" is
+the number of staged frames ``unpersist_all()`` released per run. Plan capture happens once per entry
 (the plan does not change between runs) into
 plans/r12/<name>_<suffix>.txt when --plan-suffix is given.
 """
@@ -60,7 +61,7 @@ def main() -> None:
 
     for name in args.names:
         fn = CATALOG[name][0]
-        walls, steals, cows, jobs, iows, churns = [], [], [], [], [], []
+        walls, steals, cows, jobs, iows, churns, frames = [], [], [], [], [], [], []
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             n0 = len(tracker.getJobIdsForGroup(None) or [])
@@ -69,7 +70,7 @@ def main() -> None:
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            unpersist_all()
+            frames.append(unpersist_all())
             wall = time.perf_counter() - t0
             j1, c1 = bench._jiffies(), bench._tree_cpu_sec()
             g1 = bench._jvm_churn_ms(spark)
@@ -102,6 +103,7 @@ def main() -> None:
             "cpu_ow": cows,
             "jobs": jobs,
             "jvm_churn_ms": churns,
+            "frames": frames,
         }), flush=True)
 
 
