@@ -1,27 +1,33 @@
 #!/usr/bin/env python3
 """Benchmark harness: run the full query catalog at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": sf}.
+JSON line: {"metric": ..., "value": total_sec / n, "unit": "sec",
+"queries": {name: sec}, "sf": sf, ...}.
 
-Each query is forced end-to-end with a noop-format write (full plan
-execution, no driver-side collect), matching how a sink-terminated
-pipeline runs on a cluster.
+Each entry is measured by ``measure_entry``, the one per-entry window:
+plan build (``fn(spark, sf)``), a noop-format write (full plan
+execution, no driver-side collect, as a sink-terminated pipeline runs
+on a cluster) and ``unpersist_all()``, all inside the timed wall. The
+window yields one record per run with the keys
 
-Self-adjudicating telemetry (VERDICT r11 #2/#5): besides wall time the
-artifact records, per query, hypervisor CPU steal and disk iowait over
-the window and the CPU-seconds actually consumed by the whole
-local-mode Spark process tree (driver python + JVM + Arrow workers).
-A wall-time excursion with flat CPU is a descheduling pause (steal) or
-a disk-writeback stall (iowait), not a plan problem —
-steal% alone under-explained the round-11 multi-x inflations (10-16%
-steal removes ~1.2x of CPU; the observed spikes were 4-9x). r12 adds
-the third channel: JVM stop-the-world GC + JIT compilation time per
-window (run 5 showed entries inflating 2-3x with zero steal, zero
-iowait and HIGH cpu-over-wall — CPU genuinely burned on JVM churn,
-not the plan; those windows now carry their gc+jit delta). Every
-entry exceeding 2x its committed cross-run minimum is re-run once at
-end-of-bench and both numbers are reported, so the artifact
+    wall_s, build_s, write_s, cleanup_s, frames   the wall and its split
+    steal_pct, iowait_pct, cpu_over_wall          host noise
+    gc_s, jit_s                                   JVM overhead, kept apart
+    jobs, stages, tasks, task_run_s, task_cpu_s,  what the entry's jobs
+    shuffle_read_mb, shuffle_write_mb, spill_mb,  ran, summed over their
+    peak_mem_mb, input_mb, python_run_s           stages
+
+and every record of a run, re-measures included, goes to the sidecar
+``.bench/bench-sf<sf>-cpus<n>-<UTC time>.json``. The stdout line stays
+small (the driver keeps only its last ~2 KB): it carries the records'
+outliers and a ``layer_tail`` for the slowest entries.
+
+The host-noise record classifies a wall-time excursion from the
+artifact alone. Flat CPU with high steal is a descheduling pause, with
+high iowait a disk-writeback stall; high cpu-over-wall with a large
+gc+jit delta is JVM churn; high cpu-over-wall without one is the plan.
+Every entry exceeding 2x its committed cross-run minimum is re-run once
+at end-of-bench and both numbers are reported, so the artifact
 adjudicates its own outliers without hiding first-pass data.
 """
 
@@ -45,6 +51,10 @@ from las_vpe_platform_spark.session import get_spark  # noqa: E402
 # end-of-bench re-measure budget: enough to cover a noisy run's flag
 # set without letting a systemically slow day double the bench
 REMEASURE_MAX = 12
+# where each run's per-entry records go (tests point it elsewhere)
+SIDECAR_DIR = Path(_REPO) / ".bench"
+# the record fields the stdout line's layer_tail carries per entry
+LAYER_TAIL = ("build_s", "write_s", "cleanup_s", "gc_s", "jit_s", "task_cpu_s", "shuffle_write_mb")
 
 
 def _jiffies() -> tuple[int, int, int] | None:
@@ -141,12 +151,17 @@ def _jvm_churn_ms(spark) -> tuple[int, int] | None:
         return None
 
 
-def _committed_minima() -> dict[str, float]:
+def _committed_minima(sf, cpus: int) -> dict[str, float]:
     """Per-entry cross-run minimum wall times from the newest
     bench_runs_r*/cross_run_minima.json — the variance protocol's
     committed reference for 'how fast this entry runs on a quiet
     box'. Empty dict (no flagging, no re-measures) if absent or the
-    run is not at the committed scale (sf0.1)."""
+    run is not at the scale and core count the minima were committed
+    at (sf0.1 on 32 cores, BENCH_r12.json): a smoke run or a smaller
+    host would flag, and re-measure, entries that are merely slower
+    there."""
+    if (sf, cpus) != (0.1, 32):
+        return {}
     runs = sorted(glob.glob(f"{_REPO}/bench_runs_r*/cross_run_minima.json"))
     if not runs:
         return {}
@@ -158,112 +173,146 @@ def _committed_minima() -> dict[str, float]:
         return {}
 
 
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM and parquet footers with one tiny action, and the
+    Arrow/Python worker pool with one row per core, so every worker
+    forks now: otherwise the first mapInPandas entry is charged ~2 s of
+    one-time interpreter spin-up that a long-running cluster never
+    repays."""
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(cores).repartition(cores).mapInPandas(lambda it: it, "id long").count()
+
+
+def measure_entry(spark, name: str, sf_dir: str) -> tuple[dict, float]:
+    """Run catalog entry ``name`` once in the timed window and return
+    ``(record, read_s)``: the record described in the module docstring,
+    and the seconds its post-window stage read took, which a caller
+    keeps out of its own totals.
+
+    The window holds only ``perf_counter`` reads besides the entry's
+    own work; host noise and GC/JIT are sampled at its edges, and the
+    stage totals are read after it closes. The entry's jobs run under a
+    job group unique to this call, so a re-measure never merges with
+    the first run. A streaming entry runs its query to the end inside
+    ``fn()``, so its ``build_s`` holds the stream's run, and its
+    micro-batch jobs run under the query's own group: its stage totals
+    cover only the jobs the driver thread ran."""
+    from perfbench import probes
+
+    sc = spark.sparkContext
+    fn = CATALOG[name][0]
+    group = f"bench-{name}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, name)
+    try:
+        gc0, jit0 = probes.jvm_gc_jit_s(spark)
+        noise = probes.Noise()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        # release this entry's persist(DISK_ONLY) stages INSIDE its
+        # window — the caller-controlled unpersist half of the staging
+        # contract (operators/staging.py): a multi-hundred-entry
+        # session must not accrete blocks, and each entry pays its own
+        # cleanup
+        frames = unpersist_all()
+        t3 = time.perf_counter()
+        host = noise.report()
+        gc1, jit1 = probes.jvm_gc_jit_s(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    t_read = time.perf_counter()
+    jobs = probes.group_jobs(spark, group)
+    stages = probes.stage_metrics(spark, jobs)
+    read_s = time.perf_counter() - t_read
+    rec = {
+        "wall_s": t3 - t0,
+        "build_s": t1 - t0,
+        "write_s": t2 - t1,
+        "cleanup_s": t3 - t2,
+        "frames": frames,
+        "steal_pct": host.get("steal_pct"),
+        "iowait_pct": host.get("iowait_pct"),
+        "cpu_over_wall": host.get("cpu_over_wall"),
+        "gc_s": gc1 - gc0,
+        "jit_s": jit1 - jit0,
+        "jobs": len(jobs),
+        **stages,
+        "stages": int(stages["stages"]),
+        "tasks": int(stages["tasks"]),
+    }
+    return {k: round(v, 3) if isinstance(v, float) else v for k, v in rec.items()}, read_s
+
+
+def churn_ms(rec: dict) -> int:
+    """A record's GC + JIT milliseconds summed: the ``jvm_churn_ms``
+    figure the bench line has always carried."""
+    return round((rec["gc_s"] + rec["jit_s"]) * 1000)
+
+
+def _r2(v: float | None) -> float | None:
+    return None if v is None else round(v, 2)
+
+
+def _telemetry(rec: dict) -> dict:
+    """The classifying telemetry of one run, as the bench line's
+    ``flagged`` and ``remeasured`` entries carry it."""
+    return {
+        "wall": rec["wall_s"],
+        "steal": _r2(rec["steal_pct"]),
+        "cpu_ow": _r2(rec["cpu_over_wall"]),
+        "iowait": _r2(rec["iowait_pct"]),
+        "jvm_churn_ms": churn_ms(rec),
+    }
+
+
 def main() -> None:
+    from perfbench import probes
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)
     except ValueError:
         sf = sf_dir
-    # minima are committed at the official scale only — flagging a
-    # sf0.001 smoke run against sf0.1 minima would re-run everything
-    minima = _committed_minima() if sf == 0.1 else {}
 
     spark = get_spark("bench")
-    # warm the JVM + parquet footers with one tiny action
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    # warm the Arrow/Python worker pool too — otherwise the first
-    # mapInPandas query in the catalog is charged ~2 s of one-time
-    # interpreter spin-up that a long-running cluster never repays.
-    # One row per core so every worker in the pool forks now, not
-    # inside the first timed pandas-UDF query.
-    cores = spark.sparkContext.defaultParallelism
-    spark.range(cores).repartition(cores).mapInPandas(lambda it: it, "id long").count()
+    cpus = spark.sparkContext.defaultParallelism
+    minima = _committed_minima(sf, cpus)
+    warm_session(spark, sf_dir)
 
-    def run_once(
-        name: str,
-    ) -> tuple[float, float | None, float | None, float | None, int | None]:
-        """One timed end-to-end execution: (wall_sec, steal_pct,
-        cpu_over_wall, iowait_pct, jvm_churn_ms) — cleanup inside the
-        window, same as always."""
-        fn = CATALOG[name][0]
-        j0, c0, g0 = _jiffies(), _tree_cpu_sec(), _jvm_churn_ms(spark)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        # release this query's persist(DISK_ONLY) stages INSIDE its
-        # timing window — the caller-controlled unpersist half of the
-        # staging contract (operators/staging.py): a multi-hundred-
-        # query session must not accrete blocks, and each query pays
-        # its own cleanup
-        unpersist_all()
-        wall = time.perf_counter() - t0
-        j1, c1, g1 = _jiffies(), _tree_cpu_sec(), _jvm_churn_ms(spark)
-        st = (
-            round(100.0 * (j1[1] - j0[1]) / (j1[0] - j0[0]), 2)
-            if j0 and j1 and j1[0] > j0[0]
-            else None
-        )
-        # a worker process dying between samples can make the delta
-        # negative (its utime leaves the live tree before the parent
-        # reaps it into cutime) — that is a measurement race, not a
-        # ratio; report it as unmeasured rather than a nonsense value
-        cow = (
-            round((c1 - c0) / wall, 2)
-            if c0 is not None and c1 is not None and wall > 0 and c1 >= c0
-            else None
-        )
-        iow = (
-            round(100.0 * (j1[2] - j0[2]) / (j1[0] - j0[0]), 2)
-            if j0 and j1 and j1[0] > j0[0]
-            else None
-        )
-        churn = (
-            (g1[0] - g0[0]) + (g1[1] - g0[1])
-            if g0 is not None and g1 is not None
-            else None
-        )
-        return wall, st, cow, iow, churn
-
-    timings: dict[str, float] = {}
-    steal: dict[str, float] = {}
-    cpu_ow: dict[str, float] = {}
-    iowait: dict[str, float] = {}
-    jvm_churn: dict[str, int] = {}
-    j_all, g_all = _jiffies(), _jvm_churn_ms(spark)
+    runs: dict[str, list[dict]] = {}
+    read_s = 0.0
+    noise = probes.Noise()
+    gc0, jit0 = probes.jvm_gc_jit_s(spark)
     t_all = time.perf_counter()
     for name in sorted(CATALOG):
-        wall, st, cow, iow, churn = run_once(name)
-        timings[name] = round(wall, 3)
-        if st is not None:
-            steal[name] = st
-        if cow is not None:
-            cpu_ow[name] = cow
-        if iow is not None:
-            iowait[name] = iow
-        if churn is not None:
-            jvm_churn[name] = churn
-    total = round(time.perf_counter() - t_all, 3)
-    j_end, g_end = _jiffies(), _jvm_churn_ms(spark)
-    run_steal_pct = (
-        round(100.0 * (j_end[1] - j_all[1]) / (j_end[0] - j_all[0]), 2)
-        if j_all and j_end and j_end[0] > j_all[0]
-        else None
-    )
-    run_iowait_pct = (
-        round(100.0 * (j_end[2] - j_all[2]) / (j_end[0] - j_all[0]), 2)
-        if j_all and j_end and j_end[0] > j_all[0]
-        else None
-    )
-    # the per-entry steal record stays SMALL (the driver keeps only the
-    # line's tail): the 8 most contention-suspect entries — meaningful
-    # steal during a non-trivial query window
-    hot_steal = dict(
-        sorted(
-            ((n, s) for n, s in steal.items() if s >= 3.0 and timings[n] >= 1.0),
-            key=lambda kv: -kv[1],
-        )[:8]
-    )
+        rec, read = measure_entry(spark, name, sf_dir)
+        runs[name] = [rec]
+        read_s += read
+    # the post-window stage reads are telemetry, not the entries' cost:
+    # total_sec stays the figure earlier rounds recorded
+    total = round(time.perf_counter() - t_all - read_s, 3)
+    run_noise = noise.report()
+    gc1, jit1 = probes.jvm_gc_jit_s(spark)
+
+    first = {n: recs[0] for n, recs in runs.items()}
+    timings = {n: r["wall_s"] for n, r in first.items()}
+    tele = {n: _telemetry(r) for n, r in first.items()}
+
+    def hot(field: str, floor: float) -> dict:
+        """The 8 worst entries on one telemetry field among non-trivial
+        windows: the line's tail is all the driver keeps, so the
+        per-entry record stays small."""
+        vals = ((n, t[field]) for n, t in tele.items() if t[field] is not None)
+        return dict(
+            sorted(
+                ((n, v) for n, v in vals if v >= floor and timings[n] >= 1.0),
+                key=lambda kv: -kv[1],
+            )[:8]
+        )
 
     # --- self-adjudication (VERDICT r11 #2/#5) ---------------------------
     # flag every non-trivial entry exceeding 2x its committed cross-run
@@ -271,15 +320,7 @@ def main() -> None:
     # cpu_over_wall (wall advanced, CPU did not) = descheduling pause;
     # healthy cpu_over_wall = the plan really did the work
     flagged = {
-        n: {
-            "wall": timings[n],
-            "min": minima[n],
-            "x_min": round(timings[n] / minima[n], 1),
-            "steal": steal.get(n),
-            "cpu_ow": cpu_ow.get(n),
-            "iowait": iowait.get(n),
-            "jvm_churn_ms": jvm_churn.get(n),
-        }
+        n: {**tele[n], "min": minima[n], "x_min": round(timings[n] / minima[n], 1)}
         for n in timings
         if n in minima
         and minima[n] >= 0.5
@@ -290,18 +331,29 @@ def main() -> None:
     # IS the adjudicator (still >=2x min twice in one process = plan or
     # data; back under = a transient the first window happened to eat).
     # First-pass numbers are never replaced — both are reported.
-    remeasured: dict[str, dict[str, float | None]] = {}
+    remeasured: dict[str, dict] = {}
     for name in sorted(flagged, key=lambda n: -flagged[n]["x_min"])[:REMEASURE_MAX]:
-        wall, st, cow, iow, churn = run_once(name)
+        rec, read = measure_entry(spark, name, sf_dir)
+        runs[name].append(rec)
+        read_s += read
         remeasured[name] = {
-            "wall": round(wall, 3),
-            "steal": st,
-            "cpu_ow": cow,
-            "iowait": iow,
-            "jvm_churn_ms": churn,
-            "x_min": round(wall / minima[name], 1),
+            **_telemetry(rec),
+            "x_min": round(rec["wall_s"] / minima[name], 1),
         }
 
+    SIDECAR_DIR.mkdir(parents=True, exist_ok=True)
+    stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+    label = f"sf{sf}" if isinstance(sf, float) else Path(sf_dir).name
+    sidecar = SIDECAR_DIR / f"bench-{label}-cpus{cpus}-{stamp}.json"
+    sidecar.write_text(
+        json.dumps(
+            {"sf": sf, "cpus": cpus, "total_sec": total,
+             "stage_read_s": round(read_s, 3), "runs": runs},
+            indent=1,
+        )
+    )
+
+    slowest = sorted(timings, key=lambda n: -timings[n])
     # CHEAPEST first: the driver's BENCH_r{N}.json capture preserves
     # only the LAST ~2 KB of this line (VERDICT r6 'What's wrong' #3 —
     # rounds 5/6 shipped with the slow head truncated away), so the
@@ -323,53 +375,39 @@ def main() -> None:
                 # steal %, plus the entries that ran under the worst of
                 # it — a spiky entry with high steal_hot is environment,
                 # not plan (SCALE.md round-10 variance protocol)
-                "steal_run_pct": run_steal_pct,
-                "steal_hot": hot_steal,
-                # r12: disk-stall evidence next to the steal evidence —
-                # a collapsed cpu_over_wall with zero steal but high
+                "steal_run_pct": _r2(run_noise.get("steal_pct")),
+                "steal_hot": hot("steal", 3.0),
+                # disk-stall evidence next to the steal evidence — a
+                # collapsed cpu_over_wall with zero steal but high
                 # iowait is writeback/IO contention, not a VM pause
-                "iowait_run_pct": run_iowait_pct,
-                "iowait_hot": dict(
-                    sorted(
-                        (
-                            (n, w)
-                            for n, w in iowait.items()
-                            if w >= 3.0 and timings[n] >= 1.0
-                        ),
-                        key=lambda kv: -kv[1],
-                    )[:8]
-                ),
-                # r12 (post-run-5): JVM stop-the-world GC + JIT
-                # compilation time, whole-run and the 8 worst query
-                # windows — classifies the zero-steal zero-iowait
-                # high-cpu_ow excursion class (JVM churn, not plan)
-                "jvm_churn_run_ms": (
-                    (g_end[0] - g_all[0]) + (g_end[1] - g_all[1])
-                    if g_all is not None and g_end is not None
-                    else None
-                ),
-                "jvm_churn_hot": dict(
-                    sorted(
-                        (
-                            (n, ms)
-                            for n, ms in jvm_churn.items()
-                            if ms >= 500 and timings[n] >= 1.0
-                        ),
-                        key=lambda kv: -kv[1],
-                    )[:8]
-                ),
+                "iowait_run_pct": _r2(run_noise.get("iowait_pct")),
+                "iowait_hot": hot("iowait", 3.0),
+                # JVM stop-the-world GC + JIT compilation time, whole
+                # run and the 8 worst windows — classifies the
+                # zero-steal zero-iowait high-cpu_ow excursion class
+                # (JVM churn, not plan)
+                "jvm_churn_run_ms": round((gc1 - gc0 + jit1 - jit0) * 1000),
+                "jvm_churn_hot": hot("jvm_churn_ms", 500),
                 # cpu_over_wall for the 12 most expensive entries: the
                 # wall-vs-CPU ratio that separates a paused entry
                 # (collapsed ratio) from a genuinely slow plan
                 "cpu_ow_tail": {
-                    n: cpu_ow[n]
-                    for n in sorted(timings, key=lambda x: -timings[x])[:12]
-                    if n in cpu_ow
+                    n: tele[n]["cpu_ow"]
+                    for n in slowest[:12]
+                    if tele[n]["cpu_ow"] is not None
                 },
                 # >2x-committed-minimum entries with their classifying
                 # telemetry, then their end-of-bench second pass
                 "flagged": flagged,
                 "remeasured": remeasured,
+                "cpus": cpus,
+                "sidecar": str(sidecar),
+                # where the slowest entries' walls went; every entry's
+                # full record is in the sidecar
+                "layer_tail": {
+                    n: {k: round(first[n][k], 2) for k in LAYER_TAIL}
+                    for n in slowest[:5]
+                },
             }
         )
     )

@@ -1,7 +1,7 @@
 """Round-12 tests: trigger-consolidation invariance for the streaming
 slow tail (VERDICT r11 #3), the chunked ranking kernel's exact
-equivalence (ADVICE r11 memory fix), and the bench self-adjudication
-mechanics (VERDICT r11 #2/#5)."""
+equivalence (ADVICE r11 memory fix). The bench's own tests are in
+test_bench.py."""
 
 from __future__ import annotations
 
@@ -187,76 +187,6 @@ def test_topk_block_chunk_constant_is_bounded():
     assert PROBE_BROADCAST_MAX * TOPK_GALLERY_CHUNK_ROWS * 8 <= 200 * 1024**2
 
 
-# --- bench self-adjudication mechanics (VERDICT r11 #2/#5) --------------------
-
-
-def test_tree_cpu_sec_counts_own_work():
-    import time
-
-    import bench
-
-    c0 = bench._tree_cpu_sec()
-    assert c0 is not None and c0 >= 0
-    t0 = time.process_time()
-    x = 0
-    while time.process_time() - t0 < 0.3:  # burn ~0.3 s of CPU
-        x += 1
-    c1 = bench._tree_cpu_sec()
-    assert c1 - c0 >= 0.2  # jiffy resolution is 10 ms; own burn visible
-
-
-def test_bench_flags_and_remeasures(monkeypatch, capsys, spark):
-    """main() must flag an entry >= 2x its committed minimum, carry
-    steal/cpu_ow telemetry for it, and re-run it once — with the
-    first-pass number preserved."""
-    import bench
-
-    calls = {"n": 0}
-
-    def fast(spark_, sf_dir):
-        return spark_.range(5).select(F.col("id").alias("v"))
-
-    def slowish(spark_, sf_dir):
-        calls["n"] += 1
-        import time
-
-        time.sleep(2.2)
-        return spark_.range(3).select(F.col("id").alias("v"))
-
-    monkeypatch.setattr(
-        bench, "CATALOG", {"fastq": (fast, None), "slowq": (slowish, None)}
-    )
-    monkeypatch.setattr(
-        bench, "_committed_minima", lambda: {"fastq": 5.0, "slowq": 1.0}
-    )
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    bench.main()
-    out = capsys.readouterr().out.strip().splitlines()[-1]
-    import json
-
-    d = json.loads(out)
-    assert d["n_queries"] == 2
-    assert "slowq" in d["flagged"] and "fastq" not in d["flagged"]
-    fl = d["flagged"]["slowq"]
-    assert fl["min"] == 1.0 and fl["x_min"] >= 2.0
-    assert "cpu_ow" in fl and "steal" in fl and "iowait" in fl
-    assert "slowq" in d["remeasured"]
-    assert "iowait" in d["remeasured"]["slowq"]
-    assert "iowait_run_pct" in d and "iowait_hot" in d
-    assert calls["n"] == 2  # first pass + one re-measure
-    assert d["queries"]["slowq"] == fl["wall"]  # first pass preserved
-
-
-def test_jiffies_reports_iowait_component():
-    import bench
-
-    j = bench._jiffies()
-    assert j is not None and len(j) == 3
-    total, steal, iowait = j
-    assert 0 <= steal <= total and 0 <= iowait <= total
-
-
 def test_default_local_dir_env_and_fallbacks(monkeypatch):
     """SPARK_GRAFT_LOCAL_DIR wins; SPARK_LOCAL_DIRS defers to Spark's
     own env handling; otherwise a roomy /dev/shm is used and a missing
@@ -312,26 +242,6 @@ def test_stream_scratch_base_env_and_fallbacks(monkeypatch):
     picked = QS._scratch_base()
     if picked is not None:  # roomy /dev/shm on this host
         assert picked == "/dev/shm"
-
-
-def test_bench_no_flagging_off_committed_scale(monkeypatch, capsys, spark):
-    """Smoke runs at other SFs must not flag against sf0.1 minima."""
-    import bench
-
-    def slowish(spark_, sf_dir):
-        import time
-
-        time.sleep(2.1)
-        return spark_.range(3).select(F.col("id").alias("v"))
-
-    monkeypatch.setattr(bench, "CATALOG", {"slowq": (slowish, None)})
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    bench.main()
-    import json
-
-    d = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert d["flagged"] == {} and d["remeasured"] == {}
 
 
 # --- r12 second wave: s03 / s10 / s12 / s15 single-data-trigger ---------------
@@ -515,16 +425,3 @@ def test_default_signature_path_has_single_exchange_no_window(spark):
     assert plan.count("Exchange") == 1, plan  # the aggregate's own shuffle
     assert "Window" not in plan, plan
     assert "Sort" not in plan.replace("SortAggregate", ""), plan
-
-
-def test_jvm_churn_ms_monotone_and_present(spark):
-    import bench
-
-    g0 = bench._jvm_churn_ms(spark)
-    assert g0 is not None and len(g0) == 2
-    gc0, jit0 = g0
-    assert gc0 >= 0 and jit0 >= 0
-    # burn a little JVM work; counters must not go backwards
-    spark.range(2_000_000).selectExpr("sum(id * 3)").collect()
-    gc1, jit1 = bench._jvm_churn_ms(spark)
-    assert gc1 >= gc0 and jit1 >= jit0

@@ -2,16 +2,17 @@
 """Full-catalog Spark-vs-DuckDB parity sweep at an arbitrary scale —
 the out-of-band heavier twin of tests/test_oracle_parity.py (which
 runs at sf0.01, the driver's scale). Used for the per-round sf0.1
-final-tree sweep recorded in README.
+final-tree sweep recorded in README, and the quick check of a few
+named entries while working on them.
 
-Usage: python tools/parity_sweep.py [sf_dir]
-Prints one line per query and a final summary + JSON line.
+Usage: python tools/parity_sweep.py [sf_dir [name ...]]
+Checks every catalog entry, or only the named ones, and prints one line
+per entry and a final summary JSON line.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import sys
 import time
 from pathlib import Path
@@ -20,20 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 
-
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def nv(v):
-        if v is None:
-            return ("\x00null",)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("nan",)
-            return (repr(round(v, 9)),)
-        return (str(v),)
-
-    return sorted(tuple(nv(row[i]) for i in order) for row in rows)
+from tests.test_oracle_parity import _normalize  # noqa: E402
 
 
 def main() -> None:
@@ -51,7 +39,8 @@ def main() -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     ok, fail, skip = [], [], []
-    for name, (fn, sql) in CATALOG.items():
+    for name in sys.argv[2:] or CATALOG:
+        fn, sql = CATALOG[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)

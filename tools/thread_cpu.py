@@ -35,6 +35,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+import bench  # noqa: E402
 from las_vpe_platform_spark.operators.staging import unpersist_all  # noqa: E402
 
 
@@ -113,11 +114,7 @@ def main() -> None:
         from las_vpe_platform_spark.session import get_spark
 
         spark = get_spark("thread_cpu")
-        spark.read.parquet(f"{sf_dir}/region.parquet").count()
-        cores = spark.sparkContext.defaultParallelism
-        spark.range(cores).repartition(cores).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
+        bench.warm_session(spark, sf_dir)
         me = os.getpid()
 
         for name in args.names:
