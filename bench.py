@@ -54,7 +54,10 @@ REMEASURE_MAX = 12
 # where each run's per-entry records go (tests point it elsewhere)
 SIDECAR_DIR = Path(_REPO) / ".bench"
 # the record fields the stdout line's layer_tail carries per entry
-LAYER_TAIL = ("build_s", "write_s", "cleanup_s", "gc_s", "jit_s", "task_cpu_s", "shuffle_write_mb")
+LAYER_TAIL = (
+    "build_s", "write_s", "cleanup_s", "gc_s", "jit_s", "task_cpu_s", "shuffle_write_mb",
+    "python_run_s",
+)
 
 
 def _jiffies() -> tuple[int, int, int] | None:

@@ -4475,6 +4475,12 @@ def q114_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         m = np.zeros(d, dtype=np.float64)
         n = 0
         for pdf in batches:
+            for v in pdf["embedding"]:
+                if len(v) != d:
+                    raise ValueError(
+                        f"q114: an embedding has {len(v)} components, "
+                        f"PCA_DIM is {d}"
+                    )
             X = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
                 dtype=np.float64,
@@ -4494,8 +4500,13 @@ def q114_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    parts = emb.select("embedding").mapInPandas(
-        _gram, "i int, j int, s_ij double, m_j double, n long"
+    # a NULL embedding is no observation: it counts in neither the
+    # mean nor n (the oracle drops it too); a vector of the wrong
+    # length raises in _gram
+    parts = (
+        emb.select("embedding")
+        .where(F.col("embedding").isNotNull())
+        .mapInPandas(_gram, "i int, j int, s_ij double, m_j double, n long")
     )
     # ONE grouped merge of the constant-size per-partition partials:
     # S_ij (j >= i), plus sum(xj) per (i,j) whose i=0 slice spans ALL j
@@ -4576,6 +4587,7 @@ WITH e2 AS (
   FROM embeddings,
        unnest(generate_series(1, {PCA_DIM})) AS i(i),
        unnest(generate_series(1, {PCA_DIM})) AS j(j)
+  WHERE embedding IS NOT NULL
 ), s AS MATERIALIZED (
   SELECT i, j, sum(xi * xj) AS s_ij, sum(xj) AS m_j, count(*) AS n
   FROM e2 GROUP BY i, j

@@ -39,6 +39,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _BLAS_ENV_VARS = ("OPENBLAS_NUM_THREADS", "OPENBLAS64_NUM_THREADS",
                   "OMP_NUM_THREADS", "MKL_NUM_THREADS")
 
+# the directory holding this package: put on the Python workers' path
+# so they can import the worker daemon
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_memory() -> str:
     """Size the single-JVM local heap to the HOST, not to the harness
@@ -237,6 +241,14 @@ def get_spark(app_name: str = "las_vpe_platform_spark", cpus: int | None = None)
         # only bounds the per-task read
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
+        # every Python worker forks from worker_daemon, which stops
+        # zipimport re-reading pyspark.zip's directory at the start of
+        # each task (125-460 ms per task on a 4-core host; see that
+        # module). The daemon must be importable by the workers: this
+        # factory only builds local[N] masters, so the driver's source
+        # tree is the workers' tree, and its root goes on their path.
+        .config("spark.python.daemon.module", "las_vpe_platform_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
     _local_dir = _default_local_dir()
     if _local_dir:
@@ -253,7 +265,9 @@ def get_spark(app_name: str = "las_vpe_platform_spark", cpus: int | None = None)
     return spark
 
 
-_PYFILES_SENT: set[int] = set()
+# application ids, not id(sc): CPython reuses the id of a stopped,
+# collected context, and a restarted session must ship the zip again
+_PYFILES_SENT: set[str] = set()
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -262,25 +276,28 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     Any operator built on mapInPandas/pandas_udf pickles closures that
     reference this package by module name; workers spawned by a session
     that didn't pip-install the package (e.g. the external driver) can
-    only resolve it if the zip rides along. Idempotent per context.
+    only resolve it if the zip rides along. Idempotent per application;
+    each application writes its own zip, so concurrent processes never
+    rewrite one another's.
     """
+    import atexit
+    import shutil
     import tempfile
     import zipfile
     from pathlib import Path
 
     sc = spark.sparkContext
-    key = id(sc)
+    key = sc.applicationId
     if key in _PYFILES_SENT:
         return
     pkg_dir = Path(__file__).resolve().parent
-    zpath = Path(tempfile.gettempdir()) / "las_vpe_platform_spark_pyfiles.zip"
+    zdir = tempfile.mkdtemp(prefix=f"las_vpe_platform_spark-{key}-")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = Path(zdir) / "las_vpe_platform_spark_pyfiles.zip"
     with zipfile.ZipFile(zpath, "w") as z:
         for p in sorted(pkg_dir.rglob("*.py")):
             z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
-    try:
-        sc.addPyFile(str(zpath))
-    except Exception:
-        pass  # already added under this name — fine
+    sc.addPyFile(str(zpath))
     _PYFILES_SENT.add(key)
 
 

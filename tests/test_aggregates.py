@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from las_vpe_platform_spark.fixtures import FIXTURES_DIR
@@ -174,3 +176,38 @@ def test_hll_merge_of_partials_equals_direct_sketch(spark, sf_dir):
         .collect()
     )
     assert merged == direct and len(merged) > 0
+
+
+def test_q114_drops_null_embeddings_and_rejects_ragged(spark, sf_dir, tmp_path):
+    from las_vpe_platform_spark.queries_data import Q114_SQL, q114_pca_power
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE TABLE base AS SELECT * FROM '{sf_dir}/embeddings.parquet' "
+        "ORDER BY vec_id LIMIT 40"
+    )
+    dirs = {}
+    for name, extra in (
+        ("clean", ""),
+        ("null", "UNION ALL SELECT 9999, NULL::FLOAT[], 1"),
+        ("ragged", "UNION ALL SELECT 9999, [1.0, 2.0]::FLOAT[], 1"),
+    ):
+        dirs[name] = tmp_path / name
+        dirs[name].mkdir()
+        con.execute(
+            f"COPY (SELECT * FROM base {extra}) "
+            f"TO '{dirs[name]}/embeddings.parquet' (FORMAT parquet)"
+        )
+
+    clean = sorted(tuple(r) for r in q114_pca_power(spark, str(dirs["clean"])).collect())
+    with_null = sorted(tuple(r) for r in q114_pca_power(spark, str(dirs["null"])).collect())
+    assert len(clean) == 64 and with_null == clean
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{dirs['null']}/embeddings.parquet'")
+    oracle = sorted(con.execute(Q114_SQL).fetchall())
+    assert [r[0] for r in oracle] == [r[0] for r in clean]
+    for o, c in zip(oracle, clean):
+        assert o[1:] == pytest.approx(c[1:], abs=2e-6)
+
+    ragged = "ValueError: q114: an embedding has 2 components, PCA_DIM is 64"
+    with pytest.raises(Exception, match=ragged):
+        q114_pca_power(spark, str(dirs["ragged"]))
