@@ -439,6 +439,45 @@ def _stream_matmul_topk(
     )
 
 
+def _gallery_matrix(tbl, gallery_key: str):
+    """The key-sorted gallery of a collected ``(_gkey, _gvec)`` Arrow
+    table as ``(keys, float64 matrix)``. A NULL key, a repeated key, and
+    a NULL, NULL-holding or ragged vector each raise ``ValueError``
+    naming the offending key."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    where = "broadcast_gallery_topk: gallery"
+    if tbl.column("_gkey").null_count:
+        raise ValueError(f"{where} key column {gallery_key!r} holds a NULL")
+    tbl = tbl.take(pc.sort_indices(tbl, [("_gkey", "ascending")]))
+    keys = tbl.column("_gkey").to_pylist()
+    for a, b in zip(keys, keys[1:]):
+        if a == b:
+            raise ValueError(f"{where} key {a!r} appears more than once")
+    if not keys:
+        return keys, np.zeros((0, 0))
+    vecs = tbl.column("_gvec").combine_chunks()
+    if vecs.null_count:
+        bad = keys[vecs.is_null().to_numpy(zero_copy_only=False).argmax()]
+        raise ValueError(f"{where} key {bad!r} has a NULL vector")
+    lens = pc.list_value_length(vecs).to_numpy()
+    if (lens != lens[0]).any():
+        i = int((lens != lens[0]).argmax())
+        raise ValueError(
+            f"{where} key {keys[i]!r} has a {lens[i]}-element vector, "
+            f"key {keys[0]!r} one of {lens[0]}"
+        )
+    values = vecs.flatten()
+    if values.null_count:
+        row = pc.list_parent_indices(vecs).to_numpy()
+        i = row[values.is_null().to_numpy(zero_copy_only=False).argmax()]
+        raise ValueError(f"{where} key {keys[i]!r} has a NULL vector element")
+    # float32 -> float64 is exact: the matmul sees the stored values
+    G = values.to_numpy(zero_copy_only=False).astype(np.float64)
+    return keys, G.reshape(len(keys), int(lens[0]))
+
+
 def broadcast_gallery_topk(
     probes: DataFrame,
     gallery: DataFrame,
@@ -450,24 +489,33 @@ def broadcast_gallery_topk(
     gallery_broadcast_max: int | None = None,
 ) -> DataFrame:
     """Streaming-safe probe→gallery ranking: the dual of
-    :func:`pairwise_similarity_topk` for the LIVE path, where probes
-    arrive on a stream and the gallery is the small static person
+    :func:`pairwise_similarity_topk` for the LIVE path, where probe
+    KEYS arrive on a stream and the gallery is the small static person
     store (PedestrianReIDUsingAttrApp.java:226-228 ranks each arriving
     tracklet against the gallery as it flows past).
 
-    Execution shape: the gallery is collected ONCE (key-sorted) and
-    broadcast as a dense float64 matrix; every probe Arrow batch
-    computes all probe×gallery cosines as one BLAS matmul and emits
-    its exact per-row top-k directly — no window, no shuffle, and
-    crucially NO STATE, so the operator composes after stream-stream
-    joins and windowed aggregations where a rank window could not
-    (Structured Streaming forbids window functions and this would
-    otherwise need a per-probe aggregation).  A probe row with a NULL
-    vector emits ONE row with NULL rank/gallery_key — the leftover
-    flush passthrough (SparkStreamingApp.java:176-192: a tracklet
-    whose partner never arrived proceeds alone, unranked). An EMPTY
-    gallery routes every probe through that same branch (ADVICE r8):
-    the operator guarantees at least one output row per probe.
+    A probe's vector is the gallery row whose ``gallery_key`` equals the
+    probe's ``probe_key``: probes carry no vector column, and probe
+    vectors and gallery come from one build-time snapshot.
+
+    Execution shape: the gallery is collected ONCE through Arrow
+    (key-sorted) and broadcast as a dense float64 matrix with its
+    norms; every probe Arrow batch looks its keys up in a key → row
+    index, computes all probe×gallery cosines as one BLAS matmul and
+    emits its exact per-row top-k directly — no join, no window, no
+    shuffle, and crucially NO STATE, so the operator composes after
+    windowed aggregations where a rank window could not (Structured
+    Streaming forbids window functions). No per-trigger scan or
+    broadcast exchange re-reads the gallery. A probe whose key is NULL
+    or not in the gallery emits ONE row with NULL rank/gallery_key —
+    the leftover flush passthrough (SparkStreamingApp.java:176-192: a
+    tracklet whose partner never arrived proceeds alone, unranked). An
+    EMPTY gallery routes every probe through that same branch (ADVICE
+    r8): the operator guarantees at least one output row per probe.
+
+    Input contract, checked at build time: gallery keys are unique and
+    non-NULL, and every gallery vector is non-NULL, NULL-free and of one
+    length; a violation raises ``ValueError`` naming the key.
 
     100 TB contract: the gallery is the broadcast-dim side (persons,
     not corpus) — same smallness contract as pairwise_similarity_topk's
@@ -486,20 +534,18 @@ def broadcast_gallery_topk(
     # the dual of the probe ladder's limit guard (r11): the collect is
     # bounded BY PLAN, and a contract violation fails loudly at build
     # time rather than OOMing the driver mid-stream
-    g_rows = gallery.select(
+    tbl = gallery.select(
         F.col(gallery_key).alias("_gkey"), F.col(vector_col).alias("_gvec")
-    ).limit(gallery_broadcast_max + 1).collect()
-    if len(g_rows) > gallery_broadcast_max:
+    ).limit(gallery_broadcast_max + 1).toArrow()
+    if tbl.num_rows > gallery_broadcast_max:
         raise ValueError(
             "broadcast_gallery_topk: gallery exceeds the broadcast-dim "
             f"contract ({gallery_broadcast_max} rows) — this operator ranks "
             "against a persons-sized gallery; for corpus-sized galleries "
             "use pairwise_similarity_topk (blocked-grid) or ivf_topk"
         )
-    g_rows.sort(key=lambda r: r["_gkey"])
-    g_keys = [r["_gkey"] for r in g_rows]
-    G = np.asarray([np.asarray(r["_gvec"], dtype=np.float64) for r in g_rows])
-    gnorm = np.sqrt((G * G).sum(axis=1)) if len(g_rows) else np.zeros(0)
+    g_keys, G = _gallery_matrix(tbl, gallery_key)
+    gnorm = np.sqrt((G * G).sum(axis=1))
     bc = spark.sparkContext.broadcast((g_keys, G, gnorm))
 
     out_schema = StructType(
@@ -513,27 +559,23 @@ def broadcast_gallery_topk(
     def _rank(batches):
         keys, G, gnorm = bc.value
         gk = np.asarray(keys, dtype=object)
+        row_of = pd.Index(keys)
         for pdf in batches:
             if pdf.empty:
                 continue
-            # empty gallery ⇒ EVERY probe takes the unranked-flush
-            # branch (one NULL-rank row), mirroring the NULL-vector
-            # case — silently dropping vectored probes would violate
-            # the one-row-per-probe-minimum contract (ADVICE r8)
-            if len(gk):
-                has = pdf["_pvec"].notna()
-            else:
-                has = pd.Series(False, index=pdf.index)
+            # a NULL or unknown key (every key, for an empty gallery)
+            # takes the unranked-flush branch: one NULL-rank row
+            pos = row_of.get_indexer(pdf["_pkey"])
+            has = pos >= 0
             outs = []
-            if (~has).any():
+            if not has.all():
                 sub = pdf.loc[~has, passthrough].copy()
                 sub["rank"] = pd.Series([None] * len(sub), dtype=object, index=sub.index)
                 sub["gallery_key"] = pd.Series([None] * len(sub), dtype=object, index=sub.index)
                 outs.append(sub)
-            if has.any() and len(gk):
+            if has.any():
                 sub = pdf.loc[has]
-                P = np.asarray([np.asarray(v, dtype=np.float64) for v in sub["_pvec"]])
-                pnorm = np.sqrt((P * P).sum(axis=1))
+                P, pnorm = G[pos[has]], gnorm[pos[has]]
                 denom = pnorm[:, None] * gnorm[None, :]
                 sims = np.where(denom > 0, (P @ G.T) / np.where(denom > 0, denom, 1.0), -np.inf)
                 kk = min(k, len(gk))
@@ -546,10 +588,9 @@ def broadcast_gallery_topk(
                 rep["rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int64), len(sub))
                 rep["gallery_key"] = gk[idx.ravel()]
                 outs.append(rep)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            yield pd.concat(outs, ignore_index=True)
 
-    in_cols = [F.col(c) for c in passthrough] + [F.col(vector_col).alias("_pvec")]
+    in_cols = [F.col(c) for c in passthrough] + [F.col(probe_key).alias("_pkey")]
     return probes.select(*in_cols).mapInPandas(_rank, out_schema)
 
 

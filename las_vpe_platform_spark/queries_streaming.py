@@ -1799,8 +1799,10 @@ S23_SQL = _s23_sql()
 # Scale shape: tracker/recognizer are stateless Arrow UDTFs (per-video
 # unit-of-work repartition); the one aggregation keeps state bounded by
 # the watermark horizon x keys-per-hour; the gallery is the
-# broadcast-dim side (persons, not corpus); ranking is per-row BLAS
-# with no shuffle. The wide-avg runs in the exploded one-md5-expression
+# broadcast-dim side (persons, not corpus), collected once at build
+# time, and each tracklet's own vector is looked up in it by key, so no
+# trigger re-scans the features table; ranking is per-row BLAS with no
+# shuffle. The wide-avg runs in the exploded one-md5-expression
 # form (providers.fake_recognizer_sql_avg rationale) with the 125-attr
 # signature kept EXACT as a BIGINT sum of uint32 hashes, so the oracle
 # reproduces it bit-for-bit.
@@ -1929,16 +1931,16 @@ def s24_build_stream(spark: SparkSession, src_glob: str) -> DataFrame:
         pround(F.avg(attr0), 4).alias("attr0"),
     ).drop("window")
 
-    features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    assembled = tracklets.join(F.broadcast(features), "tracklet_key", "left").withColumn(
-        # unmatched tracklets rank nothing: NULL vector -> NULL-rank row
-        "feature",
-        F.when(F.col("n_samples").isNotNull(), F.col("feature")),
+    # a tracklet with no answered sample ranks nothing: its NULL probe
+    # key takes the operator's one NULL-rank row
+    probes = tracklets.withColumn(
+        "probe_key", F.when(F.col("n_samples").isNotNull(), F.col("tracklet_key"))
     )
+    features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
     return broadcast_gallery_topk(
-        assembled,
+        probes,
         features,
-        probe_key="tracklet_key",
+        probe_key="probe_key",
         gallery_key="tracklet_key",
         vector_col="feature",
         k=S24_K,
@@ -2375,36 +2377,57 @@ S30_SQL = _s30_sql()
 # than from an in-plan tracker, flow through the recognizer's drop
 # filter, and rank against the person gallery. d15 compiles this batch;
 # here the stored-tracklet scan IS the stream. Every stage is
-# STATELESS (point filter → retained-sample filter → stream-static
-# broadcast join → broadcast_gallery_topk's per-row BLAS), so output
-# is batching-invariant and the oracle is D15_SQL verbatim. Scale: no
-# state, no shuffle — throughput scales with probe partitions; the
-# gallery is the persons broadcast (s24's smallness contract).
+# STATELESS (point filter → retained-sample filter →
+# broadcast_gallery_topk's key lookup and per-row BLAS), so output is
+# batching-invariant and the oracle is D15_SQL verbatim. Scale: no
+# state, no shuffle, no join — throughput scales with probe
+# partitions; the gallery is the persons broadcast, collected once at
+# build time (s24's smallness contract).
 
 S27_SERIAL = 3
 S27_K = 10
 
 
+def _landed_tracklets(spark: SparkSession) -> str:
+    """The stored-tracklet table landed once as 4 parquet files — the
+    shared stream source of s27 and s28."""
+    from las_vpe_platform_spark.fixtures import FIXTURES_DIR
+
+    key = ("tracklets_s27",)
+    if key not in _LANDED:
+        src = _scratch_dir("s27_tracklets_")
+        spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet")).coalesce(
+            4
+        ).write.mode("overwrite").parquet(src)
+        _LANDED[key] = src
+    return _LANDED[key]
+
+
 def s27_stream_storage_attrrecog_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = s27_build_stream(spark, _landed_tracklets(spark))
+    name = f"s27_out_{uuid.uuid4().hex[:8]}"
+    with _stream_partitions(spark, 4):
+        out = run_to_completion(ranked, name, output_mode="append")
+    return out.select(
+        "tracklet_key", F.col("rank").cast("bigint").alias("rank"), "gallery_key"
+    )
+
+
+def s27_build_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The s27 transformation over a landed stored-tracklet source —
+    shared by the catalog entry, its plan test and the PLANS.md
+    capturer (unstarted plan)."""
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
     from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
     from las_vpe_platform_spark.providers import recognizer_drop_filter
 
-    batch = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    key = ("tracklets_s27",)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s27_tracklets_")
-        batch.coalesce(4).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
+    schema = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet")).schema
     # one data trigger over all four files (VERDICT r11 #3): every
     # stage here is stateless (point filter -> retained filter ->
-    # stream-static broadcast join -> per-row BLAS), so batching
-    # cannot change output and each dropped trigger saves its fixed
-    # commit cost
+    # per-row BLAS), so batching cannot change output and each dropped
+    # trigger saves its fixed commit cost
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "4")
         .parquet(src)
     )
@@ -2415,22 +2438,17 @@ def s27_stream_storage_attrrecog_reid(spark: SparkSession, sf_dir: str) -> DataF
     kept = sel.filter(F.size(retained) > 0)
     kept = kept.filter(recognizer_drop_filter(kept)).select("tracklet_key")
     features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    probes = kept.join(F.broadcast(features), "tracklet_key", "inner")
-    ranked = broadcast_gallery_topk(
-        probes,
+    # a probe outside the gallery ranks nothing: dropping its NULL-rank
+    # row is the features inner join of D15_SQL (gallery keys are unique)
+    return broadcast_gallery_topk(
+        kept,
         features,
         probe_key="tracklet_key",
         gallery_key="tracklet_key",
         vector_col="feature",
         k=S27_K,
         passthrough=["tracklet_key"],
-    )
-    name = f"s27_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, 4):
-        out = run_to_completion(ranked, name, output_mode="append")
-    return out.select(
-        "tracklet_key", F.col("rank").cast("bigint").alias("rank"), "gallery_key"
-    )
+    ).filter(F.col("rank").isNotNull())
 
 
 def _s27_sql() -> str:
@@ -2459,18 +2477,11 @@ def s28_stream_reid_command(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
     from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
 
-    batch = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    key = ("tracklets_s27",)  # shared landing with s27 (same source table)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s27_tracklets_")
-        batch.coalesce(4).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
+    schema = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet")).schema
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+        .parquet(_landed_tracklets(spark))
     )
     sel = stream.filter(F.col("serial_number") == S28_SERIAL).select("tracklet_key")
     attrs = spark.read.parquet(str(FIXTURES_DIR / "attributes.parquet")).select(
@@ -2478,16 +2489,15 @@ def s28_stream_reid_command(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keys = sel.join(F.broadcast(attrs), "tracklet_key", "inner")
     features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    probes = keys.join(F.broadcast(features), "tracklet_key", "inner")
     ranked = broadcast_gallery_topk(
-        probes,
+        keys,
         features,
         probe_key="tracklet_key",
         gallery_key="tracklet_key",
         vector_col="feature",
         k=S27_K,
         passthrough=["tracklet_key"],
-    )
+    ).filter(F.col("rank").isNotNull())  # D16_SQL's features inner join
     name = f"s28_out_{uuid.uuid4().hex[:8]}"
     with _stream_partitions(spark, 4):
         out = run_to_completion(ranked, name, output_mode="append")

@@ -774,11 +774,11 @@ def test_global_ranks_matches_row_number_and_string_keys(spark):
 def test_s24_stream_plan_has_one_stateful_aggregate(spark, sf_dir):
     # the flagship's analyzed plan must contain EXACTLY the designed
     # state: one watermark and one windowed aggregation over one tracker
-    # pass, no stream-stream join (the one join is the stream-static
-    # broadcast feature lookup), with the ranking mapInPandas stateless
-    # above it — a silent plan change (a second branch, an extra dedup,
-    # a lost watermark) would multiply per-trigger state commits or
-    # alter emission semantics
+    # pass, no join at all (the ranking looks each tracklet's vector up
+    # in the build-time gallery, so no trigger re-scans the features),
+    # with the ranking mapInPandas stateless above it — a silent plan
+    # change (a second branch, an extra dedup, a lost watermark) would
+    # multiply per-trigger state commits or alter emission semantics
     import tempfile
 
     from las_vpe_platform_spark.queries_streaming import s24_build_stream
@@ -787,7 +787,7 @@ def test_s24_stream_plan_has_one_stateful_aggregate(spark, sf_dir):
     plan = df._jdf.queryExecution().analyzed().toString()
     assert plan.count("EventTimeWatermark") == 1, plan
     assert plan.count("Aggregate [window") == 1, plan
-    assert plan.count("Join ") == 1 and "Join LeftOuter" in plan, plan
+    assert "Join" not in plan, plan
     assert plan.count("MapInPandas") == 2, "one tracker pass + the ranking"
 
 
@@ -824,38 +824,18 @@ def test_s25_monitor_never_collects_gallery(spark, sf_dir):
 
 def test_s27_s28_plans_are_stateless(spark, sf_dir):
     # the live command paths hold NO streaming state: stateless
-    # filters + stream-static broadcast joins + mapInPandas ranking —
-    # no watermark, no streaming aggregation, no stream-stream join
+    # filters + mapInPandas ranking — no watermark, no streaming
+    # aggregation, and no join (the gallery lookup is by key inside the
+    # ranking, so no trigger re-scans the features)
     import tempfile
 
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import s27_build_stream
 
-    from las_vpe_platform_spark.fixtures import FIXTURES_DIR
-    from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
-    from las_vpe_platform_spark.providers import recognizer_drop_filter
-    from las_vpe_platform_spark.queries_streaming import S27_K, S27_SERIAL
-
-    batch = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(tempfile.mkdtemp(prefix="s27_plan_"))
-    )
-    sel = stream.filter(F.col("serial_number") == S27_SERIAL)
-    retained = F.filter(
-        "location_sequence", lambda b: b.getField("patch_data").isNotNull()
-    )
-    kept = sel.filter(F.size(retained) > 0)
-    kept = kept.filter(recognizer_drop_filter(kept)).select("tracklet_key")
-    features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    probes = kept.join(F.broadcast(features), "tracklet_key", "inner")
-    df = broadcast_gallery_topk(
-        probes, features, probe_key="tracklet_key", gallery_key="tracklet_key",
-        vector_col="feature", k=S27_K, passthrough=["tracklet_key"],
-    )
+    df = s27_build_stream(spark, tempfile.mkdtemp(prefix="s27_plan_"))
     plan = df._jdf.queryExecution().analyzed().toString()
     assert "EventTimeWatermark" not in plan
     assert "Aggregate" not in plan
+    assert "Join" not in plan, plan
     assert "MapInPandas" in plan
 
 

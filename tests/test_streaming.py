@@ -932,23 +932,54 @@ def test_broadcast_gallery_topk_matches_batch_blas(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_broadcast_gallery_topk_null_vector_passthrough(spark):
-    """A probe row with a NULL vector emits exactly ONE row with NULL
-    rank/gallery_key (the leftover-flush contract of the live path)."""
+def test_broadcast_gallery_topk_null_or_unknown_key_passthrough(spark):
+    """A probe whose key is NULL or not in the gallery, or any probe of
+    an empty gallery, emits exactly ONE row with NULL rank/gallery_key
+    (the leftover-flush contract of the live path)."""
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
     from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
 
     features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    probes = features.limit(3).withColumn(
-        "feature",
-        F.when(F.col("tracklet_key") > "", None).cast("array<float>"),
+    probes = spark.createDataFrame(
+        [(None,), ("no-such-key",), ("CAM01#unknown",)], "tracklet_key string"
     )
-    out = broadcast_gallery_topk(
-        probes, features, probe_key="tracklet_key", gallery_key="tracklet_key",
-        vector_col="feature", k=5, passthrough=["tracklet_key"],
-    ).collect()
-    assert len(out) == 3
-    assert all(r["rank"] is None and r["gallery_key"] is None for r in out)
+    known = features.limit(3).select("tracklet_key")
+    for p, g in ((probes, features), (known, features.limit(0))):
+        out = broadcast_gallery_topk(
+            p, g, probe_key="tracklet_key", gallery_key="tracklet_key",
+            vector_col="feature", k=5, passthrough=["tracklet_key"],
+        ).collect()
+        assert len(out) == 3
+        assert all(r["rank"] is None and r["gallery_key"] is None for r in out)
+
+
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        ([("a", [1.0, 0.0]), (None, [0.0, 1.0]), ("c", [1.0, 1.0])],
+         "key column 'key' holds a NULL"),
+        ([("a", [1.0, 0.0]), ("b", None), ("c", [1.0, 1.0])],
+         "key 'b' has a NULL vector"),
+        ([("a", [1.0, 0.0]), ("b", [0.0, 1.0, 2.0]), ("c", [1.0, 1.0])],
+         "key 'b' has a 3-element vector"),
+        ([("a", [1.0, 0.0]), ("b", [None, 1.0]), ("c", [1.0, 1.0])],
+         "key 'b' has a NULL vector element"),
+        ([("a", [1.0, 0.0]), ("c", [0.0, 1.0]), ("c", [1.0, 1.0])],
+         "key 'c' appears more than once"),
+    ],
+    ids=["null_key", "null_vector", "ragged", "null_element", "duplicate_key"],
+)
+def test_broadcast_gallery_topk_rejects_bad_gallery(spark, rows, message):
+    """Bad gallery input fails loudly at build time, naming the key."""
+    import re
+
+    from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
+
+    gallery = spark.createDataFrame(rows, "key string, v array<float>")
+    with pytest.raises(ValueError, match=re.escape(message)):
+        broadcast_gallery_topk(
+            gallery, gallery, probe_key="key", gallery_key="key", vector_col="v", k=2,
+        )
 
 
 def test_s24_emission_and_fanout_contract(spark, sf_dir):

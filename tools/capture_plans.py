@@ -385,8 +385,9 @@ STREAMING_HEADLINERS = [
      "answered boxes fanned out to the 125 fake-CNN names -> ONE windowed "
      "aggregation per (hour, tracklet) computing the tracklet row and its "
      "wide-avg (the tracklet/attribute full outer join on a shared key) -> "
-     "stream-static gallery join -> stateless broadcast-gallery BLAS top-k; "
-     "one stateful operator, state bounded by watermark horizon x "
+     "stateless broadcast-gallery BLAS top-k, each tracklet's vector looked "
+     "up by key in the build-time gallery (no join, no per-trigger features "
+     "scan); one stateful operator, state bounded by watermark horizon x "
      "keys-per-hour",
      "_s24_stream_plan"),
     ("s25_stream_ann_recall (per-batch probe plan, r9 distributed rewrite)",
@@ -401,9 +402,9 @@ STREAMING_HEADLINERS = [
      "the ATTRRECOG_REID command path live (s28's REID-only bypass is the "
      "same shape minus the recognizer filter, plus the attrs broadcast "
      "join): stored-tracklet stream -> serial point filter -> retained-"
-     "sample + drop filters -> stream-static broadcast feature join -> "
-     "stateless broadcast-gallery BLAS top-k; NO watermark, NO state "
-     "operator anywhere in the plan",
+     "sample + drop filters -> stateless broadcast-gallery BLAS top-k "
+     "looking each probe's vector up by key; NO watermark, NO state "
+     "operator and NO join anywhere in the plan",
      "_s27_stream_plan"),
     ("s29_stream_source_drift (per-batch fold plan, literal batch)",
      "streaming drift monitor: the foreachBatch read-modify-write — batch "
@@ -687,35 +688,12 @@ def _s25_batch_plan(spark):
 
 
 def _s27_stream_plan(spark):
-    from pyspark.sql import functions as F
-
-    from las_vpe_platform_spark.fixtures import FIXTURES_DIR
-    from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
-    from las_vpe_platform_spark.providers import recognizer_drop_filter
     from las_vpe_platform_spark.queries_streaming import (
-        S27_K,
-        S27_SERIAL,
         _scratch_dir,
+        s27_build_stream,
     )
 
-    batch = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(_scratch_dir("plan_s27_"))
-    )
-    sel = stream.filter(F.col("serial_number") == S27_SERIAL)
-    retained = F.filter(
-        "location_sequence", lambda b: b.getField("patch_data").isNotNull()
-    )
-    kept = sel.filter(F.size(retained) > 0)
-    kept = kept.filter(recognizer_drop_filter(kept)).select("tracklet_key")
-    features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    probes = kept.join(F.broadcast(features), "tracklet_key", "inner")
-    return broadcast_gallery_topk(
-        probes, features, probe_key="tracklet_key", gallery_key="tracklet_key",
-        vector_col="feature", k=S27_K, passthrough=["tracklet_key"],
-    )
+    return s27_build_stream(spark, _scratch_dir("plan_s27_"))
 
 
 def _s29_fold_plan(spark):
