@@ -2,80 +2,73 @@
 
 The reference's pairwise comparer (J9,
 ExternPedestrianComparerUsingAttr.java:170-194) is an O(probes ×
-gallery) primitive; at 100 TB the gallery side must be pruned. Two
-paths:
+gallery) primitive; at 100 TB the gallery side must be pruned. The
+exact search is ``operators.joins.pairwise_similarity_topk``; the five
+approximate top-k operators here are built from three shared kernels:
 
-- ``brute_force_topk`` — exact: broadcast the (small) probe set,
-  score the full gallery scan, per-probe top-k. Linear in gallery,
-  no gallery shuffle. The correctness baseline.
-- ``ivf_topk`` — IVF-style approximate: pick deterministic centroid
-  rows, assign every vector to its nearest centroid (broadcast
-  centroids), then search only the probe's ``nprobe`` nearest
-  centroid buckets. Equi-join on centroid id replaces the cross
-  product; recall < 1 by design, deterministic given the centroid
-  choice (so still oracle-checkable).
+- ``_rank_tail`` — the per-probe ``row_number`` over (score,
+  ``gallery_key``) with ``rank <= k``, used by all five;
+- ``_bucketed_cosine_topk`` — the IVF search: the probe side joins the
+  gallery on the cell id and scores cosine with norms computed below
+  the join. ``ivf_topk`` assigns cells from one flat centroid level,
+  ``ivf2_topk`` by the coarse-then-fine descent;
+- ``_pq_codec`` — product quantization: codebook, per-subspace argmin
+  encode and per-probe ADC tables, summed by ``_adc_dist``.
+  ``pq_topk`` runs it on raw vectors against the whole gallery,
+  ``ivfpq_topk`` on residuals inside the probed IVF cells.
 
-All cosine scoring precomputes L2 norms once per vector below the
-join (bit-identical results, one fold per row instead of three per
-pair).
+``sq8_topk`` scores an int8-quantized gallery through the same rank
+tail. Every index choice (``key % mod == 0`` centroids, the
+smallest-key codebook) is deterministic and seedless, so DuckDB
+reproduces each operator's rows: the ``*_sql`` mirrors here, and the
+catalog's SQL for the IVF entries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from las_vpe_platform_spark.functions.vector import dot_product, l2_norm
 from las_vpe_platform_spark.operators.staging import persist_disk
-from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
-
-# exact search is the same operator as the ReID ranking join
-brute_force_topk = pairwise_similarity_topk
 
 # HARD PRECONDITION on every *_topk entry point (ADVICE r5): the probe
 # side (probes × nprobe rows, plus per-probe ADC tables for the PQ
-# family) must fit the executor broadcast budget — these operators
-# force-broadcast it so the gallery NEVER shuffles, bypassing AQE's
-# size check. Rule of thumb at spark.sql.autoBroadcastJoinThreshold
+# family) must fit the executor broadcast budget. These operators
+# always force-broadcast it so the gallery NEVER shuffles, bypassing
+# AQE's size check. Rule of thumb at spark.sql.autoBroadcastJoinThreshold
 # defaults: ≤ ~10^5 probes for float vectors, ≤ ~10^4 for PQ ADC
-# tables (m × n_codes doubles per probed cell). Beyond that, pass
-# ``probe_broadcast=False`` to drop the hint and let AQE degrade to a
-# shuffled equi-join on the cell id (correct, slower, no OOM risk);
-# the gallery then shuffles, so prefer sharding the probe set instead.
+# tables (m × n_codes doubles per probed cell). A caller over that
+# budget shards its probe set and runs one search per shard.
 
 
-def _probe_side(df: DataFrame, probe_broadcast: bool) -> DataFrame:
-    """Forced broadcast of the small-by-contract probe side, or the
-    AQE-decided fallback (see module precondition note)."""
-    return F.broadcast(df) if probe_broadcast else df
+def _rank_tail(scored: DataFrame, score: Column, k: int) -> DataFrame:
+    """Per-probe top-k of ``scored`` (``probe_key``, ``gallery_key``,
+    score): ``rank`` is the ``row_number`` ordered by ``score`` (a
+    sort column: similarity descending or distance ascending), ties to
+    the smaller ``gallery_key``."""
+    w = W.partitionBy("probe_key").orderBy(score, F.asc("gallery_key"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _nearest_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame | None,
-    id_col: str,
-    vector_col: str,
-    keep: int,
-    crow: DataFrame | None = None,
+    vectors: DataFrame, crow: DataFrame, vector_col: str, keep: int
 ) -> DataFrame:
-    """Rank centroids per vector by cosine, keep the best ``keep``;
+    """Rank the centroids of the fold row ``crow`` per vector by
+    cosine, keep the best ``keep`` as one ``centroid_id`` row each;
     ties broken by the smaller centroid id.
 
-    Shape (round-5 rewrite): the centroid table folds to ONE broadcast
-    row of (id, vec, norm) structs and every vector scores all
-    centroids inside a single projection — ``array_sort`` on
-    (-sim, centroid_id) structs, ``slice``, ``explode``.  The previous
-    crossJoin + rank-window shape expanded the vector side
-    x|centroids| rows and shuffled the FULL vector frame on ``id_col``
-    — a corpus-wide exchange when the vector side is the gallery
-    (q29/q70/q118), gone here.  Results are bit-identical: the cosine
-    fold is unchanged, and ascending struct order on (-sim, id) is the
-    same total order as (sim DESC, id ASC) row_number ranking for
+    Shape: the centroid table is ONE broadcast row of (id, vec, norm)
+    structs and every vector scores all centroids inside a single
+    projection — ``array_sort`` on (-sim, centroid_id) structs,
+    ``slice``, ``explode`` — so the vector side (the gallery, for
+    q29/q70/q118) never shuffles.  Ascending struct order on
+    (-sim, id) is the same total order as (sim DESC, id ASC) for
     non-NaN similarities (zero-norm vectors, the NaN source, are out
-    of contract exactly as before — embeddings are dense).
+    of contract — embeddings are dense).
     """
-    arr = _nearest_centroid_arr(vectors, centroids, vector_col, keep, crow=crow)
+    arr = _nearest_centroid_arr(vectors, crow, vector_col, keep)
     if keep == 1:
         # no Generate: explode makes Catalyst re-evaluate the whole
         # scoring lambda through the Generate node (measured 1.17 s vs
@@ -93,9 +86,8 @@ def _nearest_centroids(
 def _centroid_fold(centroids: DataFrame, vector_col: str) -> DataFrame:
     """The ONE-ROW centroid fold frame: (id, double vec, norm) structs
     sorted by id.  Built once per index and shared by every
-    assignment/bucketing call in the same query (each
-    :func:`_nearest_centroid_arr` call used to rebuild and re-broadcast
-    its own — two extra jobs per query measured locally)."""
+    assignment/bucketing call in the same query (stage it when it has
+    several consumers, so it is aggregated once)."""
     return centroids.select(
         F.struct(
             F.col("centroid_id"),
@@ -106,21 +98,13 @@ def _centroid_fold(centroids: DataFrame, vector_col: str) -> DataFrame:
 
 
 def _nearest_centroid_arr(
-    vectors: DataFrame,
-    centroids: DataFrame | None,
-    vector_col: str,
-    keep: int,
-    crow: DataFrame | None = None,
+    vectors: DataFrame, crow: DataFrame, vector_col: str, keep: int
 ) -> DataFrame:
     """The fold core of :func:`_nearest_centroids`: adds ``_vnorm``
-    and ``_cells`` (the ``keep`` best centroid ids, best-first) as
-    COLUMNS — no explode, so callers that go on to fold over the cell
-    set (:func:`ivf2_topk`'s descent) never multiply rows.  Pass a
-    prebuilt (ideally staged) ``crow`` from :func:`_centroid_fold` to
-    share one fold row across several calls."""
-    if crow is None:
-        crow = _centroid_fold(centroids, vector_col)
-    crow = F.broadcast(crow)
+    and ``_cells`` (the ``keep`` best centroid ids of the
+    :func:`_centroid_fold` row ``crow``, best-first) as COLUMNS — no
+    explode, so callers that go on to fold over the cell set
+    (:func:`ivf2_topk`'s descent) never multiply rows."""
     scored = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -135,7 +119,7 @@ def _nearest_centroid_arr(
     )
     return (
         vectors.withColumn("_vnorm", l2_norm(vector_col))
-        .crossJoin(crow)
+        .crossJoin(F.broadcast(crow))
         .withColumn(
             "_cells",
             F.transform(
@@ -148,15 +132,55 @@ def _nearest_centroid_arr(
 
 
 def assign_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vector_col: str,
-    centroid_id_col: str = "centroid_id",
+    vectors: DataFrame, centroids: DataFrame, vector_col: str
 ) -> DataFrame:
-    """Assign each vector to its single nearest centroid."""
-    cents = centroids.withColumnRenamed(centroid_id_col, "centroid_id")
-    return _nearest_centroids(vectors, cents, id_col, vector_col, keep=1)
+    """Assign each vector to its single nearest centroid: ``vectors``
+    gains ``centroid_id`` from ``centroids`` (``centroid_id``,
+    ``vector_col``)."""
+    return _nearest_centroids(
+        vectors, _centroid_fold(centroids, vector_col), vector_col, keep=1
+    )
+
+
+def _bucketed_cosine_topk(
+    probes: DataFrame,
+    gallery: DataFrame,
+    probe_key: str,
+    gallery_key: str,
+    vector_col: str,
+    k: int,
+    nprobe: int,
+    cells,
+) -> DataFrame:
+    """The IVF search shared by :func:`ivf_topk` and :func:`ivf2_topk`.
+
+    ``cells(vectors, keep)`` gives each vector's ``keep`` nearest cells
+    as one ``centroid_id`` row each: the gallery keeps 1, a probe
+    ``nprobe``. The probe side is broadcast into the equi-join on the
+    cell id, so the bucketed gallery never shuffles; cosine norms are
+    computed once per row below the join (one fold per row instead of
+    three per pair, bit-identical).
+    """
+    gal = cells(
+        gallery.select(F.col(gallery_key).alias("gallery_key"), F.col(vector_col)), 1
+    ).select(
+        "gallery_key", F.col(vector_col).alias("_gvec"), "centroid_id"
+    ).withColumn("_gnorm", l2_norm("_gvec"))
+    prb = cells(
+        probes.select(F.col(probe_key).alias("probe_key"), F.col(vector_col)), nprobe
+    ).select(
+        "probe_key", F.col(vector_col).alias("_pvec"), "centroid_id"
+    ).withColumn("_pnorm", l2_norm("_pvec"))
+    scored = (
+        F.broadcast(prb)
+        .join(gal, on="centroid_id")
+        .withColumn(
+            "similarity",
+            dot_product("_pvec", "_gvec") / (F.col("_pnorm") * F.col("_gnorm")),
+        )
+        .select("probe_key", "gallery_key", "similarity")
+    )
+    return _rank_tail(scored, F.desc("similarity"), k)
 
 
 def ivf_topk(
@@ -168,12 +192,11 @@ def ivf_topk(
     k: int = 5,
     num_centroids_mod: int = 50,
     nprobe: int = 2,
-    probe_broadcast: bool = True,
 ) -> DataFrame:
     """Approximate per-probe top-k via IVF bucketing.
 
     Precondition: probes × nprobe must fit the broadcast budget (see
-    the module-level note); ``probe_broadcast=False`` opts out.
+    the module-level note).
 
     Centroids = gallery rows where ``key % num_centroids_mod == 0``
     (deterministic, seedless — reproducible in SQL). Gallery vectors
@@ -188,41 +211,10 @@ def ivf_topk(
         (F.col(gallery_key) % num_centroids_mod) == 0
     ).select(F.col(gallery_key).alias("centroid_id"), F.col(vector_col))
     crow = persist_disk(_centroid_fold(centroids, vector_col))
-
-    gal_assigned = _nearest_centroids(
-        gallery.select(F.col(gallery_key), F.col(vector_col)),
-        None,
-        id_col=gallery_key,
-        vector_col=vector_col,
-        keep=1,
-        crow=crow,
-    ).select(
-        F.col(gallery_key).alias("gallery_key"),
-        F.col(vector_col).alias("_gvec"),
-        "centroid_id",
-    ).withColumn("_gnorm", l2_norm("_gvec"))
-
-    probe_buckets = _nearest_centroids(
-        probes.select(F.col(probe_key).alias("probe_key"), F.col(vector_col).alias("_pvec")),
-        None,
-        id_col="probe_key",
-        vector_col="_pvec",
-        keep=nprobe,
-        crow=crow,
-    ).withColumn("_pnorm", l2_norm("_pvec"))
-
-    scored = (
-        # probes are the small-by-contract side: broadcast them so the
-        # assigned gallery never shuffles on the cell id
-        _probe_side(probe_buckets, probe_broadcast).join(gal_assigned, on="centroid_id")
-        .withColumn(
-            "similarity",
-            dot_product("_pvec", "_gvec") / (F.col("_pnorm") * F.col("_gnorm")),
-        )
-        .select("probe_key", "gallery_key", "similarity")
+    return _bucketed_cosine_topk(
+        probes, gallery, probe_key, gallery_key, vector_col, k, nprobe,
+        lambda vectors, keep: _nearest_centroids(vectors, crow, vector_col, keep),
     )
-    w = W.partitionBy("probe_key").orderBy(F.desc("similarity"), F.asc("gallery_key"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 # --- signed-random-projection LSH (third ANN path: data-independent) --------
@@ -396,7 +388,6 @@ def sq8_topk(
     gallery_key: str,
     vector_col: str = "embedding",
     k: int = 10,
-    probe_broadcast: bool = True,
 ) -> DataFrame:
     """Approximate top-k over an int8-quantized gallery (FAISS-SQ8
     style asymmetric distance): probes stay float, the gallery is
@@ -476,7 +467,7 @@ def sq8_topk(
     )
     denom = F.col("_pnorm") * F.col("_gnorm")
     scored = (
-        _probe_side(p, probe_broadcast)
+        F.broadcast(p)
         .crossJoin(g)
         .withColumn(
             "similarity",
@@ -487,11 +478,7 @@ def sq8_topk(
         )
         .select("probe_key", "gallery_key", "similarity")
     )
-    w = W.partitionBy("probe_key").orderBy(F.desc("similarity"), F.asc("gallery_key"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_tail(scored, F.desc("similarity"), k)
 
 
 def sq8_topk_sql(
@@ -556,7 +543,6 @@ def ivf2_topk(
     fine_mod: int = 20,
     coarse_mod: int = 80,
     nprobe: int = 2,
-    probe_broadcast: bool = True,
 ) -> DataFrame:
     """Two-level IVF ANN (coarse quantizer over the fine centroids) —
     the fix for flat IVF's scale limit (SCALE.md): at 10^11 vectors a
@@ -598,10 +584,9 @@ def ivf2_topk(
     coarse_crow = persist_disk(_centroid_fold(coarse, vector_col))
     # level-1 index: fine centroid -> its nearest coarse cell
     f2c = persist_disk(
-        _nearest_centroids(
-            fine, None, id_col="fid", vector_col=vector_col, keep=1,
-            crow=coarse_crow,
-        ).select("fid", "centroid_id")
+        _nearest_centroids(fine, coarse_crow, vector_col, keep=1).select(
+            "fid", "centroid_id"
+        )
     )
     # per-coarse-cell fine slices, folded to ONE broadcast map row:
     # centroid_id -> sorted array of (fid, fvec, fnorm) structs. Same
@@ -630,9 +615,10 @@ def ivf2_topk(
         )
     )
 
-    def descend(vectors: DataFrame, id_name: str, keep_fine: int) -> DataFrame:
+    def descend(vectors: DataFrame, keep_fine: int) -> DataFrame:
         """coarse cells (nprobe) -> candidate fine centroids -> keep
-        the best ``keep_fine`` fine cells per vector.
+        the best ``keep_fine`` fine cells per vector, as one
+        ``centroid_id`` (fine id) row each.
 
         Round-5 fold shape: the coarse cells arrive as an ARRAY column
         (no explode), their fine slices come out of the one-row
@@ -642,9 +628,7 @@ def ivf2_topk(
         fine rank).  Total order (fsim DESC, fid ASC) is unchanged.
         """
         cand = (
-            _nearest_centroid_arr(
-                vectors, None, vector_col, keep=nprobe, crow=coarse_crow
-            )
+            _nearest_centroid_arr(vectors, coarse_crow, vector_col, keep=nprobe)
             .crossJoin(cell_map)
             .withColumn(
                 "_cands",
@@ -674,42 +658,18 @@ def ivf2_topk(
             # gallery-sized call: array_min instead of explode (the
             # Generate re-evaluation cost — see _nearest_centroids)
             return cand.select(
-                id_name, vector_col, F.array_min(scored)["fid"].alias("fid")
-            ).filter(F.col("fid").isNotNull())  # no fines in probed cells: drop, as explode did
+                *vectors.columns, F.array_min(scored)["fid"].alias("centroid_id")
+            ).filter(F.col("centroid_id").isNotNull())  # no fines in probed cells: drop, as explode did
         return (
             cand.withColumn(
                 "_t", F.explode(F.slice(F.array_sort(scored), 1, keep_fine))
             )
-            .select(id_name, vector_col, F.col("_t.fid").alias("fid"))
+            .select(*vectors.columns, F.col("_t.fid").alias("centroid_id"))
         )
 
-    g2f = descend(
-        gallery.select(F.col(gallery_key).alias("gallery_key"), F.col(vector_col)),
-        "gallery_key",
-        keep_fine=1,
-    ).select(
-        "gallery_key", F.col(vector_col).alias("_gvec"), "fid"
-    ).withColumn("_gnorm", l2_norm("_gvec"))
-    p2f = descend(
-        probes.select(F.col(probe_key).alias("probe_key"), F.col(vector_col)),
-        "probe_key",
-        keep_fine=nprobe,
-    ).select(
-        "probe_key", F.col(vector_col).alias("_pvec"), "fid"
-    ).withColumn("_pnorm", l2_norm("_pvec"))
-
-    scored = (
-        # probes broadcast (small by contract; module precondition
-        # note) — the bucketed gallery never shuffles on the cell id
-        _probe_side(p2f, probe_broadcast).join(g2f, on="fid")
-        .withColumn(
-            "similarity",
-            dot_product("_pvec", "_gvec") / (F.col("_pnorm") * F.col("_gnorm")),
-        )
-        .select("probe_key", "gallery_key", "similarity")
+    return _bucketed_cosine_topk(
+        probes, gallery, probe_key, gallery_key, vector_col, k, nprobe, descend
     )
-    w = W.partitionBy("probe_key").orderBy(F.desc("similarity"), F.asc("gallery_key"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def hard_negatives_topk(
@@ -858,6 +818,107 @@ FROM _keyed k ANTI JOIN _dropped d ON k.{id_col} = d.{id_col}
 """
 
 
+# --- product quantization: one codec for PQ and IVF-PQ ----------------------
+
+def _subspace_sq_dist(vec, cvec, s, sub_d: int):
+    """Squared L2 between two double arrays over subspace ``s``
+    (elements ``s*sub_d+1 .. (s+1)*sub_d``), folded in sub-dim index
+    order — the encode and ADC primitive of :func:`_pq_codec`. Both
+    DuckDB mirrors spell the identical fold so the doubles match
+    bit-for-bit."""
+    return F.aggregate(
+        F.sequence(F.lit(1), F.lit(sub_d)),
+        F.lit(0.0),
+        lambda acc, i: acc
+        + (
+            F.element_at(vec, (s * sub_d + i).cast("int"))
+            - F.element_at(cvec, (s * sub_d + i).cast("int"))
+        )
+        * (
+            F.element_at(vec, (s * sub_d + i).cast("int"))
+            - F.element_at(cvec, (s * sub_d + i).cast("int"))
+        ),
+    )
+
+
+def _pq_codec(
+    gal: DataFrame, prb: DataFrame, dim: int, m: int, n_codes: int
+) -> tuple[DataFrame, DataFrame]:
+    """The product-quantization codec of :func:`pq_topk` (raw vectors)
+    and :func:`ivfpq_topk` (residuals). ``gal`` is (``gallery_key``,
+    ..., ``_vec``) and ``prb`` (``probe_key``, ..., ``_vec``), ``_vec``
+    a double array. Returns ``gal`` with ``_vec`` encoded as ``_codes``
+    and ``prb`` with ``_vec`` turned into its ADC table ``_adc``;
+    :func:`_adc_dist` scores a joined pair.
+
+    Determinism contract (what both DuckDB mirrors spell):
+
+    - codebook = the ``_vec`` of the ``n_codes`` smallest
+      ``gallery_key`` rows (TakeOrderedAndProject — per-partition
+      top-k, no full sort), positions 0..n_codes-1 in key order;
+    - encode: per subspace, argmin squared-L2 over codebook positions,
+      ties to the smaller position; sub-dim folds run in index order;
+    - ADC: each probe row's per-(subspace, position) distance table is
+      computed once BELOW the pair join.
+
+    Everything is lazy column expressions over a one-row broadcast
+    codebook aggregate — no job at plan-build, composable into
+    streaming plans (the s13 assignment pattern).
+    """
+    sub_d = dim // m
+    # the one-row codebook is referenced by BOTH the gallery encode and
+    # the probe ADC subtree — stage it (SCALE.md multi-reference rule)
+    # or each side pays its own full-gallery TakeOrderedAndProject scan
+    cb = F.broadcast(
+        persist_disk(
+            gal.orderBy("gallery_key")
+            .limit(n_codes)
+            .agg(
+                F.array_sort(F.collect_list(F.struct("gallery_key", "_vec"))).alias("_cb")
+            )
+            .select(F.transform("_cb", lambda c: c["_vec"]).alias("_cb"))
+        )
+    )
+    subspaces = F.sequence(F.lit(0), F.lit(m - 1))
+    codes = gal.crossJoin(cb).select(
+        *[c for c in gal.columns if c != "_vec"],
+        F.transform(
+            subspaces,
+            lambda s: F.array_min(
+                F.transform(
+                    F.col("_cb"),
+                    lambda c, j: F.struct(
+                        _subspace_sq_dist(F.col("_vec"), c, s, sub_d).alias("d"),
+                        j.alias("j"),
+                    ),
+                )
+            )["j"],
+        ).alias("_codes"),
+    )
+    adc = prb.crossJoin(cb).select(
+        *[c for c in prb.columns if c != "_vec"],
+        F.transform(
+            subspaces,
+            lambda s: F.transform(
+                F.col("_cb"), lambda c: _subspace_sq_dist(F.col("_vec"), c, s, sub_d)
+            ),
+        ).alias("_adc"),
+    )
+    return codes, adc
+
+
+def _adc_dist() -> Column:
+    """``adc_dist`` of a joined (``_adc``, ``_codes``) pair: the ``m``
+    table lookups summed in subspace order."""
+    return F.aggregate(
+        F.zip_with(
+            "_adc", "_codes", lambda a, c: F.element_at(a, (c + 1).cast("int"))
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    ).alias("adc_dist")
+
+
 def pq_topk(
     probes: DataFrame,
     gallery: DataFrame,
@@ -868,7 +929,6 @@ def pq_topk(
     m: int = 8,
     n_codes: int = 16,
     k: int = 5,
-    probe_broadcast: bool = True,
 ) -> DataFrame:
     """Product-quantization ANN (FAISS IVF-PQ's storage half): the
     gallery is encoded as ``m`` sub-vector codes against a shared
@@ -885,101 +945,24 @@ def pq_topk(
     ExternPedestrianComparerUsingAttr.java:170-194, is the O(P x N)
     primitive this replaces at scale).
 
-    Determinism contract (what the DuckDB oracle mirrors):
-
-    - codebook = the ``n_codes`` smallest ``gallery_key`` rows
-      (TakeOrderedAndProject — per-partition top-k, no full sort),
-      positions 0..n_codes-1 in key order;
-    - encode: per subspace, argmin squared-L2 over codebook positions,
-      ties to the smaller position; sub-dim folds run in index order;
-    - ADC: the probe's per-(subspace, position) distance table is
-      computed once per probe BELOW the pair join; the pair expression
-      is m array lookups summed in subspace order.
-
-    Everything is lazy column expressions over a one-row broadcast
-    codebook aggregate — no job at plan-build, composable into
-    streaming plans (the s13 assignment pattern).
+    The codec (:func:`_pq_codec`) runs on the raw vectors; every probe
+    is scored against every gallery code, ties to the smaller key.
     """
-    sub_d = dim // m
-    cb = (
-        gallery.select(
-            F.col(gallery_key).cast("bigint").alias("_cid"),
-            F.transform(vector_col, lambda x: x.cast("double")).alias("_cvec"),
-        )
-        .orderBy("_cid")
-        .limit(n_codes)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_cid"), F.col("_cvec")))
-            ).alias("_cb")
-        )
-        .select(F.transform("_cb", lambda c: c["_cvec"]).alias("_cb"))
+    gal = gallery.select(
+        F.col(gallery_key).alias("gallery_key"),
+        F.transform(vector_col, lambda x: x.cast("double")).alias("_vec"),
     )
-    # the one-row codebook is referenced by BOTH the gallery encode and
-    # the probe ADC subtree — stage it (SCALE.md multi-reference rule)
-    # or each side pays its own full-gallery TakeOrderedAndProject scan
-    cb = persist_disk(cb)
-
-    def dist2(vec, cvec, s):
-        # squared L2 over subspace s (shared with ivfpq_topk)
-        return _subspace_sq_dist(vec, cvec, s, sub_d)
-
-    g = (
-        gallery.select(
-            F.col(gallery_key).alias("gallery_key"),
-            F.transform(vector_col, lambda x: x.cast("double")).alias("_gvec"),
-        )
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "gallery_key",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.array_min(
-                    F.transform(
-                        F.col("_cb"),
-                        lambda c, j: F.struct(
-                            dist2(F.col("_gvec"), c, s).alias("d"),
-                            j.alias("j"),
-                        ),
-                    )
-                )["j"],
-            ).alias("_codes"),
-        )
+    prb = probes.select(
+        F.col(probe_key).alias("probe_key"),
+        F.transform(vector_col, lambda x: x.cast("double")).alias("_vec"),
     )
-    p = (
-        probes.select(
-            F.col(probe_key).alias("probe_key"),
-            F.transform(vector_col, lambda x: x.cast("double")).alias("_pvec"),
-        )
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "probe_key",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.transform(
-                    F.col("_cb"), lambda c: dist2(F.col("_pvec"), c, s)
-                ),
-            ).alias("_adc"),
-        )
-    )
-    adc_dist = F.aggregate(
-        F.zip_with(
-            "_adc", "_codes", lambda a, c: F.element_at(a, (c + 1).cast("int"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    codes, adc = _pq_codec(gal, prb, dim, m, n_codes)
     scored = (
-        _probe_side(p, probe_broadcast)
-        .crossJoin(g)
-        .select("probe_key", "gallery_key", adc_dist.alias("adc_dist"))
+        F.broadcast(adc)
+        .crossJoin(codes)
+        .select("probe_key", "gallery_key", _adc_dist())
     )
-    w = W.partitionBy("probe_key").orderBy(
-        F.asc("adc_dist"), F.asc("gallery_key")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_tail(scored, F.asc("adc_dist"), k)
 
 
 def pq_topk_sql(
@@ -1044,27 +1027,6 @@ FROM ranked WHERE rank <= {k}
 
 # --- IVF-PQ: coarse cells + residual product quantization -------------------
 
-def _subspace_sq_dist(vec, cvec, s, sub_d: int):
-    """Squared L2 between two double arrays over subspace ``s``
-    (elements ``s*sub_d+1 .. (s+1)*sub_d``), folded in sub-dim index
-    order — the shared primitive of :func:`pq_topk` (raw vectors) and
-    :func:`ivfpq_topk` (residuals). Both DuckDB mirrors spell the
-    identical fold so the doubles match bit-for-bit."""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(sub_d)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + (
-            F.element_at(vec, (s * sub_d + i).cast("int"))
-            - F.element_at(cvec, (s * sub_d + i).cast("int"))
-        )
-        * (
-            F.element_at(vec, (s * sub_d + i).cast("int"))
-            - F.element_at(cvec, (s * sub_d + i).cast("int"))
-        ),
-    )
-
-
 def ivfpq_topk(
     probes: DataFrame,
     gallery: DataFrame,
@@ -1077,7 +1039,6 @@ def ivfpq_topk(
     k: int = 5,
     num_centroids_mod: int = 50,
     nprobe: int = 2,
-    probe_broadcast: bool = True,
 ) -> DataFrame:
     """The full FAISS-architecture ANN: IVF coarse cells (q29's
     deterministic ``key % mod`` quantizer) + product quantization of
@@ -1099,20 +1060,17 @@ def ivfpq_topk(
 
     - coarse centroids: gallery rows with ``key % num_centroids_mod
       == 0``; cell assignment by cosine, ties to the smaller centroid;
-    - residual codebook: residuals of the ``n_codes`` smallest
-      ``gallery_key`` rows (post-assignment), positions in key order;
-    - encode: per subspace argmin squared-L2, ties to the smaller
-      position, sub-dim folds in index order;
-    - ADC: per (probe, probed cell) the probe residual's distance
-      table is built once BELOW the pair join; pair cost is m lookups
-      summed in subspace order; final ties to the smaller gallery key.
+    - the codec (:func:`_pq_codec`) runs on the residuals: the
+      codebook holds the residuals of the ``n_codes`` smallest
+      ``gallery_key`` rows (post-assignment), and each (probe, probed
+      cell) gets its own ADC table; final ties to the smaller gallery
+      key.
 
     Everything below the pair join is lazy column expressions; the
     gallery is touched by exactly two full passes (assign, encode) and
     never shuffled — the pair join broadcasts the (probes x nprobe)
     ADC side into the cells.
     """
-    sub_d = dim // m
     # coarse quantizer — same multi-reference staging as ivf_topk
     centroids = persist_disk(
         gallery.filter((F.col(gallery_key) % num_centroids_mod) == 0).select(
@@ -1130,111 +1088,44 @@ def ivfpq_topk(
     # the probe bucketing (staged: one aggregate, not one per call)
     crow = persist_disk(_centroid_fold(centroids, vector_col))
 
-    # gallery -> nearest cell -> residual; referenced by BOTH the
-    # codebook derivation and the encode pass, so stage it once
-    gal_resid = persist_disk(
-        _nearest_centroids(
-            gallery.select(F.col(gallery_key), F.col(vector_col)),
-            None,
-            id_col=gallery_key,
-            vector_col=vector_col,
-            keep=1,
-            crow=crow,
+    def residuals(vectors: DataFrame, keep: int) -> DataFrame:
+        # vectors -> their ``keep`` nearest cells -> vec - centroid
+        return (
+            _nearest_centroids(vectors, crow, vector_col, keep)
+            .join(cvecs, on="centroid_id")
+            .select(
+                *[c for c in vectors.columns if c != vector_col],
+                "centroid_id",
+                F.zip_with(
+                    F.transform(vector_col, lambda x: x.cast("double")),
+                    "_cvec",
+                    lambda a, b: a - b,
+                ).alias("_vec"),
+            )
         )
-        .join(cvecs, on="centroid_id")
-        .select(
-            F.col(gallery_key).cast("bigint").alias("gallery_key"),
-            "centroid_id",
-            F.zip_with(
-                F.transform(vector_col, lambda x: x.cast("double")),
-                "_cvec",
-                lambda a, b: a - b,
-            ).alias("_rvec"),
-        )
-    )
 
-    cb = persist_disk(
-        gal_resid.orderBy("gallery_key")
-        .limit(n_codes)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("gallery_key"), F.col("_rvec")))
-            ).alias("_cb")
-        )
-        .select(F.transform("_cb", lambda c: c["_rvec"]).alias("_cb"))
-    )
-
-    g_codes = (
-        gal_resid.crossJoin(F.broadcast(cb)).select(
-            "gallery_key",
-            "centroid_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.array_min(
-                    F.transform(
-                        F.col("_cb"),
-                        lambda c, j: F.struct(
-                            _subspace_sq_dist(F.col("_rvec"), c, s, sub_d).alias("d"),
-                            j.alias("j"),
-                        ),
-                    )
-                )["j"],
-            ).alias("_codes"),
-        )
-    )
-
-    p_adc = (
-        _nearest_centroids(
-            probes.select(
-                F.col(probe_key).alias("probe_key"),
-                F.col(vector_col).alias("_pvec"),
+    # the gallery residuals are referenced by BOTH the codebook
+    # derivation and the encode pass, so stage them once
+    gal = persist_disk(
+        residuals(
+            gallery.select(
+                F.col(gallery_key).cast("bigint").alias("gallery_key"),
+                F.col(vector_col),
             ),
-            None,
-            id_col="probe_key",
-            vector_col="_pvec",
-            keep=nprobe,
-            crow=crow,
-        )
-        .join(cvecs, on="centroid_id")
-        .select(
-            "probe_key",
-            "centroid_id",
-            F.zip_with(
-                F.transform("_pvec", lambda x: x.cast("double")),
-                "_cvec",
-                lambda a, b: a - b,
-            ).alias("_prvec"),
-        )
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "probe_key",
-            "centroid_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.transform(
-                    F.col("_cb"),
-                    lambda c: _subspace_sq_dist(F.col("_prvec"), c, s, sub_d),
-                ),
-            ).alias("_adc"),
+            1,
         )
     )
-
-    adc_dist = F.aggregate(
-        F.zip_with(
-            "_adc", "_codes", lambda a, c: F.element_at(a, (c + 1).cast("int"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    prb = residuals(
+        probes.select(F.col(probe_key).alias("probe_key"), F.col(vector_col)),
+        nprobe,
     )
+    codes, adc = _pq_codec(gal, prb, dim, m, n_codes)
     scored = (
-        _probe_side(p_adc, probe_broadcast)
-        .join(g_codes, on="centroid_id")
-        .select("probe_key", "gallery_key", adc_dist.alias("adc_dist"))
+        F.broadcast(adc)
+        .join(codes, on="centroid_id")
+        .select("probe_key", "gallery_key", _adc_dist())
     )
-    w = W.partitionBy("probe_key").orderBy(F.asc("adc_dist"), F.asc("gallery_key"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_tail(scored, F.asc("adc_dist"), k)
 
 
 def ivfpq_topk_sql(

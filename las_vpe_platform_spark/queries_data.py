@@ -8349,7 +8349,6 @@ def q162_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_centroids(
             emb.select("vec_id", "embedding"),
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
-            id_col="vec_id",
             vector_col="embedding",
         )
     )
@@ -8989,7 +8988,6 @@ def q171_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_centroids(
             emb.select("vec_id", "embedding"),
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
-            id_col="vec_id",
             vector_col="embedding",
         )
     )
@@ -9318,7 +9316,6 @@ def q174_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_centroids(
             emb.select("vec_id", "embedding"),
             cen.selectExpr("centroid_id", "_cvec AS embedding"),
-            id_col="vec_id",
             vector_col="embedding",
         )
     )

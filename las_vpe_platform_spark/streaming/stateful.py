@@ -28,6 +28,50 @@ SESSION_OUTPUT_SCHEMA = (
 SESSION_STATE_SCHEMA = "start long, last long, n long"
 
 
+def _advance_sessions(
+    state: GroupState, batches: Iterator[pd.DataFrame], ts_col: str, gap_us: int
+) -> list[tuple[int, int, int]]:
+    """The session fold of both sessionizers: add one key's new events,
+    in event-time order, to its stored open session (start_us, last_us,
+    n_events); store the session left open and return every session a
+    gap closed."""
+    ts_us: list[int] = []
+    for pdf in batches:
+        ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf[ts_col]))
+    ts_us.sort()
+    if state.exists:
+        start, last, n = state.get
+    else:
+        start = last = ts_us[0]
+        n = 0
+    closed: list[tuple[int, int, int]] = []
+    for t in ts_us:
+        if n > 0 and t - last > gap_us:
+            closed.append((start, last, n))
+            start = t
+            n = 0
+        n += 1
+        last = max(last, t)
+    state.update((start, last, n))
+    return closed
+
+
+def _session_rows(
+    key: tuple[Any, ...], closed: list[tuple[int, int, int]]
+) -> Iterator[pd.DataFrame]:
+    """One output frame (SESSION_OUTPUT_SCHEMA) of ``key``'s closed
+    sessions, or none."""
+    if closed:
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]] * len(closed),
+                "session_start": [pd.Timestamp(s, unit="us") for s, _e, _n in closed],
+                "session_end": [pd.Timestamp(e, unit="us") for _s, e, _n in closed],
+                "n_events": [n for _s, _e, n in closed],
+            }
+        )
+
+
 def sessionize_stream(
     stream: DataFrame,
     key_col: str = "user_id",
@@ -49,33 +93,7 @@ def sessionize_stream(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        ts_us: list[int] = []
-        for pdf in batches:
-            ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf[ts_col]))
-        ts_us.sort()
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start = last = ts_us[0]
-            n = 0
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_us:
-            if n > 0 and t - last > gap_us:
-                closed.append((start, last, n))
-                start = t
-                n = 0
-            n += 1
-            last = max(last, t)
-        state.update((start, last, n))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _e, _n in closed],
-                    "session_end": [pd.Timestamp(e, unit="us") for _s, e, _n in closed],
-                    "n_events": [n for _s, _e, n in closed],
-                }
-            )
+        yield from _session_rows(key, _advance_sessions(state, batches, ts_col, gap_us))
 
     from las_vpe_platform_spark.session import ensure_package_on_workers
 
@@ -89,97 +107,6 @@ def sessionize_stream(
             SESSION_STATE_SCHEMA,
             "append",
             GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-class _SessionProcessor:
-    """StatefulProcessor for :func:`sessionize_stream_tws` — defined at
-    module top level so workers can unpickle it (shipped via
-    ensure_package_on_workers)."""
-
-    def __init__(self, gap_seconds: int):
-        self.gap_us = gap_seconds * 1_000_000
-
-    def init(self, handle) -> None:
-        self.state = handle.getValueState("session", SESSION_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-        ts_us: list[int] = []
-        for pdf in rows:
-            ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf["ts"]))
-        ts_us.sort()
-        if self.state.exists():
-            start, last, n = self.state.get()
-        else:
-            start = last = ts_us[0]
-            n = 0
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_us:
-            if n > 0 and t - last > self.gap_us:
-                closed.append((start, last, n))
-                start = t
-                n = 0
-            n += 1
-            last = max(last, t)
-        self.state.update((start, last, n))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _e, _n in closed],
-                    "session_end": [pd.Timestamp(e, unit="us") for _s, e, _n in closed],
-                    "n_events": [n for _s, _e, n in closed],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stream_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Sessionization on the Spark 4 ``transformWithStateInPandas``
-    API — same semantics as :func:`sessionize_stream` (parity-tested),
-    on the successor of applyInPandasWithState: named state variables,
-    a processor object with an explicit lifecycle, and the RocksDB
-    state store (set ``spark.sql.streaming.stateStore.providerClass``
-    to ``...RocksDBStateStoreProvider`` before starting the query —
-    transformWithState requires it). This is the forward path for
-    beyond-window state (T7) on clusters where state outgrows the
-    default HDFS-backed store.
-
-    Container note: the TWS Python driver worker imports
-    google.protobuf, absent in this image — the parity test
-    (tests/test_streaming.py) is environment-gated exactly like the
-    Kafka integration; the session math here is shared with the fully
-    tested :class:`_SessionProcessor` logic above.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    from las_vpe_platform_spark.session import ensure_package_on_workers
-
-    ensure_package_on_workers(stream.sparkSession)
-
-    # build the concrete processor class here so the module imports
-    # even if a future pyspark changes the ABC surface
-    class Processor(_SessionProcessor, StatefulProcessor):
-        pass
-
-    from pyspark.sql import functions as F
-
-    return (
-        stream.select(F.col(key_col).alias("user_id"), F.col(ts_col).alias("ts"))
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            Processor(gap_seconds),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
         )
     )
 
@@ -212,34 +139,11 @@ def sessionize_stream_event_time(
                     closed.append((start, last, n))
                 state.remove()
         else:
-            ts_us: list[int] = []
-            for pdf in batches:
-                ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf[ts_col]))
-            ts_us.sort()
-            if state.exists:
-                start, last, n = state.get
-            else:
-                start = last = ts_us[0]
-                n = 0
-            for t in ts_us:
-                if n > 0 and t - last > gap_us:
-                    closed.append((start, last, n))
-                    start = t
-                    n = 0
-                n += 1
-                last = max(last, t)
-            state.update((start, last, n))
+            closed = _advance_sessions(state, batches, ts_col, gap_us)
+            _start, last, _n = state.get
             # flush when the event-time watermark passes last + gap
             state.setTimeoutTimestamp(last // 1000 + gap_seconds * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _e, _n in closed],
-                    "session_end": [pd.Timestamp(e, unit="us") for _s, e, _n in closed],
-                    "n_events": [n for _s, _e, n in closed],
-                }
-            )
+        yield from _session_rows(key, closed)
 
     from las_vpe_platform_spark.session import ensure_package_on_workers
 

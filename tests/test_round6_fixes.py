@@ -1,9 +1,7 @@
 """Round-6 regression tests for the ADVICE r5 items.
 
 - maintain_aggregate's negative-count CDC-contract guard
-  (``on_negative``: error vs drop);
-- the ANN probe-broadcast escape hatch (``probe_broadcast=False``
-  must produce identical results through an AQE-decided join).
+  (``on_negative``: error vs drop).
 """
 
 from __future__ import annotations
@@ -113,29 +111,6 @@ def test_s17_emission_rule_is_version_pinned(spark):
         "null_emission_and_no_retro_match, re-verify S17_SQL batch-by-batch "
         "at sf0.001/0.01/0.1, THEN update S17_PINNED_SPARK_MINOR."
     )
-
-
-def test_ann_probe_broadcast_opt_out_same_results(spark, sf_dir):
-    """probe_broadcast=False (the over-budget escape hatch, ADVICE r5)
-    drops the forced broadcast hint and lets AQE pick the join; the
-    ranked results must be identical to the forced-broadcast plan."""
-    from las_vpe_platform_spark.operators.similarity import ivf_topk
-    from las_vpe_platform_spark.operators.staging import unpersist_all
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") % 97 == 0)
-    try:
-        fast = ivf_topk(probes, emb, "vec_id", "vec_id", k=3)
-        slow = ivf_topk(
-            probes, emb, "vec_id", "vec_id", k=3, probe_broadcast=False
-        )
-        assert sorted(
-            (r["probe_key"], r["rank"], r["gallery_key"]) for r in fast.collect()
-        ) == sorted(
-            (r["probe_key"], r["rank"], r["gallery_key"]) for r in slow.collect()
-        )
-    finally:
-        unpersist_all()
 
 
 def test_q136_triplet_invariants(spark, sf_dir):

@@ -42,45 +42,6 @@ def test_local_bridges_have_no_common_neighbor(spark, sf_dir):
         assert r["is_pendant"] == int(min(len(adj[a]), len(adj[b])) == 1)
 
 
-def test_ivf_cell_split_invariants(spark, sf_dir):
-    """Split plan sanity: the two seeds are distinct members of their
-    cell, every member lands on exactly one side, and the number of
-    planned splits is the heaviest-octile count."""
-    from las_vpe_platform_spark.operators.similarity import assign_centroids
-    from las_vpe_platform_spark.operators.staging import unpersist_all
-    from las_vpe_platform_spark.queries_data import (
-        IVF_CENTROID_MOD,
-        Q162_SPLIT_DIV,
-        q162_ivf_cell_split,
-    )
-    from las_vpe_platform_spark.sources.tables import load_table
-
-    out = q162_ivf_cell_split(spark, sf_dir).collect()
-    unpersist_all()
-    emb = load_table(spark, sf_dir, "embeddings")
-    cen = emb.filter(F.col("vec_id") % IVF_CENTROID_MOD == 0).selectExpr(
-        "vec_id AS centroid_id", "embedding"
-    )
-    assigned = assign_centroids(
-        emb.select("vec_id", "embedding"), cen, id_col="vec_id", vector_col="embedding"
-    )
-    members: dict = {}
-    for r in assigned.collect():
-        members.setdefault(r["centroid_id"], set()).add(r["vec_id"])
-    unpersist_all()
-    n_cells = len(members)
-    # cells with >= 2 members rank into the octile; singletons would
-    # drop at the seed_b inner join — count the expected non-degenerate
-    expected_splits = -(-n_cells // Q162_SPLIT_DIV)
-    assert len(out) <= expected_splits
-    for r in out:
-        cell = members[r["centroid_id"]]
-        assert r["seed_a"] in cell and r["seed_b"] in cell
-        assert r["seed_a"] != r["seed_b"]
-        assert r["n_to_a"] + r["n_to_b"] == r["n_members"] == len(cell)
-        assert r["n_to_a"] >= 1 and r["n_to_b"] >= 1  # each seed sides with itself
-
-
 def test_compaction_plan_partitions_inventory(spark, sf_dir):
     """Bins partition the file inventory exactly: byte totals add up,
     file ranges are contiguous and non-overlapping in file_id order."""
@@ -371,9 +332,7 @@ def test_q171_merge_cut_and_targets(spark, sf_dir):
         "vec_id", "centroid_id"
     )
     occ: dict = {}
-    for r in assign_centroids(
-        emb, cen, id_col="vec_id", vector_col="embedding"
-    ).collect():
+    for r in assign_centroids(emb, cen, vector_col="embedding").collect():
         occ[r["centroid_id"]] = occ.get(r["centroid_id"], 0) + 1
     unpersist_all()
     order = sorted(occ, key=lambda c: (occ[c], c))
@@ -491,7 +450,6 @@ def test_q174_outliers_match_bruteforce(spark, sf_dir):
         emb.filter(F.col("vec_id") % IVF_CENTROID_MOD == 0).withColumnRenamed(
             "vec_id", "centroid_id"
         ),
-        id_col="vec_id",
         vector_col="embedding",
     ).collect():
         cells.setdefault(r["centroid_id"], []).append(r["vec_id"])

@@ -288,64 +288,6 @@ def test_stateful_sessionization(spark, events_dir):
     assert got.count() > 0
 
 
-def test_stateful_sessionization_tws_parity(spark, events_dir):
-    """The transformWithStateInPandas sessionizer (Spark 4 successor
-    API, RocksDB state store) produces byte-identical closed sessions
-    to the applyInPandasWithState one.
-
-    Environment-gated like the Kafka integration: the TWS Python
-    driver worker imports google.protobuf, which this container lacks
-    (no pip allowed). The processor's session math is the SAME code
-    path as the tested applyInPandasWithState sessionizer.
-    """
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithStateInPandas needs the protobuf package "
-            "(absent in this container; no pip installs allowed)"
-        )
-    from las_vpe_platform_spark.streaming.stateful import (
-        sessionize_stream,
-        sessionize_stream_tws,
-    )
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = file_stream(spark, events_dir, EVENTS_SCHEMA, max_files_per_trigger=999)
-        got_tws = run_to_completion(
-            sessionize_stream_tws(stream, "user_id", "ts", gap_seconds=1800),
-            "sessions_tws_t",
-            output_mode="append",
-        )
-        rows_tws = sorted(
-            (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-            for r in got_tws.collect()
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-    stream = file_stream(spark, events_dir, EVENTS_SCHEMA, max_files_per_trigger=999)
-    got_aip = run_to_completion(
-        sessionize_stream(stream, "user_id", "ts", gap_seconds=1800),
-        "sessions_aip_t",
-        output_mode="append",
-    )
-    rows_aip = sorted(
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in got_aip.collect()
-    )
-    assert rows_tws == rows_aip and len(rows_tws) > 0
-
-
 def test_streaming_tracking_pipeline(spark, tmp_path):
     """The tracking stage on a STREAM of videos (the reference's actual
     operating mode: HDFSVideoTrackingStream) — mapInPandas UDTF applied

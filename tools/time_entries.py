@@ -40,7 +40,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plan-suffix", default=None)
-    ap.add_argument("--plans-round", default="r13")
+    ap.add_argument("--plans-round", default="r14")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
