@@ -67,7 +67,6 @@ def pairwise_similarity_topk(
     gallery_key: str,
     vector_col: str = "embedding",
     k: int = 10,
-    probe_broadcast_max: int | None = None,
 ) -> DataFrame:
     """Probe-vs-gallery similarity ranking (J9 + W1/W2).
 
@@ -104,8 +103,7 @@ def pairwise_similarity_topk(
     above-contract invocation accretes two corpus-sized disk blocks.
     """
     return _stream_matmul_topk(
-        probes, gallery, probe_key, gallery_key, vector_col, k,
-        label_col=None, probe_broadcast_max=probe_broadcast_max,
+        probes, gallery, probe_key, gallery_key, vector_col, k, label_col=None
     )
 
 
@@ -311,7 +309,6 @@ def _stream_matmul_topk(
     vector_col: str,
     k: int,
     label_col: str | None,
-    probe_broadcast_max: int | None = None,
 ) -> DataFrame:
     """The shared BLAS ranking kernel (see pairwise_similarity_topk for
     the execution-shape rationale; hard_negatives_topk delegates here
@@ -320,8 +317,8 @@ def _stream_matmul_topk(
     Probe-count ladder (VERDICT r10 #3): the probe side is collected
     via ``limit(max + 1)`` — for the common few-probe case that IS the
     full probe set at zero extra jobs, and it structurally caps what
-    the driver can ever receive. At or below ``probe_broadcast_max``
-    (default :data:`PROBE_BROADCAST_MAX`, the SCALE.md contract) the
+    the driver can ever receive. At or below
+    :data:`PROBE_BROADCAST_MAX` (the SCALE.md contract) the
     collected matrix broadcasts and the gallery streams through
     ``mapInPandas`` with no exchange; above it, the corpus-probe case
     (q176's leave-one-out self-ranking at 100 TB) routes to
@@ -350,8 +347,6 @@ def _stream_matmul_topk(
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if probe_broadcast_max is None:
-        probe_broadcast_max = PROBE_BROADCAST_MAX
     spark = probes.sparkSession
     # both ladder paths pickle a reference to the module-level
     # _topk_block kernel; external-harness sessions that never
@@ -378,13 +373,13 @@ def _stream_matmul_topk(
     w = W.partitionBy("probe_key").orderBy(F.desc("similarity"), F.asc("gallery_key"))
 
     p_sel = probes.select(*p_cols)
-    p_rows = p_sel.limit(probe_broadcast_max + 1).collect()
+    p_rows = p_sel.limit(PROBE_BROADCAST_MAX + 1).collect()
     if not p_rows:
         from las_vpe_platform_spark.sources.tables import inline_rows
 
         empty = inline_rows(spark, [], cand_schema)
         return empty.withColumn("rank", F.lit(1)).filter(F.lit(False))
-    if len(p_rows) > probe_broadcast_max:
+    if len(p_rows) > PROBE_BROADCAST_MAX:
         # above the broadcast contract: corpus-sized probe set — the
         # partial collect is discarded and the blocked grid takes over
         candidates = _blocked_candidates(p_sel, g, k, exclude_mode, cand_schema)

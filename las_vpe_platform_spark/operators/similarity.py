@@ -680,7 +680,6 @@ def hard_negatives_topk(
     label_col: str,
     vector_col: str = "embedding",
     k: int = 5,
-    probe_broadcast_max: int | None = None,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for each probe, the k gallery
     vectors MOST similar to it among those carrying a DIFFERENT label
@@ -697,8 +696,7 @@ def hard_negatives_topk(
     from las_vpe_platform_spark.operators.joins import _stream_matmul_topk
 
     return _stream_matmul_topk(
-        probes, gallery, probe_key, gallery_key, vector_col, k,
-        label_col=label_col, probe_broadcast_max=probe_broadcast_max,
+        probes, gallery, probe_key, gallery_key, vector_col, k, label_col=label_col
     )
 
 

@@ -15,6 +15,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,12 +74,23 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
-# landed-source cache: re-landing the source table is a pure
-# deterministic function of sf_dir, so every one-shot streaming entry
-# can share one parquet copy per process — each query still opens its
-# OWN stream with a fresh checkpoint/sink over the static dir, so
-# stream semantics are untouched; only the redundant re-write goes.
+# The one per-process landing cache, keyed by WHAT is landed (table,
+# sf_dir, filter, file count, layout): re-landing a source is a pure
+# deterministic function of that key, so entries landing the same bytes
+# share one parquet copy — each query still opens its OWN stream with a
+# fresh checkpoint/sink over the static dir, so stream semantics are
+# untouched; only the redundant re-write goes. Read only through _land.
 _LANDED: dict[tuple, str] = {}
+
+
+def _land(key: tuple, prefix: str, write: Callable[[str], None]) -> str:
+    """The landed dir for ``key``: ``write(dir)`` fills a fresh scratch
+    dir the first time ``key`` is asked for; later calls return it."""
+    if key not in _LANDED:
+        src = _scratch_dir(prefix)
+        write(src)
+        _LANDED[key] = src
+    return _LANDED[key]
 
 
 def _events_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,6 +110,7 @@ def _events_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts_micros", "user_id", "event_type", "value", "props")
     )
 
+
 def _landed_events8(
     spark: SparkSession, sf_dir: str, event_types: tuple[str, ...] | None = None
 ) -> str:
@@ -106,15 +119,30 @@ def _landed_events8(
     ``event_types`` lands only those types (the landing-zone filter —
     cheaper than filtering after the stream scan); the cache key
     includes it so filtered and full landings never alias."""
-    key = ("events8", sf_dir, event_types)
-    if key not in _LANDED:
-        src = _scratch_dir("events8_")
+
+    def write(src: str) -> None:
         raw = _events_micros(spark, sf_dir)
         if event_types is not None:
             raw = raw.filter(F.col("event_type").isin(*event_types))
         raw.coalesce(8).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
-    return _LANDED[key]
+
+    return _land(("events8", sf_dir, event_types), "events8_", write)
+
+
+def _landed_docs(
+    spark: SparkSession, sf_dir: str, cols: tuple[str, ...], n_files: int
+) -> str:
+    """The documents table's ``cols`` re-landed as ``n_files`` parquet
+    files, shared per process."""
+    return _land(
+        ("docs", sf_dir, cols, n_files),
+        "docs_",
+        lambda src: load_table(spark, sf_dir, "documents")
+        .select(*cols)
+        .coalesce(n_files)
+        .write.mode("overwrite")
+        .parquet(src),
+    )
 
 
 @contextlib.contextmanager
@@ -137,6 +165,79 @@ def _stream_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _drain(
+    df: DataFrame, prefix: str, output_mode: str, partitions: int = 8
+) -> DataFrame:
+    """Run the streaming frame ``df`` over all available input into a
+    uniquely named memory sink, ``partitions`` state/shuffle partitions
+    wide, and return the sink table."""
+    with _stream_partitions(df.sparkSession, partitions):
+        return run_to_completion(
+            df, f"{prefix}_{uuid.uuid4().hex[:8]}", output_mode=output_mode
+        )
+
+
+def _drain_batches(
+    stream: DataFrame,
+    step: Callable[[DataFrame, int], None],
+    prefix: str,
+    partitions: int = 8,
+) -> None:
+    """Run ``step(batch_df, epoch_id)`` (foreachBatch) on every
+    micro-batch of ``stream`` until the available input is drained.
+    No stateful operator precedes any foreachBatch sink here, so the
+    output mode cannot matter and stays Spark's default (append)."""
+    with _stream_partitions(stream.sparkSession, partitions):
+        q = (
+            stream.writeStream.foreachBatch(step)
+            .queryName(f"{prefix}_{uuid.uuid4().hex[:8]}")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
+def _fold_batches(
+    stream: DataFrame,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+    prefix: str,
+    partitions: int = 8,
+) -> DataFrame:
+    """Versioned read-modify-write over ``stream`` (the Delta-MERGE
+    shape without Delta): micro-batch N writes ``merge(stored, batch)``
+    as ``v{N}``, where ``stored`` is the previous version (None before
+    the first batch), and the last version is returned. Micro-batches
+    run sequentially, so a batch never reads the directory it writes
+    (the idempotent-sink discipline of K3). Raises ``ValueError``
+    naming ``prefix`` when no batch arrived."""
+    spark = stream.sparkSession
+    out_root = _scratch_dir(f"{prefix}_fold_")
+    versions: list[str] = []
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        stored = spark.read.parquet(versions[-1]) if versions else None
+        path = f"{out_root}/v{epoch_id}"
+        merge(stored, batch_df).write.mode("overwrite").parquet(path)
+        versions.append(path)
+
+    _drain_batches(stream, fold, prefix, partitions)
+    if not versions:
+        raise ValueError(f"{prefix}: the stream delivered no micro-batch to fold")
+    return spark.read.parquet(versions[-1])
+
+
+def _add_counts(
+    stored: DataFrame | None, fresh: DataFrame, keys: list[str], col: str
+) -> DataFrame:
+    """The additive merge: ``fresh`` counts folded into ``stored`` by
+    summing ``col`` per ``keys`` — exact for any batching."""
+    if stored is None:
+        return fresh
+    return stored.unionByName(fresh).groupBy(*keys).agg(F.sum(col).alias(col))
+
+
 # Watermarks require an absolute (LTZ) event-time column, so the
 # streaming path keeps epoch micros end-to-end: source carries the raw
 # long, the stream converts to TIMESTAMP, and outputs are epoch ints —
@@ -153,52 +254,65 @@ RAW_EVENTS_SCHEMA = T.StructType(
 )
 
 
-def _sliced_parquet_stream(
+def _events_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """A file stream of landed events with ``ts`` rebuilt from
+    ``ts_micros``."""
+    return file_stream(
+        spark, path, RAW_EVENTS_SCHEMA, max_files_per_trigger
+    ).withColumn("ts", F.timestamp_micros("ts_micros"))
+
+
+def _land_slices(
     spark: SparkSession,
     raw: DataFrame,
     prefix: str,
+    cache_key: tuple,
     n_slices: int = 2,
-    cache_key: tuple | None = None,
-    max_files_per_trigger: int = 1,
-):
-    """Land ``raw`` (events with ``ts_micros``) as ``n_slices``
-    time-ordered parquet slices and open them as a one-file-per-trigger
-    stream — so micro-batches arrive in non-decreasing event-time
-    ranges, the arrival order the stateful operators contract for
-    (sequential writes -> increasing mtimes -> batch order).
+) -> str:
+    """Land ``raw`` (events with ``ts_micros``) once per process as
+    ``n_slices`` time-ordered parquet slices and return their glob —
+    opened one file per trigger, micro-batches then arrive in
+    non-decreasing event-time ranges, the arrival order the stateful
+    operators contract for (sequential writes -> increasing mtimes ->
+    batch order). ``raw`` must be a pure function of ``cache_key``
+    (e.g. ("events", sf_dir)), which names the landing."""
 
-    ``cache_key``: callers whose ``raw`` is a pure function of the key
-    (e.g. ("events_sliced", sf_dir)) share one landed copy per process
-    — the stateful entries s03/s10 slice the identical table."""
-    full_key = None if cache_key is None else ("sliced", n_slices) + cache_key
-    if full_key is not None and full_key in _LANDED:
-        src = _LANDED[full_key]
-    else:
+    def write(src: str) -> None:
         lo, hi = raw.agg(F.min("ts_micros"), F.max("ts_micros")).first()
         if lo is None or hi is None:  # min/max of zero rows is NULL
             raise ValueError(
                 "_sliced_parquet_stream: input has no rows — cannot derive "
                 "time slices (check the sf_dir / upstream filters)"
             )
-        src = _scratch_dir(prefix)
         step = (hi - lo) // n_slices + 1
         for i in range(n_slices):
             raw.filter(
                 (F.col("ts_micros") >= lo + i * step)
                 & (F.col("ts_micros") < lo + (i + 1) * step)
             ).coalesce(1).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
-        if full_key is not None:
-            _LANDED[full_key] = src
-    return (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        # callers whose per-batch semantics are split-invariant (proven
-        # by property test or pure-function-of-the-batch-unit contract)
-        # may batch several time-ordered slices per trigger — the same
-        # throughput knob a cluster turns via maxOffsetsPerTrigger
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .option("latestFirst", "false")
-        .parquet(f"{src}/*")
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
+
+    return f"{_land(('sliced', n_slices) + cache_key, prefix, write)}/*"
+
+
+def _sliced_parquet_stream(
+    spark: SparkSession,
+    raw: DataFrame,
+    prefix: str,
+    cache_key: tuple,
+    n_slices: int = 2,
+    max_files_per_trigger: int = 1,
+) -> DataFrame:
+    """The :func:`_land_slices` landing opened as an events stream.
+    Callers whose per-batch semantics are split-invariant (proven by
+    property test or pure-function-of-the-batch-unit contract) may
+    batch several time-ordered slices per trigger — the same
+    throughput knob a cluster turns via maxOffsetsPerTrigger."""
+    return _events_stream(
+        spark,
+        _land_slices(spark, raw, prefix, cache_key, n_slices),
+        max_files_per_trigger,
     )
 
 
@@ -213,23 +327,18 @@ def s01_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # incremental multi-trigger processing (the many-trigger case is
     # covered by tests/test_streaming.py) without paying 8 triggers of
     # harness overhead in the bench
-    src = _landed_events8(spark, sf_dir)
-    stream = file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4).withColumn(
-        "ts", F.timestamp_micros("ts_micros")
-    )
+    stream = _events_stream(spark, _landed_events8(spark, sf_dir), 4)
     agg = windowed_counts(stream, "ts", ["event_type"], "5 minutes", "10 minutes")
-    name = f"s01_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(
-            agg.select(
-                # epoch seconds: absolute, identical in every session TZ
-                F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
-                "event_type",
-                "n",
-            ),
-            name,
-            output_mode="complete",
-        )
+    return _drain(
+        agg.select(
+            # epoch seconds: absolute, identical in every session TZ
+            F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
+            "event_type",
+            "n",
+        ),
+        "s01",
+        "complete",
+    )
 
 
 S01_SQL = """
@@ -246,16 +355,11 @@ def s02_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-state behavior itself is pytest-covered)."""
     from las_vpe_platform_spark.streaming.engine import dedup_stream
 
-    src = _landed_events8(spark, sf_dir)
-    stream = file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4).withColumn(
-        "ts", F.timestamp_micros("ts_micros")
-    )
+    stream = _events_stream(spark, _landed_events8(spark, sf_dir), 4)
     deduped = dedup_stream(
         stream, ["user_id", "event_type"], "ts", delay="8760 hours"
     ).select("user_id", "event_type")
-    name = f"s02_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(deduped, name, output_mode="append")
+    return _drain(deduped, "s02", "append")
 
 
 S02_SQL = """
@@ -280,15 +384,12 @@ def s03_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from las_vpe_platform_spark.streaming.stateful import sessionize_stream
 
-    raw = _events_micros(spark, sf_dir)
     stream = _sliced_parquet_stream(
-        spark, raw, "s03_events_", cache_key=("events", sf_dir),
-        max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), max_files_per_trigger=2,
     )
     sessions = sessionize_stream(stream, "user_id", "ts", gap_seconds=1800)
-    name = f"s03_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        closed = run_to_completion(sessions, name, output_mode="append")
+    closed = _drain(sessions, "s03", "append")
     return closed.select(
         "user_id",
         F.unix_micros("session_start").alias("start_us"),
@@ -343,18 +444,13 @@ def s04_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # belongs at the landing zone, not after the stream scan
     src = _landed_events8(spark, sf_dir, event_types=("click", "purchase"))
 
-    def typed_stream():
-        return file_stream(
-            spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4
-        ).withColumn("ts", F.timestamp_micros("ts_micros"))
-
     clicks = (
-        typed_stream()
+        _events_stream(spark, src, 4)
         .filter(F.col("event_type") == "click")
         .select("user_id", F.col("event_id").alias("click_id"), "ts")
     )
     purchases = (
-        typed_stream()
+        _events_stream(spark, src, 4)
         .filter(F.col("event_type") == "purchase")
         .select(
             "user_id",
@@ -373,9 +469,7 @@ def s04_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="8760 hours",
     )
     pairs = joined.select(clicks["user_id"], "click_id", "purchase_id")
-    name = f"s04_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(pairs, name, output_mode="append")
+    return _drain(pairs, "s04", "append")
 
 
 S04_SQL = """
@@ -408,31 +502,28 @@ def s05_stream_demux_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.routing import demux
 
     src = _landed_events8(spark, sf_dir, event_types=("click", "purchase"))
-    stream = file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4).withColumn(
-        "ts", F.timestamp_micros("ts_micros")
-    )
+    stream = _events_stream(spark, src, 4)
     branches = demux(stream, "event_type", ["click", "purchase"])
     outs = []
-    with _stream_partitions(spark):
-        for etype, branch in branches.items():
-            summed = (
-                branch.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "10 minutes"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("value").alias("sum_value"),
-                )
+    for etype, branch in branches.items():
+        summed = (
+            branch.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("value").alias("sum_value"),
             )
-            tbl = run_to_completion(
-                summed.select(
-                    F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
-                    "n",
-                    "sum_value",
-                ),
-                f"s05_{etype}_{uuid.uuid4().hex[:8]}",
-                output_mode="complete",
-            )
-            outs.append(tbl.withColumn("branch", F.lit(etype)))
+        )
+        tbl = _drain(
+            summed.select(
+                F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
+                "n",
+                "sum_value",
+            ),
+            f"s05_{etype}",
+            "complete",
+        )
+        outs.append(tbl.withColumn("branch", F.lit(etype)))
     unioned = outs[0].unionByName(outs[1])
     return unioned.select(
         "branch",
@@ -479,13 +570,7 @@ def s06_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("_sv"),
     )
-    name = f"s06_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(
-            agg.select("segment", "n_events", "_sv"),
-            name,
-            output_mode="complete",
-        )
+    out = _drain(agg.select("segment", "n_events", "_sv"), "s06", "complete")
     return out.select("segment", "n_events", pround("_sv", 4).alias("sum_value"))
 
 
@@ -534,9 +619,7 @@ def s07_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed(stream), key_cols, d=S07_CMS_D, w=S07_CMS_W
     )
     sketch_stream = cms_sketch(hashed_stream, d=S07_CMS_D)
-    name = f"s07_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        sketch = run_to_completion(sketch_stream, name, output_mode="complete")
+    sketch = _drain(sketch_stream, "s07", "complete")
     # query side: candidate keys from the landed table (batch), against
     # the stream-built sketch
     cand = cms_bucketed(
@@ -593,8 +676,7 @@ def s08_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.functions.text import content_fingerprint
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _scratch_dir("s08_docs_")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
+    src = _landed_docs(spark, sf_dir, ("doc_id", "text"), 8)
     stored_fps = (
         docs.filter(F.col("doc_id") % 3 == 0)
         .select(content_fingerprint("text").alias("fingerprint"))
@@ -614,9 +696,7 @@ def s08_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .select("fingerprint")
     )
-    name = f"s08_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(fresh, name, output_mode="append")
+    return _drain(fresh, "s08", "append")
 
 
 S08_SQL = r"""
@@ -645,19 +725,14 @@ S09_M = 64
 def s09_stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.aggregates import hll_bucketed, hll_finish
 
-    src = _landed_events8(spark, sf_dir)
-    stream = file_stream(
-        spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4
-    ).withColumn("ts", F.timestamp_micros("ts_micros"))
+    stream = _events_stream(spark, _landed_events8(spark, sf_dir), 4)
     hashed = hll_bucketed(
         stream.select("ts", "user_id"), "user_id", m=S09_M, keep_cols=["ts"]
     )
     regs = hashed.groupBy(
         F.window("ts", "5 minutes").alias("window"), F.col("_bucket")
     ).agg(F.max("_rho").alias("_r"))
-    name = f"s09_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        sink = run_to_completion(regs, name, output_mode="complete")
+    sink = _drain(regs, "s09", "complete")
     per_window = sink.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
         "_bucket",
@@ -691,15 +766,11 @@ S09_SQL = _s09_sql()
 def s10_stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.streaming.stateful import locf_stream
 
-    raw = _events_micros(spark, sf_dir)
     stream = _sliced_parquet_stream(
-        spark, raw, "s10_events_", cache_key=("events", sf_dir),
-        max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), max_files_per_trigger=2,
     )
-    filled = locf_stream(stream, fill_type="click")
-    name = f"s10_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(filled, name, output_mode="append")
+    out = _drain(locf_stream(stream, fill_type="click"), "s10", "append")
     return out.select(
         "event_id",
         "user_id",
@@ -731,19 +802,12 @@ S11_TOPK = 3
 
 
 def s11_stream_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W2
-
-    src = _landed_events8(spark, sf_dir)
-    stream = file_stream(
-        spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4
-    ).withColumn("ts", F.timestamp_micros("ts_micros"))
+    stream = _events_stream(spark, _landed_events8(spark, sf_dir), 4)
     counts = stream.groupBy(
         F.window("ts", "10 minutes").alias("window"), F.col("event_type")
     ).agg(F.count(F.lit(1)).alias("n"))
-    name = f"s11_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        sink = run_to_completion(counts, name, output_mode="complete")
-    w = W2.partitionBy("window_start_epoch").orderBy(F.desc("n"), F.asc("event_type"))
+    sink = _drain(counts, "s11", "complete")
+    w = W.partitionBy("window_start_epoch").orderBy(F.desc("n"), F.asc("event_type"))
     return (
         sink.select(
             F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
@@ -783,15 +847,11 @@ def s12_stream_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two formulations must agree exactly)."""
     from las_vpe_platform_spark.streaming.stateful import trigram_stream
 
-    raw = _events_micros(spark, sf_dir)
     stream = _sliced_parquet_stream(
-        spark, raw, "s12_events_", cache_key=("events", sf_dir),
-        max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), max_files_per_trigger=2,
     )
-    tri = trigram_stream(stream)
-    name = f"s12_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        sink = run_to_completion(tri, name, output_mode="append")
+    sink = _drain(trigram_stream(stream), "s12", "append")
     return (
         sink.groupBy("e1", "e2", "e3")
         .agg(
@@ -868,17 +928,6 @@ def ivf_assign_cells(
     )
 
 
-def _landed_embeddings4(spark: SparkSession, sf_dir: str) -> str:
-    key = ("embeddings4", sf_dir)
-    if key not in _LANDED:
-        src = _scratch_dir("emb4_")
-        load_table(spark, sf_dir, "embeddings").coalesce(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _LANDED[key] = src
-    return _LANDED[key]
-
-
 def s13_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF cell assignment — the ingest half of the q29/q70
     ANN index run continuously: each arriving embedding is assigned to
@@ -905,14 +954,19 @@ def s13_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    src = _landed_embeddings4(spark, sf_dir)
+    src = _land(
+        ("embeddings4", sf_dir),
+        "emb4_",
+        lambda d: load_table(spark, sf_dir, "embeddings")
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(d),
+    )
     stream = file_stream(spark, src, EMBEDDINGS_SCHEMA, max_files_per_trigger=2)
     cells = ivf_assign_cells(
         stream, [(r["vec_id"], list(r["embedding"])) for r in cen]
     )
-    name = f"s13_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        sink = run_to_completion(cells, name, output_mode="complete")
+    sink = _drain(cells, "s13", "complete")
     return sink.select(
         "centroid_id",
         "n_assigned",
@@ -996,22 +1050,14 @@ def s14_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _landed_events8(spark, sf_dir)
 
     def typed_stream():
-        return file_stream(
-            spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4
-        )
+        return file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4)
 
-    survivors_s = quantile_survivors(typed_stream())
-    counts_s = typed_stream().groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n")
+    survivors = _drain(quantile_survivors(typed_stream()), "s14_surv", "append")
+    counts = _drain(
+        typed_stream().groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
+        "s14_cnt",
+        "complete",
     )
-    sfx = uuid.uuid4().hex[:8]
-    with _stream_partitions(spark):
-        survivors = run_to_completion(
-            survivors_s, f"s14_surv_{sfx}", output_mode="append"
-        )
-        counts = run_to_completion(
-            counts_s, f"s14_cnt_{sfx}", output_mode="complete"
-        )
     agg = survivors.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("sample_n"),
         pround(F.expr("percentile(value, 0.5)"), 6).alias("p50_est"),
@@ -1058,15 +1104,11 @@ GROUP BY s.event_type, c.n
 def s15_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.streaming.stateful import anomaly_stream
 
-    raw = _events_micros(spark, sf_dir)
     stream = _sliced_parquet_stream(
-        spark, raw, "s15_events_", cache_key=("events", sf_dir),
-        max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), max_files_per_trigger=2,
     )
-    flagged = anomaly_stream(stream)
-    name = f"s15_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(flagged, name, output_mode="append")
+    out = _drain(anomaly_stream(stream), "s15", "append")
     return out.select(
         "event_id", "event_type", "value", "n_prev", "deviation", "sd_prev"
     )
@@ -1112,21 +1154,23 @@ WHERE n_prev >= 30
 S16_GAP_US = 1_800_000_000
 
 
-def s16_stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = _events_micros(spark, sf_dir)
-    stream = _sliced_parquet_stream(
-        spark, raw, "s16_events_", cache_key=("events", sf_dir)
-    )
-    agg = (
+def native_sessions(stream: DataFrame) -> DataFrame:
+    """Per-user 30-minute session windows over an events stream with
+    ``ts``: Spark's own merge-capable session-window aggregate under a
+    0-second watermark."""
+    return (
         stream.withWatermark("ts", "0 seconds")
-        .groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
-        )
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
-    name = f"s16_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(agg, name, output_mode="append")
+
+
+def s16_stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    stream = _sliced_parquet_stream(
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir),
+    )
+    out = _drain(native_sessions(stream), "s16", "append")
     return out.select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("session_start_us"),
@@ -1209,16 +1253,19 @@ def s17_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path and stop driving the mid-stream eviction semantics the
     oracle pins.
     """
-    raw = _events_micros(spark, sf_dir)
+    src = _land_slices(
+        spark, _events_micros(spark, sf_dir), "events_sliced_", ("events", sf_dir)
+    )
+    return _drain(s17_build_stream(spark, src), "s17", "append")
 
-    def side():
-        # same 2-slice time-ordered landing as s16 (shared per process)
-        return _sliced_parquet_stream(
-            spark, raw, "s17_events_", cache_key=("events_s17", sf_dir)
-        )
 
+def _click_purchase_join(spark: SparkSession, src: str, how: str) -> DataFrame:
+    """Clicks joined to the purchases of the same user inside the
+    following S17_ATTR_HOURS, each side its own stream over ``src``
+    watermarked at 0 s — the s17 (left outer) and s20 (full outer)
+    stream-stream joins."""
     clicks = (
-        side()
+        _events_stream(spark, src)
         .filter(F.col("event_type") == "click")
         .select(
             "user_id",
@@ -1228,7 +1275,7 @@ def s17_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("c_ts", "0 seconds")
     )
     purchases = (
-        side()
+        _events_stream(spark, src)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1237,22 +1284,24 @@ def s17_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("p_ts", "0 seconds")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {S17_ATTR_HOURS} HOURS")),
-        "leftOuter",
+        how,
     )
-    out = joined.select(
+
+
+def s17_build_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The s17 stream over landed event slices ``src`` — shared by the
+    catalog entry and the PLANS.md capturer (unstarted plan)."""
+    return _click_purchase_join(spark, src, "leftOuter").select(
         "user_id",
         "click_id",
         "purchase_id",
         F.unix_micros("c_ts").alias("click_us"),
     )
-    name = f"s17_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(out, name, output_mode="append")
 
 
 S17_SQL = f"""
@@ -1319,12 +1368,20 @@ def s18_stream_scd2_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _landed_events8(spark, sf_dir, event_types=("click", "purchase"))
+    return _drain(s18_build_stream(spark, src, dim), "s18", "append")
+
+
+def s18_build_stream(spark: SparkSession, src: str, dim: DataFrame) -> DataFrame:
+    """The s18 stream: landed clicks under ``src`` LEFT joined to the
+    SCD2 dimension ``dim`` (d_user, tier, valid_from_us, valid_to_us)
+    row valid at each click — shared by the catalog entry, its plan
+    test and the PLANS.md capturer (unstarted plan)."""
     clicks = (
         file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4)
         .filter(F.col("event_type") == "click")
         .select("event_id", "user_id", F.col("ts_micros").alias("click_us"))
     )
-    enriched = clicks.join(
+    return clicks.join(
         F.broadcast(dim),
         (F.col("user_id") == F.col("d_user"))
         & (F.col("click_us") >= F.col("valid_from_us"))
@@ -1334,9 +1391,6 @@ def s18_stream_scd2_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left",
     ).select("event_id", "user_id", "click_us", "tier")
-    name = f"s18_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(enriched, name, output_mode="append")
 
 
 S18_SQL = """
@@ -1398,42 +1452,40 @@ def s19_stream_lsh_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.staging import persist_disk
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _scratch_dir("s19_docs_")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    kw = dict(id_col="doc_id", text_col="text", shingle_k=2,
-              num_hashes=16, bands=4)
     stored_banded = persist_disk(
-        banded_signatures(docs.filter(F.col("doc_id") % 3 == 0), **kw)
+        banded_signatures(docs.filter(F.col("doc_id") % 3 == 0), **S19_BANDING)
         .selectExpr("doc_id_ AS id_stored", "band")
     )
     out_dir = _scratch_dir("s19_pairs_")
 
     def probe_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        incoming = banded_signatures(
-            batch_df.select("doc_id", "text"), **kw
-        ).selectExpr("doc_id_ AS id_in", "band")
-        (
-            incoming.join(stored_banded, on="band")
-            .filter(F.col("id_in") != F.col("id_stored"))
-            .select("id_in", "id_stored")
-            .distinct()
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        s19_step(batch_df, stored_banded).write.mode("append").parquet(out_dir)
 
+    src = _landed_docs(spark, sf_dir, ("doc_id", "text"), 8)
     stream = file_stream(spark, src, RAW_DOCS_SCHEMA, max_files_per_trigger=4)
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe_batch)
-            .outputMode("append")
-            .queryName(f"s19_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain_batches(stream, probe_batch, "s19")
     return spark.read.parquet(out_dir).distinct()
+
+
+S19_BANDING = dict(id_col="doc_id", text_col="text", shingle_k=2,
+                   num_hashes=16, bands=4)
+
+
+def s19_step(batch_df: DataFrame, stored_banded: DataFrame) -> DataFrame:
+    """The s19 foreachBatch body: the batch's documents banded and
+    probed against the stored band index (id_stored, band) — the
+    (incoming, stored) collision alerts, self-pairs excluded."""
+    from las_vpe_platform_spark.operators.dedup import banded_signatures
+
+    incoming = banded_signatures(
+        batch_df.select("doc_id", "text"), **S19_BANDING
+    ).selectExpr("doc_id_ AS id_in", "band")
+    return (
+        incoming.join(stored_banded, on="band")
+        .filter(F.col("id_in") != F.col("id_stored"))
+        .select("id_in", "id_stored")
+        .distinct()
+    )
 
 
 def _s19_sql() -> str:
@@ -1476,50 +1528,22 @@ def s20_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantics under test and need >= 3 watermark advances; a
     single data trigger would demote the entry to final-flush only.
     """
-    raw = _events_micros(spark, sf_dir)
+    src = _land_slices(
+        spark, _events_micros(spark, sf_dir), "events_sliced_", ("events", sf_dir)
+    )
+    return _drain(s20_build_stream(spark, src), "s20", "append")
 
-    def side():
-        return _sliced_parquet_stream(
-            spark, raw, "s20_events_", cache_key=("events_s20", sf_dir)
-        )
 
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "0 seconds")
-    )
-    purchases = (
-        side()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {S17_ATTR_HOURS} HOURS")),
-        "fullOuter",
-    )
-    out = joined.select(
+def s20_build_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The s20 stream over landed event slices ``src`` — shared by the
+    catalog entry and the PLANS.md capturer (unstarted plan)."""
+    return _click_purchase_join(spark, src, "fullOuter").select(
         F.coalesce("user_id", "p_user").alias("uid"),
         "click_id",
         "purchase_id",
         F.unix_micros("c_ts").alias("click_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
     )
-    name = f"s20_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(out, name, output_mode="append")
 
 
 S20_SQL = f"""
@@ -1564,49 +1588,28 @@ def s21_stream_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory being written (the idempotent-sink discipline of K3).
     """
     from las_vpe_platform_spark.operators.maintenance import maintain_aggregate
+    from las_vpe_platform_spark.sources.tables import inline_rows
 
-    src = _landed_events8(spark, sf_dir)
-    out_root = _scratch_dir("s21_agg_")
-    state = {"path": None}
-
-    def fold_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def merge(stored: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         changes = batch_df.selectExpr(
             "user_id",
             "'I' AS op",
             "CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents",
         )
-        if state["path"] is None:
-            from las_vpe_platform_spark.sources.tables import inline_rows
-
+        if stored is None:
             # zero-task empty LocalRelation (r13, guide §4): the RDD
             # form scheduled a python round-trip per core per batch
-            stored = inline_rows(
-                spark, [], "user_id long, n long, total double"
-            )
-        else:
-            stored = spark.read.parquet(state["path"])
-        new = maintain_aggregate(
+            stored = inline_rows(spark, [], "user_id long, n long, total double")
+        return maintain_aggregate(
             stored, changes, ["user_id"], count_col="n",
             sum_cols={"total": "cents"},
         )
-        path = f"{out_root}/v{epoch_id}"
-        new.write.mode("overwrite").parquet(path)
-        state["path"] = path
 
-    stream = file_stream(spark, src, RAW_EVENTS_SCHEMA, max_files_per_trigger=4)
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .outputMode("append")
-            .queryName(f"s21_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    return spark.read.parquet(state["path"]).selectExpr(
+    stream = file_stream(
+        spark, _landed_events8(spark, sf_dir), RAW_EVENTS_SCHEMA,
+        max_files_per_trigger=4,
+    )
+    return _fold_batches(stream, merge, "s21").selectExpr(
         "user_id", "CAST(n AS BIGINT) AS n", "CAST(total AS BIGINT) AS total_cents"
     )
 
@@ -1631,7 +1634,6 @@ def s22_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate_limit_stream,
     )
 
-    raw = _events_micros(spark, sf_dir)
     # both time-ordered slices in ONE data trigger (VERDICT r11 #3,
     # the s24/s26 consolidation): legal because the gate UDF sorts
     # each batch's rows (ts, event_id) per key, so admission — a pure
@@ -1640,8 +1642,8 @@ def s22_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # test_round12_ops.py); the multi-trigger state-carry path stays
     # covered by tests/test_streaming.py
     stream = _sliced_parquet_stream(
-        spark, raw, "s22_events_", cache_key=("events", sf_dir),
-        max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), max_files_per_trigger=2,
     )
     # key by event_type (a hot key by construction): per-user traffic
     # on this dataset never reaches the quota, which would make the
@@ -1649,9 +1651,7 @@ def s22_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted = rate_limit_stream(
         stream, key_col="event_type", limit=RATE_LIMIT_N
     )
-    name = f"s22_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(admitted, name, output_mode="append")
+    out = _drain(admitted, "s22", "append")
     return out.select("event_id", "event_type", "hour_bucket", "slot")
 
 
@@ -1693,34 +1693,37 @@ def s23_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from las_vpe_platform_spark.operators.staging import persist_disk
 
-    # staged: the landing reads the documents table FIVE times (the
-    # min/max agg + four slice writes) — one scan instead (measured
-    # sf0.1: landing 3.9 s -> ~2 s); released by the caller-side
-    # unpersist_all like every other staged frame
-    docs = persist_disk(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
+    def write(src: str) -> None:
+        # staged: the landing reads the documents table FIVE times (the
+        # min/max agg + four slice writes) — one scan instead (measured
+        # sf0.1: landing 3.9 s -> ~2 s); released by the caller-side
+        # unpersist_all like every other staged frame
+        docs = persist_disk(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", "source", "text"
+            )
         )
-    )
-    src = _scratch_dir("s23_docs_")
-    # land as SEQUENTIALLY-written, ZERO-PADDED doc_id-range slices
-    # (ADVICE r6/r7: padding keeps lexicographic order == slice order
-    # even past 10 slices, removing the mtime-tie tie-break trap):
-    # FileStreamSource orders micro-batches by file mtime, i.e. task-
-    # completion order — one parallel 4-part write gives no mtime
-    # guarantee, so the doc_id arrival order the single running-total
-    # state requires must come from sequential per-slice writes
-    # (sequential writes -> increasing mtimes -> batch order, the same
-    # contract _sliced_parquet_stream provides for the event streams)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    if lo is None:
-        raise ValueError("s23_stream_packing: documents table is empty")
-    step = (hi - lo) // 4 + 1
-    for i in range(4):
-        docs.filter(
-            (F.col("doc_id") >= lo + i * step)
-            & (F.col("doc_id") < lo + (i + 1) * step)
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
+        # land as SEQUENTIALLY-written, ZERO-PADDED doc_id-range slices
+        # (ADVICE r6/r7: padding keeps lexicographic order == slice
+        # order even past 10 slices, removing the mtime-tie tie-break
+        # trap): FileStreamSource orders micro-batches by file mtime,
+        # i.e. task-completion order — one parallel 4-part write gives
+        # no mtime guarantee, so the doc_id arrival order the single
+        # running-total state requires must come from sequential
+        # per-slice writes (sequential writes -> increasing mtimes ->
+        # batch order, the same contract _land_slices provides for the
+        # event streams)
+        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+        if lo is None:
+            raise ValueError("s23_stream_packing: documents table is empty")
+        step = (hi - lo) // 4 + 1
+        for i in range(4):
+            docs.filter(
+                (F.col("doc_id") >= lo + i * step)
+                & (F.col("doc_id") < lo + (i + 1) * step)
+            ).coalesce(1).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
+
+    src = _land(("docs_doc_id_slices4", sf_dir), "s23_docs_", write)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -1737,10 +1740,7 @@ def s23_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # totals (the oracle is the batch window-cumsum either way;
     # invariance property-tested in test_round12_ops.py).
     stream = file_stream(spark, f"{src}/*", schema, max_files_per_trigger=4)
-    packed = token_pack_stream(stream, budget=S23_BUDGET)
-    name = f"s23_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        out = run_to_completion(packed, name, output_mode="append")
+    out = _drain(token_pack_stream(stream, budget=S23_BUDGET), "s23", "append")
     return out.select("doc_id", "source", "n_toks", "bin_id")
 
 
@@ -1815,16 +1815,11 @@ S24_K = 10
 def s24_stream_track_attr_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
 
-    key = ("videos_s24",)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
+    def write(src: str) -> None:
         # driver-side pyarrow landing: the video catalog is the TINY
         # side (64 rows) — 4 sequential zero-padded slice writes (the
-        # s23/_sliced_parquet_stream mtime-order contract, ADVICE r7)
-        # without paying one Spark job per slice
-        import os
-
+        # s23/_land_slices mtime-order contract, ADVICE r7) without
+        # paying one Spark job per slice
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -1838,7 +1833,6 @@ def s24_stream_track_attr_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
         landed = landed.take(order)
         if landed.num_rows == 0:
             raise ValueError("s24: videos fixture is empty")
-        src = _scratch_dir("s24_videos_")
         per = -(-landed.num_rows // 4)
         for i in range(4):
             chunk = landed.slice(i * per, per)
@@ -1846,17 +1840,15 @@ def s24_stream_track_attr_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             os.makedirs(f"{src}/slice{i:02d}", exist_ok=True)
             pq.write_table(chunk, f"{src}/slice{i:02d}/part-0.parquet")
-        _LANDED[key] = src
 
+    src = _land(("videos_s24",), "s24_videos_", write)
     ranked = s24_build_stream(spark, f"{src}/*")
-    name = f"s24_out_{uuid.uuid4().hex[:8]}"
     # 4 state partitions, not 8: every store commit writes 4 files (the
     # delta, its checksum sidecar and a .crc for each), a fixed cost
     # per partition per trigger; ~1.2k keys/trigger leave 4-way
     # parallelism ample on the harness (a cluster deployment sizes this
     # to key cardinality as usual)
-    with _stream_partitions(spark, 4):
-        return run_to_completion(ranked, name, output_mode="append")
+    return _drain(ranked, "s24", "append", 4)
 
 
 def s24_build_stream(spark: SparkSession, src_glob: str) -> DataFrame:
@@ -2042,62 +2034,29 @@ S24_SQL = _s24_sql()
 
 
 def s25_stream_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
-    from las_vpe_platform_spark.operators.similarity import ivf_topk
     from las_vpe_platform_spark.operators.staging import scoped_persists
-    from las_vpe_platform_spark.queries_data import (
-        IVF_CENTROID_MOD,
-        IVF_K,
-        IVF_NPROBE,
-        IVF_PROBE_MOD,
-    )
+    from las_vpe_platform_spark.queries_data import IVF_PROBE_MOD
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes_src_key = ("probes_s25", sf_dir)
-    if probes_src_key in _LANDED:
-        src = _LANDED[probes_src_key]
-    else:
-        src = _scratch_dir("s25_probes_")
-        emb.filter(F.col("vec_id") % IVF_PROBE_MOD == 0).coalesce(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _LANDED[probes_src_key] = src
+    src = _land(
+        ("probes_s25", sf_dir),
+        "s25_probes_",
+        lambda d: load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % IVF_PROBE_MOD == 0)
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(d),
+    )
     out_dir = _scratch_dir("s25_out_")
 
     def score(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sess = batch_df.sparkSession
-        gallery = load_table(sess, sf_dir, "embeddings")
-        kw = dict(
-            probe_key="vec_id", gallery_key="vec_id",
-            vector_col="embedding", k=IVF_K,
-        )
+        gallery = load_table(batch_df.sparkSession, sf_dir, "embeddings")
         # ivf_topk stages the one-row centroid fold via persist_disk;
         # scope-release it per batch so a long-running monitor doesn't
         # accrete one DISK_ONLY block per trigger
         with scoped_persists():
-            approx = ivf_topk(
-                batch_df, gallery,
-                num_centroids_mod=IVF_CENTROID_MOD, nprobe=IVF_NPROBE, **kw,
-            ).select("probe_key", "gallery_key", F.lit(1).alias("_hit"))
-            exact = pairwise_similarity_topk(batch_df, gallery, **kw).select(
-                "probe_key", "gallery_key"
-            )
-            (
-                exact.join(approx, on=["probe_key", "gallery_key"], how="left")
-                .groupBy("probe_key")
-                .agg(F.count("_hit").alias("n_hits"))
-                .select(
-                    "probe_key",
-                    F.col("n_hits").cast("bigint").alias("n_hits"),
-                    pround(F.col("n_hits").cast("double") / IVF_K, 4).alias(
-                        "recall"
-                    ),
-                )
-                .write.mode("append")
-                .parquet(out_dir)
-            )
+            s25_step(batch_df, gallery).write.mode("append").parquet(out_dir)
 
     # all four probe files in ONE data trigger (VERDICT r11 #3): the
     # per-batch body is STATELESS — each probe scores against the
@@ -2107,18 +2066,43 @@ def s25_stream_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall monitoring stays covered by tests/test_streaming.py's
     # stateless stream-static suites.
     stream = file_stream(spark, src, EMBEDDINGS_SCHEMA, max_files_per_trigger=4)
-    with _stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(score)
-            .outputMode("update")
-            .queryName(f"s25_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain_batches(stream, score, "s25")
     return spark.read.parquet(out_dir)
+
+
+def s25_step(batch_df: DataFrame, gallery: DataFrame) -> DataFrame:
+    """The s25 foreachBatch body: per-probe IVF recall of the batch's
+    probes against ``gallery`` — q84's dual ranking, both sides
+    distributed (no driver materialization of the gallery)."""
+    from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
+    from las_vpe_platform_spark.operators.similarity import ivf_topk
+    from las_vpe_platform_spark.queries_data import (
+        IVF_CENTROID_MOD,
+        IVF_K,
+        IVF_NPROBE,
+    )
+
+    kw = dict(
+        probe_key="vec_id", gallery_key="vec_id",
+        vector_col="embedding", k=IVF_K,
+    )
+    approx = ivf_topk(
+        batch_df, gallery,
+        num_centroids_mod=IVF_CENTROID_MOD, nprobe=IVF_NPROBE, **kw,
+    ).select("probe_key", "gallery_key", F.lit(1).alias("_hit"))
+    exact = pairwise_similarity_topk(batch_df, gallery, **kw).select(
+        "probe_key", "gallery_key"
+    )
+    return (
+        exact.join(approx, on=["probe_key", "gallery_key"], how="left")
+        .groupBy("probe_key")
+        .agg(F.count("_hit").alias("n_hits"))
+        .select(
+            "probe_key",
+            F.col("n_hits").cast("bigint").alias("n_hits"),
+            pround(F.col("n_hits").cast("double") / IVF_K, 4).alias("recall"),
+        )
+    )
 
 
 def _s25_sql() -> str:
@@ -2150,7 +2134,6 @@ def s26_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.operators.maintenance import scd2_history, scd2_merge
     from las_vpe_platform_spark.queries_data import SCD2_TIER_WIDTH
 
-    raw = _events_micros(spark, sf_dir)
     # two slices per trigger = two RMW rounds over the four
     # time-ordered slices: legal because the merge is split-invariant —
     # scd2_history over a union of adjacent slices equals merging them
@@ -2159,14 +2142,11 @@ def s26_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stored-table RMW path; halves the per-trigger commit + parquet
     # round-trip overhead that dominates at harness batch sizes
     stream = _sliced_parquet_stream(
-        spark, raw, "s26_events_", n_slices=4,
-        cache_key=("events4_s26", sf_dir), max_files_per_trigger=2,
+        spark, _events_micros(spark, sf_dir), "events_sliced_",
+        cache_key=("events", sf_dir), n_slices=4, max_files_per_trigger=2,
     )
-    out_root = _scratch_dir("s26_scd2_")
-    state: dict[str, str | None] = {"path": None}
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def merge(stored: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         ev = batch_df.selectExpr(
             "user_id",
             "event_id",
@@ -2174,32 +2154,12 @@ def s26_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(floor(value / {SCD2_TIER_WIDTH}) AS INT) AS tier",
         )
         new_runs = scd2_history(ev, "user_id", "tier", "us", "event_id")
-        if state["path"] is None:
-            merged = new_runs
-        else:
-            merged = scd2_merge(
-                sess.read.parquet(state["path"]), new_runs, "user_id"
-            )
-        path = f"{out_root}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        state["path"] = path
+        return new_runs if stored is None else scd2_merge(stored, new_runs, "user_id")
 
     # 4 state/shuffle partitions: each micro-batch pays ~6 small joins
     # and 2 windows in the RMW merge — commit overhead dominates at the
     # harness's batch sizes (same sizing note as s24)
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("append")
-            .queryName(f"s26_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    return spark.read.parquet(state["path"]).selectExpr(
+    return _fold_batches(stream, merge, "s26", 4).selectExpr(
         "user_id",
         "tier",
         "valid_from_us",
@@ -2233,21 +2193,8 @@ S26_SQL = _s26_sql()
 
 
 def s29_stream_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.queries_data import (
-        JS_SOURCES,
-        js_pairwise_from_tf,
-        js_source_tf,
-    )
+    from las_vpe_platform_spark.queries_data import js_pairwise_from_tf
 
-    key = ("docs_s29", sf_dir)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s29_docs_")
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        ).coalesce(4).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -2255,43 +2202,18 @@ def s29_stream_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("text", T.StringType()),
         ]
     )
-    out_root = _scratch_dir("s29_tf_")
-    state: dict[str, str | None] = {"path": None}
+    src = _landed_docs(spark, sf_dir, ("doc_id", "source", "text"), 4)
+    stream = file_stream(spark, src, schema, max_files_per_trigger=2)
+    return js_pairwise_from_tf(_fold_batches(stream, s29_step, "s29", 4))
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tf_new = js_source_tf(batch_df.filter(F.col("source").isin(JS_SOURCES)))
-        if state["path"] is None:
-            merged = tf_new
-        else:
-            merged = (
-                sess.read.parquet(state["path"])
-                .unionByName(tf_new)
-                .groupBy("source", "term")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        path = f"{out_root}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        state["path"] = path
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .queryName(f"s29_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    return js_pairwise_from_tf(spark.read.parquet(state["path"]))
+def s29_step(stored: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """The s29 fold: the batch's (source, term) counts added into the
+    stored frequency table."""
+    from las_vpe_platform_spark.queries_data import JS_SOURCES, js_source_tf
+
+    tf_new = js_source_tf(batch_df.filter(F.col("source").isin(JS_SOURCES)))
+    return _add_counts(stored, tf_new, ["source", "term"], "cnt")
 
 
 def _s29_sql() -> str:
@@ -2315,50 +2237,37 @@ S29_SQL = _s29_sql()
 
 
 def s30_stream_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import eval_overlap_flags
-    from las_vpe_platform_spark.queries_data import DECONTAM_N
-
     docs = load_table(spark, sf_dir, "documents")
     ev = docs.filter(F.col("doc_id") % 10 == 0)
-    key = ("docs_s30", sf_dir)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s30_docs_")
-        docs.filter(F.col("doc_id") % 10 != 0).select(
-            "doc_id", "text"
-        ).coalesce(4).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    src = _land(
+        ("docs_s30", sf_dir),
+        "s30_docs_",
+        lambda d: docs.filter(F.col("doc_id") % 10 != 0)
+        .select("doc_id", "text")
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(d),
     )
     out_dir = _scratch_dir("s30_flags_")
 
     def gate(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        flags = eval_overlap_flags(
-            batch_df, ev, id_col="doc_id", text_col="text", n=DECONTAM_N
-        )
-        flags.write.mode("append").parquet(out_dir)
+        if not batch_df.isEmpty():
+            s30_step(batch_df, ev).write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .outputMode("update")
-            .queryName(f"s30_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    stream = file_stream(spark, src, RAW_DOCS_SCHEMA, max_files_per_trigger=2)
+    _drain_batches(stream, gate, "s30", 4)
     return spark.read.parquet(out_dir)
+
+
+def s30_step(batch_df: DataFrame, ev: DataFrame) -> DataFrame:
+    """The s30 foreachBatch body: per-doc 13-gram overlap flags of the
+    batch against the static eval split ``ev``."""
+    from las_vpe_platform_spark.operators.dedup import eval_overlap_flags
+    from las_vpe_platform_spark.queries_data import DECONTAM_N
+
+    return eval_overlap_flags(
+        batch_df, ev, id_col="doc_id", text_col="text", n=DECONTAM_N
+    )
 
 
 def _s30_sql() -> str:
@@ -2393,21 +2302,19 @@ def _landed_tracklets(spark: SparkSession) -> str:
     shared stream source of s27 and s28."""
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
 
-    key = ("tracklets_s27",)
-    if key not in _LANDED:
-        src = _scratch_dir("s27_tracklets_")
-        spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet")).coalesce(
-            4
-        ).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
-    return _LANDED[key]
+    return _land(
+        ("tracklets4",),
+        "tracklets4_",
+        lambda d: spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(d),
+    )
 
 
 def s27_stream_storage_attrrecog_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = s27_build_stream(spark, _landed_tracklets(spark))
-    name = f"s27_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, 4):
-        out = run_to_completion(ranked, name, output_mode="append")
+    out = _drain(ranked, "s27", "append", 4)
     return out.select(
         "tracklet_key", F.col("rank").cast("bigint").alias("rank"), "gallery_key"
     )
@@ -2426,11 +2333,7 @@ def s27_build_stream(spark: SparkSession, src: str) -> DataFrame:
     # stage here is stateless (point filter -> retained filter ->
     # per-row BLAS), so batching cannot change output and each dropped
     # trigger saves its fixed commit cost
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = file_stream(spark, src, schema, max_files_per_trigger=4)
     sel = stream.filter(F.col("serial_number") == S27_SERIAL)
     retained = F.filter(
         "location_sequence", lambda b: b.getField("patch_data").isNotNull()
@@ -2465,31 +2368,65 @@ S27_SQL = _s27_sql()
 # RETRIEVE_TRACKLET_ATTR — stored tracklets point-filtered by serial,
 # inner-joined to the STORED attribute table through the TRACKLET_ATTR
 # bypass port (PedestrianReIDUsingAttrApp.java:152-153,217), skipping
-# the recognizer entirely. d16 compiles this batch; here the
-# attribute-table join is a stream-static broadcast (the attrs store
-# is the dimension side). Stateless end-to-end → oracle is D16_SQL
-# verbatim; same no-state / no-shuffle scale shape as s27.
+# the recognizer entirely. d16 compiles this batch; here the stored
+# attribute keys (the dimension side) are collected once at build time,
+# like the gallery, and filter the probes as a literal key set.
+# Stateless end-to-end → oracle is D16_SQL verbatim; same no-state /
+# no-shuffle / no-join scale shape as s27.
 
 S28_SERIAL = 5
 
 
 def s28_stream_reid_command(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.fixtures import FIXTURES_DIR
-    from las_vpe_platform_spark.operators.joins import broadcast_gallery_topk
+    ranked = s28_build_stream(spark, _landed_tracklets(spark))
+    out = _drain(ranked, "s28", "append", 4)
+    return out.select(
+        "tracklet_key", F.col("rank").cast("bigint").alias("rank"), "gallery_key"
+    )
 
+
+def s28_build_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The s28 transformation over a landed stored-tracklet source —
+    shared by the catalog entry and its plan test (unstarted plan).
+
+    The stored-attribute keys are read ONCE at build time, under the
+    gallery's broadcast bound, and filter the probe keys as a literal
+    set: no trigger re-scans or joins the attribute table. A NULL or
+    repeated key raises ``ValueError`` naming it — with unique keys the
+    filter equals D16_SQL's inner join."""
+    import pyarrow.parquet as pq
+
+    from las_vpe_platform_spark.fixtures import FIXTURES_DIR
+    from las_vpe_platform_spark.operators.joins import (
+        GALLERY_BROADCAST_MAX,
+        broadcast_gallery_topk,
+    )
+
+    attrs = pq.ParquetFile(str(FIXTURES_DIR / "attributes.parquet"))
+    if attrs.metadata.num_rows > GALLERY_BROADCAST_MAX:
+        raise ValueError(
+            f"s28: more than {GALLERY_BROADCAST_MAX} stored attribute keys"
+        )
+    stored = attrs.read(columns=["tracklet_key"]).column(0).to_pylist()
+    seen: set[str] = set()
+    for key in stored:
+        if key is None or key in seen:
+            raise ValueError(f"s28: stored attribute key {key!r} is NULL or repeated")
+        seen.add(key)
+    # one SQL IN list: Column.isin costs one JVM call per key (~0.6 s
+    # for the fixture's 1097 keys)
+    in_stored = ", ".join(
+        "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in stored
+    )
     schema = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(_landed_tracklets(spark))
+    keys = (
+        file_stream(spark, src, schema, max_files_per_trigger=2)
+        .filter(F.col("serial_number") == S28_SERIAL)
+        .select("tracklet_key")
+        .filter(F.expr(f"tracklet_key IN ({in_stored})") if stored else F.lit(False))
     )
-    sel = stream.filter(F.col("serial_number") == S28_SERIAL).select("tracklet_key")
-    attrs = spark.read.parquet(str(FIXTURES_DIR / "attributes.parquet")).select(
-        "tracklet_key"
-    )
-    keys = sel.join(F.broadcast(attrs), "tracklet_key", "inner")
     features = spark.read.parquet(str(FIXTURES_DIR / "features.parquet"))
-    ranked = broadcast_gallery_topk(
+    return broadcast_gallery_topk(
         keys,
         features,
         probe_key="tracklet_key",
@@ -2498,12 +2435,6 @@ def s28_stream_reid_command(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=S27_K,
         passthrough=["tracklet_key"],
     ).filter(F.col("rank").isNotNull())  # D16_SQL's features inner join
-    name = f"s28_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, 4):
-        out = run_to_completion(ranked, name, output_mode="append")
-    return out.select(
-        "tracklet_key", F.col("rank").cast("bigint").alias("rank"), "gallery_key"
-    )
 
 
 def _s28_sql() -> str:
@@ -2531,86 +2462,30 @@ S28_SQL = _s28_sql()
 # shuffle, no stream state operator.
 
 
-_LANDED_DOC_SPAN: dict[tuple, int] = {}
-
-
 def _landed_docs4(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Land (doc_id, text) as 4 parquet files once per sf_dir and cache
-    its doc_id span — the shared ingest layout of the sliced-monitor
-    family (s31 novelty, s32 quality-PSI). The span is a pure function
-    of the landed copy, so it is computed once with the landing, not
-    re-scanned per entry."""
-    key = ("docs_s31", sf_dir)
-    if key not in _LANDED:
-        src = _scratch_dir("s31_docs_")
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        ).coalesce(4).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
-    if key not in _LANDED_DOC_SPAN:
-        _LANDED_DOC_SPAN[key] = (
-            spark.read.parquet(_LANDED[key])
-            .groupBy()
-            .agg(F.max("doc_id").alias("m"))
-            .collect()[0]["m"]
-        )
-    return _LANDED[key], _LANDED_DOC_SPAN[key]
+    """(doc_id, text) landed as 4 parquet files once per sf_dir, and its
+    doc_id span — the shared ingest layout of the sliced-monitor family
+    (s31 novelty, s32 quality-PSI). The span is a pure function of the
+    landed copy, so it lands with it as a ``_doc_span`` file (file
+    sources skip ``_``-prefixed names) instead of a per-entry scan."""
+
+    def write(src: str) -> None:
+        load_table(spark, sf_dir, "documents").select("doc_id", "text").coalesce(
+            4
+        ).write.mode("overwrite").parquet(src)
+        span = spark.read.parquet(src).agg(F.max("doc_id")).first()[0]
+        Path(src, "_doc_span").write_text(str(span))
+
+    src = _land(("docs_span4", sf_dir), "docs4_", write)
+    return src, int(Path(src, "_doc_span").read_text())
 
 
 def s31_stream_novelty_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.operators.dedup import exploded_shingles
-    from las_vpe_platform_spark.queries_data import DECONTAM_N, NOVELTY_SLICES
-
     src, mx = _landed_docs4(spark, sf_dir)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    stream = file_stream(spark, src, RAW_DOCS_SCHEMA, max_files_per_trigger=2)
+    idx = _fold_batches(
+        stream, lambda stored, batch_df: s31_step(stored, batch_df, mx), "s31", 4
     )
-    out_root = _scratch_dir("s31_idx_")
-    state: dict[str, str | None] = {"path": None}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fresh = (
-            exploded_shingles(batch_df, "doc_id", "text", DECONTAM_N)
-            .selectExpr(
-                f"least({NOVELTY_SLICES - 1},"
-                f" (doc_id_ * {NOVELTY_SLICES}) div ({mx} + 1)) AS slice",
-                "shingle",
-            )
-            .groupBy("slice", "shingle")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        if state["path"] is None:
-            merged = fresh
-        else:
-            merged = (
-                sess.read.parquet(state["path"])
-                .unionByName(fresh)
-                .groupBy("slice", "shingle")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        path = f"{out_root}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        state["path"] = path
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .queryName(f"s31_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    idx = spark.read.parquet(state["path"])
     first = idx.groupBy("shingle").agg(F.min("slice").alias("_first"))
     per_slice = idx.groupBy("slice").agg(
         F.sum("cnt").cast("bigint").alias("n_shingles"),
@@ -2631,6 +2506,26 @@ def s31_stream_novelty_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_novel", F.lit(0)).cast("double") / F.col("n_distinct"), 6
         ).alias("novelty_rate"),
     )
+
+
+def s31_step(stored: DataFrame | None, batch_df: DataFrame, mx: int) -> DataFrame:
+    """The s31 fold: the batch's per-doc-distinct shingle counts, keyed
+    by ingest slice of the doc_id span ``mx``, added into the stored
+    (slice, shingle, cnt) index."""
+    from las_vpe_platform_spark.operators.dedup import exploded_shingles
+    from las_vpe_platform_spark.queries_data import DECONTAM_N, NOVELTY_SLICES
+
+    fresh = (
+        exploded_shingles(batch_df, "doc_id", "text", DECONTAM_N)
+        .selectExpr(
+            f"least({NOVELTY_SLICES - 1},"
+            f" (doc_id_ * {NOVELTY_SLICES}) div ({mx} + 1)) AS slice",
+            "shingle",
+        )
+        .groupBy("slice", "shingle")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    return _add_counts(stored, fresh, ["slice", "shingle"], "cnt")
 
 
 def _s31_sql() -> str:
@@ -2654,56 +2549,27 @@ S31_SQL = _s31_sql()
 
 
 def s32_stream_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.queries_data import (
-        psi_from_counts,
-        quality_slice_bucket,
-    )
+    from las_vpe_platform_spark.queries_data import psi_from_counts
 
     src, mx = _landed_docs4(spark, sf_dir)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    stream = file_stream(spark, src, RAW_DOCS_SCHEMA, max_files_per_trigger=2)
+    counts = _fold_batches(
+        stream, lambda stored, batch_df: s32_step(stored, batch_df, mx), "s32", 4
     )
-    out_root = _scratch_dir("s32_cnt_")
-    state: dict[str, str | None] = {"path": None}
+    return psi_from_counts(spark, counts)
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fresh = (
-            quality_slice_bucket(batch_df, f"cast({mx} as bigint)")
-            .groupBy("slice", "bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        if state["path"] is None:
-            merged = fresh
-        else:
-            merged = (
-                sess.read.parquet(state["path"])
-                .unionByName(fresh)
-                .groupBy("slice", "bucket")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-        path = f"{out_root}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        state["path"] = path
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+def s32_step(stored: DataFrame | None, batch_df: DataFrame, mx: int) -> DataFrame:
+    """The s32 fold: the batch's (slice, quality bucket) counts, sliced
+    over the doc_id span ``mx``, added into the stored count table."""
+    from las_vpe_platform_spark.queries_data import quality_slice_bucket
+
+    fresh = (
+        quality_slice_bucket(batch_df, f"cast({mx} as bigint)")
+        .groupBy("slice", "bucket")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .queryName(f"s32_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    return psi_from_counts(spark, spark.read.parquet(state["path"]))
+    return _add_counts(stored, fresh, ["slice", "bucket"], "c")
 
 
 def _s32_sql() -> str:
@@ -2732,16 +2598,13 @@ def s33_stream_patch_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
     from las_vpe_platform_spark.operators.multimodal import patch_ahash
     from las_vpe_platform_spark.operators.staging import persist_disk
-    from las_vpe_platform_spark.queries_domain import M17_HAMMING_T
 
     tr = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    key = ("tracklets8",)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s33_tracklets_")
-        tr.repartition(8).write.mode("overwrite").parquet(src)
-        _LANDED[key] = src
+    src = _land(
+        ("tracklets8",),
+        "s33_tracklets_",
+        lambda d: tr.repartition(8).write.mode("overwrite").parquet(d),
+    )
     stored_hashed = persist_disk(patch_ahash(tr.filter(F.col("serial_number") % 3 == 0)))
     stored_posts = persist_disk(
         stored_hashed.select(
@@ -2750,60 +2613,53 @@ def s33_stream_patch_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out_dir = _scratch_dir("s33_alerts_")
+
+    def probe_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        s33_step(batch_df, stored_hashed, stored_posts).write.mode("append").parquet(
+            out_dir
+        )
+
+    # r12: all 8 landed files in ONE batch — the gate is stateless
+    # (incoming rows probe a STATIC stored index), so the alert set is
+    # the union over arriving rows regardless of trigger grouping;
+    # multi-batch behavior stays covered by
+    # test_round9_ops.test_s33_gate_matches_bruteforce semantics
+    stream = file_stream(spark, src, tr.schema, max_files_per_trigger=8)
+    _drain_batches(stream, probe_batch, "s33", 4)
+    return spark.read.parquet(out_dir).distinct()
+
+
+def s33_step(
+    batch_df: DataFrame, stored_hashed: DataFrame, stored_posts: DataFrame
+) -> DataFrame:
+    """The s33 foreachBatch body: the batch's tracklets aHash-banded,
+    band postings joined to the stored index ``stored_posts``
+    (id_stored, band_idx, band_val), collisions scored by exact Hamming
+    against ``stored_hashed`` and kept within M17_HAMMING_T."""
+    from las_vpe_platform_spark.operators.multimodal import patch_ahash
+    from las_vpe_platform_spark.queries_domain import M17_HAMMING_T
+
+    hin = patch_ahash(batch_df)
+    pin = hin.select("id", F.posexplode("band_hash").alias("band_idx", "band_val"))
+    cands = (
+        pin.join(stored_posts, ["band_idx", "band_val"])
+        .filter(F.col("id") != F.col("id_stored"))
+        .select(F.col("id").alias("id_in"), "id_stored")
+        .distinct()
+    )
     ham = (
         "aggregate(zip_with(_ba, _bb, (x, y) -> bit_count(x ^ y)), 0,"
         " (a, v) -> a + cast(v AS INT))"
     )
-
-    def probe_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        hin = patch_ahash(batch_df)
-        pin = hin.select(
-            "id", F.posexplode("band_hash").alias("band_idx", "band_val")
+    return (
+        cands.join(hin.selectExpr("id AS id_in", "band_hash AS _ba"), "id_in")
+        .join(
+            stored_hashed.selectExpr("id AS id_stored", "band_hash AS _bb"),
+            "id_stored",
         )
-        cands = (
-            pin.join(stored_posts, ["band_idx", "band_val"])
-            .filter(F.col("id") != F.col("id_stored"))
-            .select(F.col("id").alias("id_in"), "id_stored")
-            .distinct()
-        )
-        (
-            cands.join(hin.selectExpr("id AS id_in", "band_hash AS _ba"), "id_in")
-            .join(
-                stored_hashed.selectExpr("id AS id_stored", "band_hash AS _bb"),
-                "id_stored",
-            )
-            .select(
-                "id_in",
-                "id_stored",
-                F.expr(ham).cast("int").alias("hamming"),
-            )
-            .filter(F.col("hamming") <= M17_HAMMING_T)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    stream = (
-        spark.readStream.schema(tr.schema)
-        # r12: all 8 landed files in ONE batch — the gate is stateless
-        # (incoming rows probe a STATIC stored index), so the alert set
-        # is the union over arriving rows regardless of trigger
-        # grouping; multi-batch behavior stays covered by
-        # test_round9_ops.test_s33_gate_matches_bruteforce semantics
-        .option("maxFilesPerTrigger", "8")
-        .parquet(src)
+        .select("id_in", "id_stored", F.expr(ham).cast("int").alias("hamming"))
+        .filter(F.col("hamming") <= M17_HAMMING_T)
     )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(probe_batch)
-            .outputMode("append")
-            .queryName(f"s33_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.read.parquet(out_dir).distinct()
 
 
 def _s33_sql() -> str:
@@ -2858,16 +2714,9 @@ S33_SQL = _s33_sql()
 
 
 def s34_stream_transition_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from las_vpe_platform_spark.queries_data import (
-        lift_from_counts,
-        transition_pairs,
-    )
+    from las_vpe_platform_spark.queries_data import lift_from_counts
 
-    key = ("events_by_user8", sf_dir)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s34_events_")
+    def write(src: str) -> None:
         load_table(spark, sf_dir, "events").select(
             "user_id", "ts", "event_id", "event_type"
         ).repartition(8, "user_id").write.mode("overwrite").parquet(src)
@@ -2886,49 +2735,25 @@ def s34_stream_transition_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
                 "partitions — a file split (maxRecordsPerFile?) breaks the "
                 "whole-user-per-batch contract"
             )
-        _LANDED[key] = src
+
+    src = _land(("events_by_user8", sf_dir), "s34_events_", write)
     schema = spark.read.parquet(src).schema
-    out_root = _scratch_dir("s34_cnt_")
-    state: dict[str, str | None] = {"path": None}
+    stream = file_stream(spark, src, schema, max_files_per_trigger=2)
+    return lift_from_counts(_fold_batches(stream, s34_step, "s34", 4))
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fresh = (
-            transition_pairs(batch_df)
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
-        )
-        if state["path"] is None:
-            merged = fresh
-        else:
-            merged = (
-                sess.read.parquet(state["path"])
-                .unionByName(fresh)
-                .groupBy("a", "b")
-                .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
-            )
-        path = f"{out_root}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(path)
-        state["path"] = path
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+def s34_step(stored: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """The s34 fold: the batch's (a, b) transition counts — exact per
+    batch because every file holds whole user histories — added into
+    the stored count table."""
+    from las_vpe_platform_spark.queries_data import transition_pairs
+
+    fresh = (
+        transition_pairs(batch_df)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
     )
-    with _stream_partitions(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .queryName(f"s34_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert state["path"] is not None
-    return lift_from_counts(spark.read.parquet(state["path"]))
+    return _add_counts(stored, fresh, ["a", "b"], "n_ab")
 
 
 def _s34_sql() -> str:
@@ -2983,11 +2808,7 @@ S35_WINDOW_S = 300
 
 
 def s35_stream_late_data_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("events_late3", sf_dir)
-    if key in _LANDED:
-        src = _LANDED[key]
-    else:
-        src = _scratch_dir("s35_events_")
+    def write(src: str) -> None:
         raw = _events_micros(spark, sf_dir)
         slices = (
             raw.filter(F.col("event_id") % 7 != 0),       # on-time
@@ -2998,24 +2819,21 @@ def s35_stream_late_data_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
         # order (the s23 landing contract)
         for i, sl in enumerate(slices):
             sl.coalesce(1).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
-        _LANDED[key] = src
-    stream = file_stream(
-        spark, f"{src}/*", RAW_EVENTS_SCHEMA, max_files_per_trigger=1
-    ).withColumn("ts", F.timestamp_micros("ts_micros"))
+
+    src = _land(("events_late3", sf_dir), "s35_events_", write)
     agg = windowed_counts(
-        stream, "ts", ["event_type"], f"{S35_WINDOW_S} seconds", "600 seconds"
+        _events_stream(spark, f"{src}/*"),
+        "ts", ["event_type"], f"{S35_WINDOW_S} seconds", "600 seconds",
     )
-    name = f"s35_out_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        return run_to_completion(
-            agg.select(
-                F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
-                "event_type",
-                F.col("n").cast("bigint").alias("n"),
-            ),
-            name,
-            output_mode="append",
-        )
+    return _drain(
+        agg.select(
+            F.unix_timestamp(F.col("window.start")).alias("window_start_epoch"),
+            "event_type",
+            F.col("n").cast("bigint").alias("n"),
+        ),
+        "s35",
+        "append",
+    )
 
 
 S35_SQL = f"""

@@ -318,7 +318,6 @@ def run_to_completion(
     df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Drive a streaming frame over all currently-available input and
     return the result as a batch DataFrame (memory sink).
@@ -327,14 +326,12 @@ def run_to_completion(
     gives deterministic end-of-input semantics, so streaming results
     can be hash-compared against batch oracles.
     """
-    writer = (
+    q = (
         df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
+        .start()
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
     try:
         q.processAllAvailable()
     finally:

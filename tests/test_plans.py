@@ -468,12 +468,9 @@ def test_s13_assignment_is_join_free(spark, tmp_path):
         EMBEDDINGS_SCHEMA,
         ivf_assign_cells,
     )
+    from las_vpe_platform_spark.streaming.engine import file_stream
 
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path))
-    )
+    stream = file_stream(spark, str(tmp_path), EMBEDDINGS_SCHEMA)
     cells = ivf_assign_cells(stream, [(0, [1.0, 0.0]), (100, [0.0, 1.0])])
     plan = cells._jdf.queryExecution().analyzed().toString()
     assert "Join" not in plan
@@ -506,12 +503,9 @@ def test_s14_survivor_branch_is_stateless(spark, tmp_path):
         RAW_EVENTS_SCHEMA,
         quantile_survivors,
     )
+    from las_vpe_platform_spark.streaming.engine import file_stream
 
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path))
-    )
+    stream = file_stream(spark, str(tmp_path), RAW_EVENTS_SCHEMA)
     plan = quantile_survivors(stream)._jdf.queryExecution().analyzed().toString()
     assert "Join" not in plan
     assert "Aggregate" not in plan
@@ -655,29 +649,15 @@ def test_s18_asof_enrich_stream_plan_is_stateless(spark, sf_dir):
     # stream-static joins hold nothing across batches: the streaming
     # side of s18 carries NO watermark and NO stateful operator — the
     # interval condition runs as a plain per-batch join.
-    from las_vpe_platform_spark.queries_streaming import RAW_EVENTS_SCHEMA
     import tempfile
 
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import s18_build_stream
 
     dim = spark.createDataFrame(
         [(1, 0, 0, None)],
         "d_user long, tier int, valid_from_us long, valid_to_us long",
     )
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tempfile.mkdtemp(prefix="s18_plan_"))
-        .filter(F.col("event_type") == "click")
-        .select("event_id", "user_id", F.col("ts_micros").alias("click_us"))
-    )
-    joined = stream.join(
-        F.broadcast(dim),
-        (F.col("user_id") == F.col("d_user"))
-        & (F.col("click_us") >= F.col("valid_from_us"))
-        & (F.col("valid_to_us").isNull() | (F.col("click_us") < F.col("valid_to_us"))),
-        "left",
-    )
+    joined = s18_build_stream(spark, tempfile.mkdtemp(prefix="s18_plan_"), dim)
     plan = joined._jdf.queryExecution().analyzed().toString()
     assert "Join" in plan
     assert "EventTimeWatermark" not in plan
@@ -806,10 +786,11 @@ def test_s25_monitor_never_collects_gallery(spark, sf_dir):
     from las_vpe_platform_spark.operators.staging import unpersist_all
     from las_vpe_platform_spark.queries_data import q84_ann_recall
 
-    body = inspect.getsource(qs.s25_stream_ann_recall)
-    assert ".collect(" not in body and ".toPandas(" not in body, (
-        "s25 must not materialize tables on the driver"
-    )
+    for fn in (qs.s25_stream_ann_recall, qs.s25_step):
+        body = inspect.getsource(fn)
+        assert ".collect(" not in body and ".toPandas(" not in body, (
+            "s25 must not materialize tables on the driver"
+        )
     streamed = {
         r["probe_key"]: (r["n_hits"], r["recall"])
         for r in qs.s25_stream_ann_recall(spark, sf_dir).collect()
@@ -826,17 +807,22 @@ def test_s27_s28_plans_are_stateless(spark, sf_dir):
     # the live command paths hold NO streaming state: stateless
     # filters + mapInPandas ranking — no watermark, no streaming
     # aggregation, and no join (the gallery lookup is by key inside the
-    # ranking, so no trigger re-scans the features)
+    # ranking, and s28's stored-attribute keys are a build-time literal
+    # set, so no trigger re-scans the features or the attributes)
     import tempfile
 
-    from las_vpe_platform_spark.queries_streaming import s27_build_stream
+    from las_vpe_platform_spark.queries_streaming import (
+        s27_build_stream,
+        s28_build_stream,
+    )
 
-    df = s27_build_stream(spark, tempfile.mkdtemp(prefix="s27_plan_"))
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "EventTimeWatermark" not in plan
-    assert "Aggregate" not in plan
-    assert "Join" not in plan, plan
-    assert "MapInPandas" in plan
+    for build in (s27_build_stream, s28_build_stream):
+        df = build(spark, tempfile.mkdtemp(prefix="s27_plan_"))
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "EventTimeWatermark" not in plan
+        assert "Aggregate" not in plan
+        assert "Join" not in plan, plan
+        assert "MapInPandas" in plan
 
 
 def test_q159_no_per_source_window(spark, sf_dir):

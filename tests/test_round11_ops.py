@@ -23,11 +23,12 @@ def _rows(df):
 # --- the probe-count ladder -----------------------------------------------------
 
 
-def test_probe_ladder_blocked_path_matches_broadcast(spark, sf_dir):
+def test_probe_ladder_blocked_path_matches_broadcast(spark, sf_dir, monkeypatch):
     """Both sides of the ladder are the SAME function of the inputs:
     with the threshold forced below the probe count, the blocked-grid
     cogroup path must reproduce the broadcast path's exact top-k —
     ranks, tie order, and NULL-similarity rows included."""
+    from las_vpe_platform_spark.operators import joins
     from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
     from las_vpe_platform_spark.sources.tables import load_table
 
@@ -36,17 +37,21 @@ def test_probe_ladder_blocked_path_matches_broadcast(spark, sf_dir):
         emb, emb, probe_key="vec_id", gallery_key="vec_id",
         vector_col="embedding", k=3,
     )
+    monkeypatch.setattr(joins, "PROBE_BROADCAST_MAX", 7)
     big = pairwise_similarity_topk(
         emb, emb, probe_key="vec_id", gallery_key="vec_id",
-        vector_col="embedding", k=3, probe_broadcast_max=7,
+        vector_col="embedding", k=3,
     )
     assert _rows(big) == _rows(small)
 
 
-def test_probe_ladder_blocked_path_matches_broadcast_exclude_mode(spark, sf_dir):
+def test_probe_ladder_blocked_path_matches_broadcast_exclude_mode(
+    spark, sf_dir, monkeypatch
+):
     """Same equivalence for the label-masked (hard-negative) policy,
     including its row-dropping semantics (same-label / NULL-label /
     zero-norm pairs excluded before the top-k)."""
+    from las_vpe_platform_spark.operators import joins
     from las_vpe_platform_spark.operators.similarity import hard_negatives_topk
     from las_vpe_platform_spark.sources.tables import load_table
 
@@ -55,19 +60,20 @@ def test_probe_ladder_blocked_path_matches_broadcast_exclude_mode(spark, sf_dir)
         emb, emb, probe_key="vec_id", gallery_key="vec_id",
         label_col="label", vector_col="embedding", k=3,
     )
+    monkeypatch.setattr(joins, "PROBE_BROADCAST_MAX", 7)
     big = hard_negatives_topk(
         emb, emb, probe_key="vec_id", gallery_key="vec_id",
         label_col="label", vector_col="embedding", k=3,
-        probe_broadcast_max=7,
     )
     assert _rows(big) == _rows(small)
 
 
-def test_probe_ladder_null_similarity_contract_survives_blocking(spark):
+def test_probe_ladder_null_similarity_contract_survives_blocking(spark, monkeypatch):
     """The non-exclude policy's zero-norm contract (NULL similarity,
     ranked LAST, still emitted) must hold identically on the blocked
     path — the edge the sf fixture can't probe (it has no zero-norm
     vectors)."""
+    from las_vpe_platform_spark.operators import joins
     from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
 
     rows = [(i, [0.0, 0.0] if i % 4 == 0 else [float(i), 1.0]) for i in range(12)]
@@ -75,9 +81,9 @@ def test_probe_ladder_null_similarity_contract_survives_blocking(spark):
     small = pairwise_similarity_topk(
         df, df, probe_key="id", gallery_key="id", vector_col="v", k=12
     )
+    monkeypatch.setattr(joins, "PROBE_BROADCAST_MAX", 3)
     big = pairwise_similarity_topk(
-        df, df, probe_key="id", gallery_key="id", vector_col="v", k=12,
-        probe_broadcast_max=3,
+        df, df, probe_key="id", gallery_key="id", vector_col="v", k=12
     )
     assert _rows(big) == _rows(small)
     # zero-norm gallery rows really do surface as NULL-sim, rank-last
@@ -86,10 +92,10 @@ def test_probe_ladder_null_similarity_contract_survives_blocking(spark):
     assert all(r["rank"] > 9 for r in got if r["similarity"] is None)
 
 
-def test_probe_ladder_never_collects_corpus(spark, sf_dir):
+def test_probe_ladder_never_collects_corpus(spark, sf_dir, monkeypatch):
     """Structural no-collect pin (the q176 scale-killer, VERDICT r10
     #3): (a) the kernel's only driver materialization is the
-    limit(max+1) guard — probe_broadcast_max bounds what .collect()
+    limit(max+1) guard — PROBE_BROADCAST_MAX bounds what .collect()
     can return BY PLAN, not by hope; (b) above the threshold the
     executed plan is the cogroup grid (FlatMapCoGroupsInPandas), with
     no broadcast of a probe matrix; (c) below it, the plan is the
@@ -101,17 +107,19 @@ def test_probe_ladder_never_collects_corpus(spark, sf_dir):
     from las_vpe_platform_spark.sources.tables import load_table
 
     src = inspect.getsource(joins._stream_matmul_topk)
-    assert ".collect()" in src and "limit(probe_broadcast_max + 1)" in src, (
+    assert ".collect()" in src and "limit(PROBE_BROADCAST_MAX + 1)" in src, (
         "the only collect must be the bounded limit guard"
     )
     blocked_src = inspect.getsource(joins._blocked_candidates)
     assert ".collect(" not in blocked_src and ".toPandas(" not in blocked_src
 
     emb = load_table(spark, sf_dir, "embeddings")
-    blocked = pairwise_similarity_topk(
-        emb, emb, probe_key="vec_id", gallery_key="vec_id",
-        vector_col="embedding", k=2, probe_broadcast_max=7,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(joins, "PROBE_BROADCAST_MAX", 7)
+        blocked = pairwise_similarity_topk(
+            emb, emb, probe_key="vec_id", gallery_key="vec_id",
+            vector_col="embedding", k=2,
+        )
     plan = blocked._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     bcast = pairwise_similarity_topk(
@@ -122,7 +130,7 @@ def test_probe_ladder_never_collects_corpus(spark, sf_dir):
     assert "FlatMapCoGroupsInPandas" not in plan2
 
 
-def test_probe_ladder_property_vs_catalyst_witness(spark):
+def test_probe_ladder_property_vs_catalyst_witness(spark, monkeypatch):
     """Seeded property sweep: across random shapes — probe/gallery
     sizes straddling the block boundaries, k larger than the gallery,
     disjoint and overlapping key spaces, duplicate similarity ties,
@@ -133,11 +141,13 @@ def test_probe_ladder_property_vs_catalyst_witness(spark):
     equality is deterministic (no sub-ulp tie risk)."""
     import random
 
+    from las_vpe_platform_spark.operators import joins
     from las_vpe_platform_spark.operators.joins import (
         pairwise_similarity_topk,
         pairwise_similarity_topk_expr,
     )
 
+    monkeypatch.setattr(joins, "PROBE_BROADCAST_MAX", 4)
     rng = random.Random(11)
     for trial in range(4):
         n_p = rng.choice([5, 9, 17])
@@ -166,7 +176,7 @@ def test_probe_ladder_property_vs_catalyst_witness(spark):
         got = _rows(
             pairwise_similarity_topk(
                 probes, gallery, probe_key="id", gallery_key="id",
-                vector_col="v", k=k, probe_broadcast_max=4,
+                vector_col="v", k=k,
             )
         )
         assert got == want, f"trial {trial}: n_p={n_p} n_g={n_g} k={k}"

@@ -447,43 +447,22 @@ STREAMING_HEADLINERS = [
 ]
 
 
-def _session_native_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        _scratch_dir,
-    )
-    from pyspark.sql import functions as F
+def _events_plan_source(spark, name):
+    from las_vpe_platform_spark.queries_streaming import _events_stream, _scratch_dir
 
-    src = _scratch_dir("plan_s16_")
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
-    )
-    return (
-        stream.withWatermark("ts", "0 seconds")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    )
+    return _events_stream(spark, _scratch_dir(f"plan_{name}_"))
+
+
+def _session_native_stream_plan(spark):
+    from las_vpe_platform_spark.queries_streaming import native_sessions
+
+    return native_sessions(_events_plan_source(spark, "s16"))
 
 
 def _anomaly_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        _scratch_dir,
-    )
     from las_vpe_platform_spark.streaming.stateful import anomaly_stream
-    from pyspark.sql import functions as F
 
-    src = _scratch_dir("plan_s15_")
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
-    )
-    return anomaly_stream(stream)
+    return anomaly_stream(_events_plan_source(spark, "s15"))
 
 
 def _quantile_survivor_stream_plan(spark):
@@ -492,14 +471,11 @@ def _quantile_survivor_stream_plan(spark):
         _scratch_dir,
         quantile_survivors,
     )
+    from las_vpe_platform_spark.streaming.engine import file_stream
 
-    src = _scratch_dir("plan_s14_")
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    return quantile_survivors(
+        file_stream(spark, _scratch_dir("plan_s14_"), RAW_EVENTS_SCHEMA)
     )
-    return quantile_survivors(stream)
 
 
 def _ivf_assign_stream_plan(spark):
@@ -508,135 +484,37 @@ def _ivf_assign_stream_plan(spark):
         _scratch_dir,
         ivf_assign_cells,
     )
+    from las_vpe_platform_spark.streaming.engine import file_stream
 
     # toy centroids: identical plan shape to the catalog entry, but no
     # Spark job at capture time (the entry collects the sqrt-sized
     # centroid table once at plan build)
-    src = _scratch_dir("plan_s13_")
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = file_stream(spark, _scratch_dir("plan_s13_"), EMBEDDINGS_SCHEMA)
     return ivf_assign_cells(stream, [(0, [1.0, 0.0]), (100, [0.0, 1.0])])
 
 
 def _trigram_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        _scratch_dir,
-    )
     from las_vpe_platform_spark.streaming.stateful import trigram_stream
-    from pyspark.sql import functions as F
 
-    # atexit-cleaned scratch root — no per-run orphan dirs (review r5)
-    src = _scratch_dir("plan_s12_")
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
-    )
-    return trigram_stream(stream)
+    return trigram_stream(_events_plan_source(spark, "s12"))
 
 
 def _locf_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        _scratch_dir,
-    )
     from las_vpe_platform_spark.streaming.stateful import locf_stream
-    from pyspark.sql import functions as F
 
-    # atexit-cleaned scratch root — no per-run orphan dirs (review r5)
-    src = _scratch_dir("plan_s10_")
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
-    )
-    return locf_stream(stream, fill_type="click")
+    return locf_stream(_events_plan_source(spark, "s10"), fill_type="click")
 
 
 def _left_outer_join_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        S17_ATTR_HOURS,
-        _scratch_dir,
-    )
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import _scratch_dir, s17_build_stream
 
-    src = _scratch_dir("plan_s17_")
-
-    def side():
-        return (
-            spark.readStream.schema(RAW_EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .withColumn("ts", F.timestamp_micros("ts_micros"))
-        )
-
-    clicks = (
-        side().filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "0 seconds")
-    )
-    purchases = (
-        side().filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "0 seconds")
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("c_ts") + F.expr(f"INTERVAL {S17_ATTR_HOURS} HOURS")
-        ),
-        "leftOuter",
-    )
+    return s17_build_stream(spark, _scratch_dir("plan_s17_"))
 
 
 def _full_outer_join_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        S17_ATTR_HOURS,
-        _scratch_dir,
-    )
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import _scratch_dir, s20_build_stream
 
-    src = _scratch_dir("plan_s20_")
-
-    def side():
-        return (
-            spark.readStream.schema(RAW_EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .withColumn("ts", F.timestamp_micros("ts_micros"))
-        )
-
-    clicks = (
-        side().filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "0 seconds")
-    )
-    purchases = (
-        side().filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "0 seconds")
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("c_ts") + F.expr(f"INTERVAL {S17_ATTR_HOURS} HOURS")
-        ),
-        "fullOuter",
-    )
+    return s20_build_stream(spark, _scratch_dir("plan_s20_"))
 
 
 def _s24_stream_plan(spark):
@@ -655,36 +533,11 @@ def _s25_batch_plan(spark):
     # rows here, trigger-bounded in the live query)
     from pyspark.sql import functions as F
 
-    from las_vpe_platform_spark.compat import pround
-    from las_vpe_platform_spark.operators.joins import pairwise_similarity_topk
-    from las_vpe_platform_spark.operators.similarity import ivf_topk
-    from las_vpe_platform_spark.queries_data import (
-        IVF_CENTROID_MOD,
-        IVF_K,
-        IVF_NPROBE,
-        IVF_PROBE_MOD,
-    )
+    from las_vpe_platform_spark.queries_data import IVF_PROBE_MOD
+    from las_vpe_platform_spark.queries_streaming import s25_step
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    batch = emb.filter(F.col("vec_id") % IVF_PROBE_MOD == 0).limit(4)
-    kw = dict(probe_key="vec_id", gallery_key="vec_id",
-              vector_col="embedding", k=IVF_K)
-    approx = ivf_topk(
-        batch, emb, num_centroids_mod=IVF_CENTROID_MOD, nprobe=IVF_NPROBE, **kw
-    ).select("probe_key", "gallery_key", F.lit(1).alias("_hit"))
-    exact = pairwise_similarity_topk(batch, emb, **kw).select(
-        "probe_key", "gallery_key"
-    )
-    return (
-        exact.join(approx, on=["probe_key", "gallery_key"], how="left")
-        .groupBy("probe_key")
-        .agg(F.count("_hit").alias("n_hits"))
-        .select(
-            "probe_key",
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            pround(F.col("n_hits").cast("double") / IVF_K, 4).alias("recall"),
-        )
-    )
+    return s25_step(emb.filter(F.col("vec_id") % IVF_PROBE_MOD == 0).limit(4), emb)
 
 
 def _s27_stream_plan(spark):
@@ -696,92 +549,49 @@ def _s27_stream_plan(spark):
     return s27_build_stream(spark, _scratch_dir("plan_s27_"))
 
 
+def _docs(spark, *cols):
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet").select(*cols)
+
+
+# The per-batch fold plans below run each read-modify-write entry's own
+# fold step on a literal micro-batch over a literal stored table: zero
+# jobs at capture time.
+
+
 def _s29_fold_plan(spark):
     from las_vpe_platform_spark.queries_data import js_source_tf
+    from las_vpe_platform_spark.queries_streaming import s29_step
 
-    stored = js_source_tf(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select("doc_id", "source", "text")
-        .limit(64)
-    )
-    batch = js_source_tf(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select("doc_id", "source", "text")
-        .limit(32)
-    )
-    from pyspark.sql import functions as F
-
-    return (
-        stored.unionByName(batch)
-        .groupBy("source", "term")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    cols = ("doc_id", "source", "text")
+    stored = js_source_tf(_docs(spark, *cols).limit(64))
+    return s29_step(stored, _docs(spark, *cols).limit(32))
 
 
 def _s30_gate_plan(spark):
     from pyspark.sql import functions as F
 
-    from las_vpe_platform_spark.operators.dedup import eval_overlap_flags
-    from las_vpe_platform_spark.queries_data import DECONTAM_N
+    from las_vpe_platform_spark.queries_streaming import s30_step
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    # literal micro-batch (32 rows) vs the static eval split — the exact
-    # foreachBatch body of s30_stream_contamination_gate, zero jobs
+    docs = _docs(spark, "doc_id", "text")
+    # literal micro-batch (32 rows) vs the static eval split
     batch = docs.filter(F.col("doc_id") % 10 != 0).limit(32)
-    ev = docs.filter(F.col("doc_id") % 10 == 0)
-    return eval_overlap_flags(batch, ev, id_col="doc_id", text_col="text", n=DECONTAM_N)
+    return s30_step(batch, docs.filter(F.col("doc_id") % 10 == 0))
 
 
 def _s31_fold_plan(spark):
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import s31_step
 
-    from las_vpe_platform_spark.operators.dedup import exploded_shingles
-    from las_vpe_platform_spark.queries_data import DECONTAM_N, NOVELTY_SLICES
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    # literal micro-batch vs a literal stored index — the exact
-    # foreachBatch body of s31_stream_novelty_monitor, zero jobs
-    fresh = (
-        exploded_shingles(docs.limit(32), "doc_id", "text", DECONTAM_N)
-        .selectExpr(
-            f"least({NOVELTY_SLICES - 1}, (doc_id_ * {NOVELTY_SLICES}) div 1000)"
-            " AS slice",
-            "shingle",
-        )
-        .groupBy("slice", "shingle")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
     stored = spark.createDataFrame(
-        [(0, "a b c", 3)], "slice int, shingle string, cnt long"
+        [(0, "a b c", 3)], "slice long, shingle string, cnt long"
     )
-    return (
-        stored.unionByName(fresh.selectExpr("cast(slice as int) slice", "shingle", "cast(cnt as long) cnt"))
-        .groupBy("slice", "shingle")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return s31_step(stored, _docs(spark, "doc_id", "text").limit(32), 999)
 
 
 def _s32_fold_plan(spark):
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import s32_step
 
-    from las_vpe_platform_spark.queries_data import quality_slice_bucket
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    # literal micro-batch vs a literal stored count table — the exact
-    # foreachBatch body of s32_stream_quality_psi, zero jobs
-    fresh = (
-        quality_slice_bucket(docs.limit(32), "cast(1000 as bigint)")
-        .groupBy("slice", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
     stored = spark.createDataFrame([(0, 0, 3)], "slice long, bucket long, c long")
-    return (
-        stored.unionByName(fresh)
-        .groupBy("slice", "bucket")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
+    return s32_step(stored, _docs(spark, "doc_id", "text").limit(32), 1000)
 
 
 def _s33_probe_plan(spark):
@@ -789,70 +599,32 @@ def _s33_probe_plan(spark):
 
     from las_vpe_platform_spark.fixtures import FIXTURES_DIR
     from las_vpe_platform_spark.operators.multimodal import patch_ahash
-    from las_vpe_platform_spark.queries_domain import M17_HAMMING_T
+    from las_vpe_platform_spark.queries_streaming import s33_step
 
     tr = spark.read.parquet(str(FIXTURES_DIR / "tracklets.parquet"))
-    # literal micro-batch vs the stored index — the exact foreachBatch
-    # body of s33_stream_patch_ingest_gate, zero jobs
+    # literal micro-batch vs the stored index, unstaged
     stored_hashed = patch_ahash(tr.filter(F.col("serial_number") % 3 == 0))
     stored_posts = stored_hashed.select(
         F.col("id").alias("id_stored"),
         F.posexplode("band_hash").alias("band_idx", "band_val"),
     )
-    hin = patch_ahash(tr.limit(32))
-    pin = hin.select("id", F.posexplode("band_hash").alias("band_idx", "band_val"))
-    cands = (
-        pin.join(stored_posts, ["band_idx", "band_val"])
-        .filter(F.col("id") != F.col("id_stored"))
-        .select(F.col("id").alias("id_in"), "id_stored")
-        .distinct()
-    )
-    return (
-        cands.join(hin.selectExpr("id AS id_in", "band_hash AS _ba"), "id_in")
-        .join(stored_hashed.selectExpr("id AS id_stored", "band_hash AS _bb"), "id_stored")
-        .select(
-            "id_in",
-            "id_stored",
-            F.expr(
-                "aggregate(zip_with(_ba, _bb, (x, y) -> bit_count(x ^ y)), 0,"
-                " (a, v) -> a + cast(v AS INT))"
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= M17_HAMMING_T)
-    )
+    return s33_step(tr.limit(32), stored_hashed, stored_posts)
 
 
 def _s34_fold_plan(spark):
-    from pyspark.sql import functions as F
-
-    from las_vpe_platform_spark.queries_data import transition_pairs
+    from las_vpe_platform_spark.queries_streaming import s34_step
 
     ev = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .select("user_id", "ts", "event_id", "event_type")
         .limit(64)
     )
-    # literal micro-batch vs a literal stored count table — the exact
-    # foreachBatch body of s34_stream_transition_monitor, zero jobs
-    fresh = (
-        transition_pairs(ev)
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
-    )
     stored = spark.createDataFrame([("x", "y", 3)], "a string, b string, n_ab long")
-    return (
-        stored.unionByName(fresh)
-        .groupBy("a", "b")
-        .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
-    )
+    return s34_step(stored, ev)
 
 
 def _scd2_asof_stream_plan(spark):
-    from las_vpe_platform_spark.queries_streaming import (
-        RAW_EVENTS_SCHEMA,
-        _scratch_dir,
-    )
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import _scratch_dir, s18_build_stream
 
     # literal dimension: identical join shape to the catalog entry
     # (which stages q122's scd2_history output), zero jobs at capture
@@ -860,32 +632,15 @@ def _scd2_asof_stream_plan(spark):
         [("u1", 1, 0, 1000), ("u1", 2, 1000, None)],
         "d_user string, tier int, valid_from_us long, valid_to_us long",
     )
-    src = _scratch_dir("plan_s18_")
-    clicks = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .filter(F.col("event_type") == "click")
-        .select("event_id", "user_id", F.col("ts_micros").alias("click_us"))
-    )
-    return clicks.join(
-        F.broadcast(dim),
-        (F.col("user_id") == F.col("d_user"))
-        & (F.col("click_us") >= F.col("valid_from_us"))
-        & (
-            F.col("valid_to_us").isNull()
-            | (F.col("click_us") < F.col("valid_to_us"))
-        ),
-        "left",
-    ).select("event_id", "user_id", "click_us", "tier")
+    return s18_build_stream(spark, _scratch_dir("plan_s18_"), dim)
 
 
 def _lsh_gate_batch_plan(spark):
     from las_vpe_platform_spark.operators.dedup import banded_signatures
-    from pyspark.sql import functions as F
+    from las_vpe_platform_spark.queries_streaming import S19_BANDING, s19_step
 
-    # literal frames: same banding + asymmetric index-probe shape as
-    # s19's foreachBatch body, zero jobs at capture time
+    # literal frames: the stored band index over two literal stored
+    # docs, probed by a literal batch — zero jobs at capture time
     batch = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "beta gamma delta")],
         "doc_id long, text string",
@@ -894,20 +649,10 @@ def _lsh_gate_batch_plan(spark):
         [(3, "alpha beta gamma"), (6, "epsilon zeta eta")],
         "doc_id long, text string",
     )
-    kw = dict(id_col="doc_id", text_col="text", shingle_k=2,
-              num_hashes=16, bands=4)
-    stored_banded = banded_signatures(stored, **kw).selectExpr(
+    stored_banded = banded_signatures(stored, **S19_BANDING).selectExpr(
         "doc_id_ AS id_stored", "band"
     )
-    incoming = banded_signatures(batch, **kw).selectExpr(
-        "doc_id_ AS id_in", "band"
-    )
-    return (
-        incoming.join(stored_banded, on="band")
-        .filter(F.col("id_in") != F.col("id_stored"))
-        .select("id_in", "id_stored")
-        .distinct()
-    )
+    return s19_step(batch, stored_banded)
 
 
 # Markdown appended verbatim AFTER the named query's plan block on

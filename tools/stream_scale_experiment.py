@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from las_vpe_platform_spark.queries_streaming import RAW_EVENTS_SCHEMA
 from las_vpe_platform_spark.session import get_spark
+from las_vpe_platform_spark.streaming.engine import file_stream
 
 INTERVAL_MIN = 10  # join window: small vs the generated span, so state evicts
 TS0 = 1_704_067_200_000_000  # 2024-01-01 UTC, micros
@@ -47,7 +48,7 @@ ROWS_PER_SLICE = 25_000  # fixed trigger size: the T5 backpressure knob
 
 def land_events(spark, n_rows: int, root: str, slices: int = 4) -> str:
     """Deterministic synthetic events, fixed 25 ms spacing, landed as
-    time-ordered slices (the _sliced_parquet_stream contract)."""
+    time-ordered slices (the queries_streaming._land_slices contract)."""
     df = (
         spark.range(n_rows)
         .select(
@@ -116,12 +117,8 @@ def run_stream(out_df, name: str) -> dict:
 
 
 def event_stream(spark, src: str):
-    return (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(f"{src}/*")
-        .withColumn("ts", F.timestamp_micros("ts_micros"))
+    return file_stream(spark, f"{src}/*", RAW_EVENTS_SCHEMA).withColumn(
+        "ts", F.timestamp_micros("ts_micros")
     )
 
 
@@ -197,12 +194,7 @@ def main() -> None:
                 T.StructField("text", T.StringType()),
             ]
         )
-        doc_stream = (
-            spark.readStream.schema(doc_schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(f"{doc_src}/*")
-        )
+        doc_stream = file_stream(spark, f"{doc_src}/*", doc_schema)
         shapes["s23_token_pack"] = run_stream(
             token_pack_stream(doc_stream, budget=2048), f"x23_{uuid.uuid4().hex[:6]}"
         )
