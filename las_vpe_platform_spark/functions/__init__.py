@@ -6,14 +6,11 @@ in any hot path.
 """
 
 from las_vpe_platform_spark.functions.scalar import (  # noqa: F401
-    frame_index_to_ts,
-    time_bucket,
     tracklet_key,
     video_id_from_url,
     video_start_ts,
 )
 from las_vpe_platform_spark.functions.text import (  # noqa: F401
-    char_ngrams,
     content_fingerprint,
     lang_id,
     punct_ratio,

@@ -1,11 +1,10 @@
-"""Scalar functions: time / key / name parsing (SURVEY §2.8 F5-F8, F11).
+"""Scalar functions: time / key / name parsing (SURVEY §2.8 F7, F8).
+
+F5 frame->time arithmetic and F6 time bucketing need no helper: the
+entries inline one interval add (d08, q15) and ``date_trunc`` (q10,
+d04).
 
 Reference parity:
-- F5 frame->time arithmetic: ``Neo4jConnector.calTrackletStartTime``
-  (vpe/data/Neo4jConnector.java:51-99) does manual HHMMSS carry math on
-  a name-encoded start time; here it is one interval expression.
-- F6 time bucketing: the Neo4j time tree
-  (vpe/data/Neo4jConnector.java:152-169) collapses into ``date_trunc``.
 - F7 video-name parsing: PedestrianTrackingApp.java:172-173,
   MessageHandlingApp.java:258-260.
 - F8 key synthesis: Tracklet.java:136-138.
@@ -15,11 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Effective frame rate of the reference corpus: 25/2 = 12.5 fps,
-# hardcoded at vpe/data/Neo4jConnector.java:53-54.
-DEFAULT_FPS_NUM = 25
-DEFAULT_FPS_DEN = 2
 
 
 def tracklet_key(video_id: Column | str, serial_number: Column | str) -> Column:
@@ -50,32 +44,6 @@ def video_start_ts(video_id: Column | str) -> Column:
     c = F.col(video_id) if isinstance(video_id, str) else video_id
     stamp = F.regexp_extract(c, r"_(\d{14})", 1)
     return F.to_timestamp(stamp, "yyyyMMddHHmmss")
-
-
-def frame_index_to_ts(
-    start_ts: Column | str,
-    frame_index: Column | str,
-    fps_num: int = DEFAULT_FPS_NUM,
-    fps_den: int = DEFAULT_FPS_DEN,
-) -> Column:
-    """start_ts + frame_index * fps_den / fps_num seconds (F5).
-
-    Replaces the manual second/minute/hour carry arithmetic of
-    Neo4jConnector.java:57-99 with one interval add.
-    """
-    ts = F.col(start_ts) if isinstance(start_ts, str) else start_ts
-    idx = F.col(frame_index) if isinstance(frame_index, str) else frame_index
-    seconds = idx.cast("double") * F.lit(fps_den / fps_num)
-    return ts + F.make_interval(secs=seconds)
-
-
-def time_bucket(ts: Column | str, unit: str = "minute") -> Column:
-    """Time-tree bucket (F6): Root->Year->...->Min becomes date_trunc.
-
-    (Neo4jConnector.java:152-160 slices string prefixes per level.)
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc(unit, c)
 
 
 def ntz_epoch_micros(ts: Column | str) -> Column:

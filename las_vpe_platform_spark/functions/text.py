@@ -91,16 +91,6 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     )
 
 
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams (array<string>) of the lowercased text."""
-    c = F.lower(_col(text))
-    length = F.length(c)
-    idx = F.when(length >= n, F.sequence(F.lit(1), length - (n - 1))).otherwise(
-        F.array_repeat(F.lit(1), 0)
-    )
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, n)))
-
-
 def content_fingerprint(text: Column | str) -> Column:
     """Normalized-content fingerprint: md5 of lowercased,
     whitespace-collapsed text. Exact-dedup key that survives

@@ -30,7 +30,6 @@ from las_vpe_platform_spark.operators.staging import (  # noqa: F401
 from las_vpe_platform_spark.operators.joins import (  # noqa: F401
     full_outer_assemble,
     pairwise_similarity_topk,
-    point_lookup,
 )
 from las_vpe_platform_spark.operators.routing import (  # noqa: F401
     demux,

@@ -51,15 +51,6 @@ def full_outer_assemble(
     return left.join(right, on=on, how=how)
 
 
-def point_lookup(df: DataFrame, key_col: str, key_value) -> DataFrame:
-    """Point query by key (J8 / S9 Neo4j MATCH-by-id analog).
-
-    A filter, not a join: partition pruning + parquet min/max row-group
-    skipping make this the fast path at scale.
-    """
-    return df.filter(F.col(key_col) == F.lit(key_value))
-
-
 def pairwise_similarity_topk(
     probes: DataFrame,
     gallery: DataFrame,

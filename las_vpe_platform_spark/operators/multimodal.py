@@ -42,23 +42,6 @@ def patch_metadata(df: DataFrame, patches_col: str = "location_sequence") -> Dat
     )
 
 
-def _decode_patch(data: bytes, width: int, height: int) -> np.ndarray:
-    """Decode a raw BGR patch into an array.
-
-    Real images would go through cv2.imdecode here; the fixture patches
-    are raw row-major BGR bytes (exactly the reference's CV_8UC3
-    layout, Tracklet.java:216-225), so reshaping IS the decode.
-    """
-    try:  # real codec path, if a codec library ever lands in the image
-        import cv2  # noqa: F401
-
-        # cv2.imdecode would handle JPEG/PNG payloads; raw BGR needs none
-    except ImportError:
-        pass
-    arr = np.frombuffer(data, dtype=np.uint8)
-    return arr.reshape(height, width, 3)
-
-
 def extract_patch_features(
     df: DataFrame,
     key_col: str = "tracklet_key",

@@ -264,22 +264,16 @@ def _events_stream(
     ).withColumn("ts", F.timestamp_micros("ts_micros"))
 
 
-def _land_slices(
-    spark: SparkSession,
-    raw: DataFrame,
-    prefix: str,
-    cache_key: tuple,
-    n_slices: int = 2,
-) -> str:
-    """Land ``raw`` (events with ``ts_micros``) once per process as
+def _land_slices(spark: SparkSession, sf_dir: str, n_slices: int = 2) -> str:
+    """Land the events table (with ``ts_micros``) once per process as
     ``n_slices`` time-ordered parquet slices and return their glob —
     opened one file per trigger, micro-batches then arrive in
     non-decreasing event-time ranges, the arrival order the stateful
     operators contract for (sequential writes -> increasing mtimes ->
-    batch order). ``raw`` must be a pure function of ``cache_key``
-    (e.g. ("events", sf_dir)), which names the landing."""
+    batch order)."""
 
     def write(src: str) -> None:
+        raw = _events_micros(spark, sf_dir)
         lo, hi = raw.agg(F.min("ts_micros"), F.max("ts_micros")).first()
         if lo is None or hi is None:  # min/max of zero rows is NULL
             raise ValueError(
@@ -293,14 +287,13 @@ def _land_slices(
                 & (F.col("ts_micros") < lo + (i + 1) * step)
             ).coalesce(1).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
 
-    return f"{_land(('sliced', n_slices) + cache_key, prefix, write)}/*"
+    src = _land(("sliced", n_slices, "events", sf_dir), "events_sliced_", write)
+    return f"{src}/*"
 
 
 def _sliced_parquet_stream(
     spark: SparkSession,
-    raw: DataFrame,
-    prefix: str,
-    cache_key: tuple,
+    sf_dir: str,
     n_slices: int = 2,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
@@ -310,9 +303,7 @@ def _sliced_parquet_stream(
     batch several time-ordered slices per trigger — the same
     throughput knob a cluster turns via maxOffsetsPerTrigger."""
     return _events_stream(
-        spark,
-        _land_slices(spark, raw, prefix, cache_key, n_slices),
-        max_files_per_trigger,
+        spark, _land_slices(spark, sf_dir, n_slices), max_files_per_trigger
     )
 
 
@@ -373,9 +364,9 @@ def s03_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     data trigger — legal because the operator sorts each batch per key
     and a session closes when the next event past the gap arrives
     regardless of which batch carries it, so the emitted set is a pure
-    function of slice order, not trigger grouping (1-vs-2-files
-    property test in test_round12_ops.py; cross-batch state carry
-    stays covered by tests/test_streaming.py).
+    function of slice order, not trigger grouping (split invariance
+    of the step is tested in tests/test_stateful.py, as is the
+    cross-batch state carry).
 
     A session closes when its user's next event arrives past the gap;
     each user's LAST session never closes (no later event exists), so
@@ -384,11 +375,8 @@ def s03_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from las_vpe_platform_spark.streaming.stateful import sessionize_stream
 
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), max_files_per_trigger=2,
-    )
-    sessions = sessionize_stream(stream, "user_id", "ts", gap_seconds=1800)
+    stream = _sliced_parquet_stream(spark, sf_dir, max_files_per_trigger=2)
+    sessions = sessionize_stream(stream)
     closed = _drain(sessions, "s03", "append")
     return closed.select(
         "user_id",
@@ -766,11 +754,8 @@ S09_SQL = _s09_sql()
 def s10_stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.streaming.stateful import locf_stream
 
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), max_files_per_trigger=2,
-    )
-    out = _drain(locf_stream(stream, fill_type="click"), "s10", "append")
+    stream = _sliced_parquet_stream(spark, sf_dir, max_files_per_trigger=2)
+    out = _drain(locf_stream(stream), "s10", "append")
     return out.select(
         "event_id",
         "user_id",
@@ -847,10 +832,7 @@ def s12_stream_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two formulations must agree exactly)."""
     from las_vpe_platform_spark.streaming.stateful import trigram_stream
 
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), max_files_per_trigger=2,
-    )
+    stream = _sliced_parquet_stream(spark, sf_dir, max_files_per_trigger=2)
     sink = _drain(trigram_stream(stream), "s12", "append")
     return (
         sink.groupBy("e1", "e2", "e3")
@@ -1104,10 +1086,7 @@ GROUP BY s.event_type, c.n
 def s15_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from las_vpe_platform_spark.streaming.stateful import anomaly_stream
 
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), max_files_per_trigger=2,
-    )
+    stream = _sliced_parquet_stream(spark, sf_dir, max_files_per_trigger=2)
     out = _drain(anomaly_stream(stream), "s15", "append")
     return out.select(
         "event_id", "event_type", "value", "n_prev", "deviation", "sd_prev"
@@ -1166,10 +1145,7 @@ def native_sessions(stream: DataFrame) -> DataFrame:
 
 
 def s16_stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir),
-    )
+    stream = _sliced_parquet_stream(spark, sf_dir)
     out = _drain(native_sessions(stream), "s16", "append")
     return out.select(
         "user_id",
@@ -1253,9 +1229,7 @@ def s17_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path and stop driving the mid-stream eviction semantics the
     oracle pins.
     """
-    src = _land_slices(
-        spark, _events_micros(spark, sf_dir), "events_sliced_", ("events", sf_dir)
-    )
+    src = _land_slices(spark, sf_dir)
     return _drain(s17_build_stream(spark, src), "s17", "append")
 
 
@@ -1528,9 +1502,7 @@ def s20_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantics under test and need >= 3 watermark advances; a
     single data trigger would demote the entry to final-flush only.
     """
-    src = _land_slices(
-        spark, _events_micros(spark, sf_dir), "events_sliced_", ("events", sf_dir)
-    )
+    src = _land_slices(spark, sf_dir)
     return _drain(s20_build_stream(spark, src), "s20", "append")
 
 
@@ -1623,35 +1595,25 @@ FROM events GROUP BY user_id
 
 def s22_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-key ingestion quota (stateful.rate_limit_stream):
-    at most RATE_LIMIT_N events admitted per (user, event-time hour),
-    in (ts, event_id) order — admission control in front of expensive
-    downstream stages, keyed state of exactly TWO integers per user.
-    The batch oracle is the per-(user, hour) rank: admission is a pure
-    function of event order, so the admitted set is batching-
-    independent (same arrival contract as s10/s15)."""
-    from las_vpe_platform_spark.streaming.stateful import (
-        RATE_LIMIT_N,
-        rate_limit_stream,
-    )
+    at most RATE_LIMIT_N events admitted per (event_type, event-time
+    hour), in (ts, event_id) order — admission control in front of
+    expensive downstream stages, keyed state of exactly TWO integers
+    per key. The batch oracle is the per-(key, hour) rank: admission
+    is a pure function of event order, so the admitted set is
+    batching-independent (same arrival contract as s10/s15)."""
+    from las_vpe_platform_spark.streaming.stateful import rate_limit_stream
 
     # both time-ordered slices in ONE data trigger (VERDICT r11 #3,
     # the s24/s26 consolidation): legal because the gate UDF sorts
     # each batch's rows (ts, event_id) per key, so admission — a pure
     # function of that order — is identical under any trigger
-    # grouping of time-ordered slices (invariance property-tested in
-    # test_round12_ops.py); the multi-trigger state-carry path stays
-    # covered by tests/test_streaming.py
-    stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), max_files_per_trigger=2,
-    )
+    # grouping of time-ordered slices (invariance and the
+    # multi-trigger state-carry path are tested in tests/test_stateful.py)
+    stream = _sliced_parquet_stream(spark, sf_dir, max_files_per_trigger=2)
     # key by event_type (a hot key by construction): per-user traffic
     # on this dataset never reaches the quota, which would make the
     # gate a no-op; per-type it throttles every hour
-    admitted = rate_limit_stream(
-        stream, key_col="event_type", limit=RATE_LIMIT_N
-    )
-    out = _drain(admitted, "s22", "append")
+    out = _drain(rate_limit_stream(stream), "s22", "append")
     return out.select("event_id", "event_type", "hour_bucket", "slot")
 
 
@@ -1738,7 +1700,7 @@ def s23_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key, and slices land in doc_id-range order, so any trigger
     # grouping that preserves slice order yields the identical running
     # totals (the oracle is the batch window-cumsum either way;
-    # invariance property-tested in test_round12_ops.py).
+    # invariance tested in tests/test_stateful.py).
     stream = file_stream(spark, f"{src}/*", schema, max_files_per_trigger=4)
     out = _drain(token_pack_stream(stream, budget=S23_BUDGET), "s23", "append")
     return out.select("doc_id", "source", "n_toks", "bin_id")
@@ -2142,8 +2104,7 @@ def s26_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stored-table RMW path; halves the per-trigger commit + parquet
     # round-trip overhead that dominates at harness batch sizes
     stream = _sliced_parquet_stream(
-        spark, _events_micros(spark, sf_dir), "events_sliced_",
-        cache_key=("events", sf_dir), n_slices=4, max_files_per_trigger=2,
+        spark, sf_dir, n_slices=4, max_files_per_trigger=2
     )
 
     def merge(stored: DataFrame | None, batch_df: DataFrame) -> DataFrame:

@@ -1,4 +1,4 @@
-"""SparkSession factory and table loading.
+"""SparkSession factory and the driver's table names.
 
 The reference boots one long-running Spark app per pipeline stage
 (``SparkStreamingApp.java:217-285`` in /root/reference); here a single
@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 TABLE_NAMES = (
     "region",
@@ -29,8 +29,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # BLAS/OMP thread pinning itself lives in the package __init__ (it
 # must precede numpy's first import under EVERY import order, not
@@ -300,28 +298,3 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     sc.addPyFile(str(zpath))
     _PYFILES_SENT.add(key)
 
-
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str = DEFAULT_SF_DIR,
-    names: tuple[str, ...] = TABLE_NAMES,
-    register_views: bool = True,
-) -> dict[str, DataFrame]:
-    """Load the driver's parquet tables; optionally register temp views.
-
-    Reads are lazy scans — column pruning and predicate pushdown reach
-    the parquet reader via Catalyst, so loading "all tables" costs
-    nothing until an action touches them.
-    """
-    from las_vpe_platform_spark.sources.tables import load_table
-
-    tables: dict[str, DataFrame] = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        tables[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    return tables

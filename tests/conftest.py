@@ -4,6 +4,8 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
@@ -36,6 +38,33 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+# the events table with ``ts`` as an absolute (LTZ) timestamp, the
+# shape watermarks and the stateful stream operators take
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+@pytest.fixture(scope="module")
+def events_dir(spark, sf_dir, tmp_path_factory):
+    """Re-land the events table (EVENTS_SCHEMA) as a multi-file parquet
+    directory so a file stream over it sees several micro-batches."""
+    from las_vpe_platform_spark.sources.tables import load_table
+
+    out = str(tmp_path_factory.mktemp("events_stream"))
+    (load_table(spark, sf_dir, "events")
+     .withColumn("ts", F.col("ts").cast("timestamp"))
+     .repartition(4).write.mode("overwrite").parquet(out))
+    return out
 
 
 def outside_cached_plans(plan: str) -> str:

@@ -1,124 +1,17 @@
-"""Round-12 tests: trigger-consolidation invariance for the streaming
-slow tail (VERDICT r11 #3), the chunked ranking kernel's exact
-equivalence (ADVICE r11 memory fix). The bench's own tests are in
-test_bench.py."""
+"""Round-12 tests: the chunked ranking kernel's exact equivalence
+(ADVICE r11 memory fix), scratch-dir selection and the signature-path
+shingles. The stateful operators' trigger invariance is in
+test_stateful.py; the bench's own tests are in test_bench.py."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _collect_sorted(df):
     cols = sorted(df.columns)
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-
-# --- trigger-consolidation invariance (s22 / s23) -----------------------------
-# The consolidation is legal ONLY because each stateful UDF sorts its
-# batch rows per key, making the output a pure function of the slice
-# ORDER, not the trigger grouping. These tests run the same landed
-# slices at 1 file/trigger vs all-in-one and require identical output
-# — the s26 split-invariance pattern applied to the entries VERDICT
-# r11 #3 consolidates.
-
-
-def _landed_event_slices(spark, tmp_path, n_slices=4):
-    rows = []
-    # three hours of events, several per (type, hour), ids interleaved
-    for i in range(120):
-        rows.append(
-            (
-                i,
-                f"t{i % 3}",
-                (i * 97) % 3 * 3_600_000_000 + (i % 40) * 60_000_000,
-            )
-        )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_micros", T.LongType()),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema).orderBy("ts_micros", "event_id")
-    src = str(tmp_path / "slices")
-    step = 120 // n_slices
-    parts = df.collect()
-    parts.sort(key=lambda r: (r["ts_micros"], r["event_id"]))
-    for i in range(n_slices):
-        spark.createDataFrame(parts[i * step : (i + 1) * step], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
-    return src, schema
-
-
-def _run_rate_limit(spark, src, schema, mft):
-    import uuid
-
-    from las_vpe_platform_spark.streaming.engine import (
-        file_stream,
-        run_to_completion,
-    )
-    from las_vpe_platform_spark.streaming.stateful import rate_limit_stream
-
-    stream = file_stream(spark, f"{src}/*", schema, max_files_per_trigger=mft)
-    stream = stream.withColumn("ts", F.timestamp_micros("ts_micros"))
-    admitted = rate_limit_stream(stream, key_col="event_type", limit=5)
-    return run_to_completion(
-        admitted, f"r12_s22_{mft}_{uuid.uuid4().hex[:6]}", output_mode="append"
-    ).select("event_id", "event_type", "hour_bucket", "slot")
-
-
-def test_s22_rate_limit_trigger_invariance(spark, tmp_path):
-    src, schema = _landed_event_slices(spark, tmp_path)
-    one = _collect_sorted(_run_rate_limit(spark, src, schema, 1))
-    allinone = _collect_sorted(_run_rate_limit(spark, src, schema, 4))
-    assert one == allinone
-    assert len(one) > 0
-
-
-def _run_pack(spark, src, schema, mft):
-    import uuid
-
-    from las_vpe_platform_spark.streaming.engine import (
-        file_stream,
-        run_to_completion,
-    )
-    from las_vpe_platform_spark.streaming.stateful import token_pack_stream
-
-    stream = file_stream(spark, f"{src}/*", schema, max_files_per_trigger=mft)
-    packed = token_pack_stream(stream, budget=16)
-    return run_to_completion(
-        packed, f"r12_s23_{mft}_{uuid.uuid4().hex[:6]}", output_mode="append"
-    ).select("doc_id", "source", "n_toks", "bin_id")
-
-
-def test_s23_packing_trigger_invariance(spark, tmp_path):
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    rows = [
-        (i, f"s{i % 2}", "tok " * ((i * 13) % 9 + 1)) for i in range(80)
-    ]
-    src = str(tmp_path / "docs")
-    # doc_id-range slices written sequentially (the landing contract)
-    for i in range(4):
-        spark.createDataFrame(rows[i * 20 : (i + 1) * 20], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
-    one = _collect_sorted(_run_pack(spark, src, schema, 1))
-    two = _collect_sorted(_run_pack(spark, src, schema, 2))
-    allinone = _collect_sorted(_run_pack(spark, src, schema, 4))
-    assert one == two == allinone
-    assert len(one) == 80
 
 
 # --- chunked ranking kernel (ADVICE r11 memory fix) ---------------------------
@@ -242,114 +135,6 @@ def test_stream_scratch_base_env_and_fallbacks(monkeypatch):
     picked = QS._scratch_base()
     if picked is not None:  # roomy /dev/shm on this host
         assert picked == "/dev/shm"
-
-
-# --- r12 second wave: s03 / s10 / s12 / s15 single-data-trigger ---------------
-# Same legality argument and test pattern as s22/s23 above: each
-# operator sorts its batch per key, so closed sessions / LOCF fills /
-# trigrams / anomaly flags are pure functions of the slice order.
-# (s15's running float sums reassociate at batch boundaries by design
-# — its output columns are rounded to 1e-6 with decision margins ~1e-3,
-# the same contract that already absorbs engine drift; on the test
-# data the outputs must be exactly equal.)
-
-
-def _landed_user_event_slices(spark, tmp_path, n_slices=4):
-    rows = []
-    for i in range(160):
-        rows.append(
-            (
-                i,
-                i % 7,  # user_id
-                ["click", "view", "purchase"][i % 3],
-                (i * 37) % 4 * 3_600_000_000 + (i % 50) * 60_000_000,
-                # occasional large spikes so the anomaly operator (s15)
-                # has flags to emit; benign for the other operators
-                1000.0 + i if i % 37 == 0 else float((i * 13) % 29) / 3.0,
-            )
-        )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_micros", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    src = str(tmp_path / "uslices")
-    parts = spark.createDataFrame(rows, schema).collect()
-    parts.sort(key=lambda r: (r["ts_micros"], r["event_id"]))
-    step = len(parts) // n_slices
-    for i in range(n_slices):
-        spark.createDataFrame(parts[i * step : (i + 1) * step], schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/slice{i:02d}")
-    return src, schema
-
-
-def _user_stream(spark, src, schema, mft):
-    from las_vpe_platform_spark.streaming.engine import file_stream
-
-    return file_stream(
-        spark, f"{src}/*", schema, max_files_per_trigger=mft
-    ).withColumn("ts", F.timestamp_micros("ts_micros"))
-
-
-def _run_stateful(spark, src, schema, mft, build, name):
-    import uuid
-
-    from las_vpe_platform_spark.streaming.engine import run_to_completion
-
-    out = build(_user_stream(spark, src, schema, mft))
-    return run_to_completion(
-        out, f"r12_{name}_{mft}_{uuid.uuid4().hex[:6]}", output_mode="append"
-    )
-
-
-@pytest.mark.parametrize(
-    "name,builder,cols",
-    [
-        (
-            "s03",
-            lambda st: __import__(
-                "las_vpe_platform_spark.streaming.stateful", fromlist=["x"]
-            ).sessionize_stream(st, "user_id", "ts", gap_seconds=1800),
-            ["user_id", "session_start", "session_end", "n_events"],
-        ),
-        (
-            "s10",
-            lambda st: __import__(
-                "las_vpe_platform_spark.streaming.stateful", fromlist=["x"]
-            ).locf_stream(st, fill_type="click"),
-            ["event_id", "user_id", "event_type", "filled_click_value"],
-        ),
-        (
-            "s12",
-            lambda st: __import__(
-                "las_vpe_platform_spark.streaming.stateful", fromlist=["x"]
-            ).trigram_stream(st),
-            ["user_id", "e1", "e2", "e3"],
-        ),
-        (
-            "s15",
-            lambda st: __import__(
-                "las_vpe_platform_spark.streaming.stateful", fromlist=["x"]
-            ).anomaly_stream(st),
-            ["event_id", "event_type", "n_prev", "deviation", "sd_prev"],
-        ),
-    ],
-)
-def test_stateful_trigger_invariance_r12(spark, tmp_path, name, builder, cols):
-    src, schema = _landed_user_event_slices(spark, tmp_path)
-    one = _collect_sorted(
-        _run_stateful(spark, src, schema, 1, builder, name).select(*cols)
-    )
-    allinone = _collect_sorted(
-        _run_stateful(spark, src, schema, 4, builder, name).select(*cols)
-    )
-    assert one == allinone
-    assert len(one) > 0
 
 
 # --- r12 signature-path shingles (zip-stream, zero exchanges) -----------------

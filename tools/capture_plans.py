@@ -344,7 +344,7 @@ STREAMING_HEADLINERS = [
      "above the two watermark nodes",
      "_left_outer_join_stream_plan"),
     ("s10_stream_locf (unstarted streaming plan)",
-     "custom stateful LOCF via applyInPandasWithState: state is ONE (ts, value) pair per user (bounded, watermark-expired); the plan shows the state store operator directly above the file source — no pre-shuffle beyond the groupBy exchange",
+     "custom stateful LOCF via applyInPandasWithState: state is TWO scalars (has_value, last_value) per user, bounded by key cardinality; the plan shows the state store operator directly above the file source — no pre-shuffle beyond the groupBy exchange",
      "_locf_stream_plan"),
     ("s12_stream_trigrams (unstarted streaming plan)",
      "stateful sequence mining: state is the last TWO event types per user (the minimum a length-3 pattern needs); one groupBy exchange into the state operator, batch-finished top-k outside the stream",
@@ -502,7 +502,7 @@ def _trigram_stream_plan(spark):
 def _locf_stream_plan(spark):
     from las_vpe_platform_spark.streaming.stateful import locf_stream
 
-    return locf_stream(_events_plan_source(spark, "s10"), fill_type="click")
+    return locf_stream(_events_plan_source(spark, "s10"))
 
 
 def _left_outer_join_stream_plan(spark):

@@ -12,7 +12,7 @@ state should stay ~flat while wall time scales ~linearly).
 Shapes measured (the VERDICT r7 #4 set):
   - s17-shape: stream-stream LEFT OUTER interval join (10 min window)
   - s20-shape: same join FULL OUTER
-  - s22-shape: per-key rate limiting (transformWithState, 2 ints/key)
+  - s22-shape: per-key rate limiting (applyInPandasWithState, 2 ints/key)
   - s23-shape: per-source token packing (1 BIGINT/source)
 
 Usage: python tools/stream_scale_experiment.py [small_rows] [mult]
@@ -173,15 +173,12 @@ def main() -> None:
         )
 
         from las_vpe_platform_spark.streaming.stateful import (
-            RATE_LIMIT_N,
             rate_limit_stream,
             token_pack_stream,
         )
 
         shapes["s22_rate_limit"] = run_stream(
-            rate_limit_stream(
-                event_stream(spark, ev_src), key_col="event_type", limit=RATE_LIMIT_N
-            ),
+            rate_limit_stream(event_stream(spark, ev_src)),
             f"x22_{uuid.uuid4().hex[:6]}",
         )
 

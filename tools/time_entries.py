@@ -17,6 +17,9 @@ runs' full records (see bench.py). Set SPARK_GRAFT_CPUS to pick the
 core count. Plan capture happens once per entry (the plan does not
 change between runs) into plans/<round>/<name>_<suffix>.txt when
 --plan-suffix is given.
+
+Each entry first runs once untimed and that record is dropped, so its
+one-off source landing and caches are warm in every reported run.
 """
 
 from __future__ import annotations
@@ -52,6 +55,7 @@ def main() -> None:
         plans_dir.mkdir(parents=True, exist_ok=True)
 
     for name in args.names:
+        bench.measure_entry(spark, name, sf_dir)  # warm-up: landings, caches
         runs = [bench.measure_entry(spark, name, sf_dir)[0] for _ in range(args.runs)]
         if args.plan_suffix:
             import io
